@@ -21,11 +21,10 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark", "scoped_conf", "ensure_min_parallelism"]
+__all__ = ["get_spark", "stop_spark", "ensure_min_parallelism"]
 
 
 def ensure_min_parallelism(df, min_partitions: int | None = None):
@@ -58,26 +57,6 @@ def ensure_min_parallelism(df, min_partitions: int | None = None):
     except AttributeError:
         pass
     return out
-
-
-@contextmanager
-def scoped_conf(spark: SparkSession, key: str, value: str):
-    """Set a runtime SQL conf for one block, restoring the previous value
-    (or unsetting) on exit — a write path that needs e.g. dynamic
-    partition-overwrite must not silently change overwrite semantics for
-    every later write on the shared session."""
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def _default_parallelism() -> int:

@@ -57,7 +57,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-__all__ = ["FlashFeedDataSource", "FLASHFEED_SCHEMA_DDL", "append_events"]
+__all__ = ["FlashFeedDataSource", "FLASHFEED_SCHEMA_DDL", "append_events", "feed_end_offset"]
 
 FLASHFEED_SCHEMA_DDL = (
     "event_id string, replay_seq bigint, topic_name string, "
@@ -72,6 +72,15 @@ def append_events(path: str, events: list[dict]) -> None:
     with open(path, "a", encoding="utf-8") as fh:
         for ev in events:
             fh.write(json.dumps(ev) + "\n")
+
+
+def feed_end_offset(path: str) -> int:
+    """The stream reader's ``seq`` offset at the end of the feed log
+    (its line count; 0 for a missing log)."""
+    if not os.path.exists(path):
+        return 0
+    with open(path, encoding="utf-8") as fh:
+        return sum(1 for _ in fh)
 
 
 def _read_lines(path: str, start: int, end: int | None) -> list[tuple]:

@@ -17,6 +17,7 @@
 
 from __future__ import annotations
 
+import json
 import logging
 import os
 import threading
@@ -39,6 +40,7 @@ from flash_cdc_spark.sources.changelog import (
     read_changelog_stream,
     resolve_replay,
 )
+from flash_cdc_spark.sources.flashfeed import feed_end_offset
 from flash_cdc_spark.streaming.webhook import (
     webhook_batch_writer,
     webhook_batch_writer_with_offsets,
@@ -257,22 +259,28 @@ class PipelineManager:
     def _run_supervised(self, sup: _Supervised, replay_args: ReplayArgs) -> None:
         delay = self.backoff_initial_s
         first = True
+        draining: ReplayStart | None = None  # start kept across drain restarts
         while not sup.stop_event.is_set():
             try:
-                replay = resolve_replay(
+                replay = draining or resolve_replay(
                     replay_args if first else ReplayArgs(mode="stored"),
                     sup.config.checkpoint_dir(),
                     current_max_seq=self._current_max_seq(sup.config),
                     now_ms=int(time.time() * 1000),
                 )
+                draining = None
                 if first:
                     apply_replay_start(replay, sup.config.checkpoint_dir())
                 first = False
                 sup.query = self._build_query(sup.config, replay)
                 sup.status = "running"
                 sup.query.awaitTermination()
-                # availableNow triggers finish cleanly → done
+                # availableNow triggers finish cleanly → done, unless a
+                # flashfeed run stopped short of the end of its feed
                 if self.trigger.get("availableNow"):
+                    if self._feed_has_backlog(sup):
+                        draining = replay  # resume from the stored cursor
+                        continue
                     sup.status = "stopped"
                     return
                 if sup.stop_event.is_set():
@@ -298,6 +306,21 @@ class PipelineManager:
                 sup.restarts += 1
                 sup.stop_event.wait(min(delay, self.backoff_cap_s))
                 delay *= 2
+
+    @staticmethod
+    def _feed_has_backlog(sup: _Supervised) -> bool:
+        """True iff a finished flashfeed run committed progress and the
+        feed holds lines past its committed offset. Under ``availableNow``
+        the Python simple stream reader prefetches one ``flow_batch_size``
+        chunk per ``latestOffset``, so the trigger's target is the end of
+        that chunk, not the end of the feed."""
+        if sup.config.source_format != "flashfeed":
+            return False
+        progress = sup.query.lastProgress
+        if not progress:
+            return False  # the run made no progress: nothing more to drain
+        end = json.loads(progress.json)["sources"][0]["endOffset"]
+        return int(end["seq"]) < feed_end_offset(sup.config.source_path)
 
     def _current_max_seq(self, config: PipelineConfig) -> int | None:
         try:

@@ -17,8 +17,6 @@ aggregation ever happens.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-from flash_cdc_spark.session import scoped_conf
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -73,16 +71,15 @@ def continuous_rollup(
     def _materialize(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):
             return
-        spark = batch_df.sparkSession
-        with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-            (
-                # partition by BOTH keys: an update-mode batch may revise
-                # only some event_types of a window; overwriting at window
-                # granularity would drop that window's untouched types
-                batch_df.write.partitionBy("bucket_start", "event_type")
-                .mode("overwrite")
-                .parquet(out_path)
-            )
+        (
+            # partition by BOTH keys: an update-mode batch may revise
+            # only some event_types of a window; overwriting at window
+            # granularity would drop that window's untouched types
+            batch_df.write.option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket_start", "event_type")
+            .mode("overwrite")
+            .parquet(out_path)
+        )
 
     return (
         agg.writeStream.foreachBatch(_materialize)

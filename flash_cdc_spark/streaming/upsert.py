@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from flash_cdc_spark.session import scoped_conf
 
 __all__ = ["streaming_latest_state", "streaming_scd2_history"]
 
@@ -260,10 +259,9 @@ def streaming_latest_state(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        with scoped_conf(
-            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
-            merged.write.mode("overwrite").partitionBy("state_bucket").parquet(state_path)
+        merged.write.option("partitionOverwriteMode", "dynamic").mode(
+            "overwrite"
+        ).partitionBy("state_bucket").parquet(state_path)
 
     return (
         events.writeStream.foreachBatch(merge)
@@ -328,12 +326,9 @@ def streaming_scd2_history(
             F.unix_millis(F.lead("ts").over(w)).alias("valid_to_ms"),
             F.lead("ts").over(w).isNull().cast("int").alias("is_current"),
         )
-        with scoped_conf(
-            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
-            history.write.mode("overwrite").partitionBy("state_bucket").parquet(
-                state_path
-            )
+        history.write.option("partitionOverwriteMode", "dynamic").mode(
+            "overwrite"
+        ).partitionBy("state_bucket").parquet(state_path)
 
     return (
         events.writeStream.foreachBatch(merge)

@@ -12,12 +12,16 @@ to commit; any raise → no offset commit → the whole batch replays on
 restart (at-least-once with replay-on-failure, duplicate-delivery window
 identical to the reference's).
 
-Scale design: posts run executor-side via ``foreachPartition`` — one
-connection context per partition, thousands of concurrent senders on a
-cluster — never a driver-side ``collect()``. Per-record ordering within a
-partition matches the reference's sequential per-event loop; global
-ordering (which the reference also does not guarantee across clients) is
-not promised.
+Scale design: posts run executor-side, one pooled connection per task —
+thousands of concurrent senders on a cluster — never a driver-side
+``collect()``. The plain writer posts from ``foreachPartition``; the
+offset-mirror and dead-letter writers post from an Arrow-batched
+``mapInPandas`` (the shared :func:`_post_batches` generator), whose output
+feeds the same job's write, so delivery, bookkeeping and the write are
+one Spark action per micro-batch. Per-record ordering within a partition
+matches the reference's sequential per-event loop; global ordering
+(which the reference also does not guarantee across clients) is not
+promised.
 """
 
 from __future__ import annotations
@@ -27,12 +31,10 @@ import random
 import time
 import urllib.error
 import urllib.request
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-
-from flash_cdc_spark.session import scoped_conf
 
 __all__ = [
     "RetryPolicy",
@@ -244,6 +246,34 @@ def _make_transport(transport_factory, policy: "RetryPolicy") -> Transport:
     return transport_factory()
 
 
+def _post_or_fail(transport: Transport, url: str, body: str, policy: RetryPolicy) -> None:
+    """K1 + K3 for one record: :func:`post_with_retry`, raising
+    :class:`WebhookDeliveryError` when the retries are exhausted so the
+    task, the job and the micro-batch fail and the batch replays."""
+    if not post_with_retry(transport, url, body, policy):
+        raise WebhookDeliveryError(
+            f"webhook delivery failed after {policy.max_attempts} attempts"
+        )
+
+
+def _post_batches(
+    batches: Iterator["pd.DataFrame"],
+    url: str,
+    transport_factory: Callable[[], Transport],
+    policy: RetryPolicy,
+    post: Callable[[Transport, str, str, RetryPolicy], object],
+    bodies: Callable[["pd.DataFrame"], Iterable[str]],
+) -> Iterator[tuple["pd.DataFrame", list]]:
+    """Executor side of the ``mapInPandas`` writers: one transport per
+    task; each Arrow batch's ``bodies`` are posted with ``post`` in
+    partition order, yielding ``(batch, [post result per body])``. A
+    ``post`` that raises fails the task before any later record of the
+    partition is posted."""
+    transport = _make_transport(transport_factory, policy)
+    for pdf in batches:
+        yield pdf, [post(transport, url, body, policy) for body in bodies(pdf)]
+
+
 def webhook_batch_writer_with_dlq(
     url: str,
     dlq_path: str,
@@ -270,18 +300,17 @@ def webhook_batch_writer_with_dlq(
         import pandas as pd
 
         def deliver(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            transport = _make_transport(transport_factory, policy)
-            for pdf in batches:
-                dead_body: list[str] = []
-                dead_status: list[int] = []
-                for body in pdf[payload_col]:
-                    status = post_classified(transport, url, body, policy)
-                    if not (200 <= status < 300):
-                        dead_body.append(body)
-                        dead_status.append(status)
-                yield pd.DataFrame(
-                    {payload_col: dead_body, "status": dead_status}
-                )
+            posted = _post_batches(
+                batches, url, transport_factory, policy, post_classified,
+                lambda pdf: pdf[payload_col],
+            )
+            for pdf, statuses in posted:
+                dead = [
+                    (body, status)
+                    for body, status in zip(pdf[payload_col], statuses)
+                    if not (200 <= status < 300)
+                ]
+                yield pd.DataFrame(dead, columns=[payload_col, "status"])
 
         dead = batch_df.select(payload_col).mapInPandas(
             deliver, schema=f"`{payload_col}` string, status int"
@@ -308,11 +337,7 @@ def webhook_batch_writer(
     def _deliver_partition(rows: Iterator) -> None:
         transport = _make_transport(transport_factory, policy)
         for row in rows:
-            body = row[payload_col]
-            if not post_with_retry(transport, url, body, policy):
-                raise WebhookDeliveryError(
-                    f"webhook delivery failed after {policy.max_attempts} attempts"
-                )
+            _post_or_fail(transport, url, row[payload_col], policy)
 
     def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select(payload_col).foreachPartition(_deliver_partition)
@@ -332,62 +357,65 @@ def webhook_batch_writer_with_offsets(
     seq_col: str = "replay_seq",
 ):
     """K2 variant: posts only rows flagged ``deliver`` and, once the
-    whole batch delivered, appends a *queryable offset mirror* row
+    whole batch delivered, writes a *queryable offset mirror* row
     ``(pipeline_id, topic, batch_id, last_replay_seq, n_events,
     n_delivered)`` to a parquet table — the reference's Postgres
     ``listener_offsets`` store (``sf_pubsub.py:104-176``) made
-    queryable. The mirror is written AFTER delivery succeeds, inside the
-    same foreachBatch, so it shares the conditional-commit contract
-    (failed delivery → no mirror row, no checkpoint commit → replay);
-    the authoritative cursor remains Spark's checkpoint (R6)."""
+    queryable. The authoritative cursor remains Spark's checkpoint (R6).
 
-    def _deliver_partition(rows: Iterator) -> None:
-        transport = _make_transport(transport_factory, policy)
-        for row in rows:
-            if not row[deliver_col]:
-                continue
-            if not post_with_retry(transport, url, row[payload_col], policy):
-                raise WebhookDeliveryError(
-                    f"webhook delivery failed after {policy.max_attempts} attempts"
-                )
+    One Spark action per micro-batch: a ``mapInPandas`` pass posts the
+    flagged rows in partition order and yields one ``(last_seq,
+    n_events, n_delivered)`` summary per Arrow batch; a global
+    aggregate folds the summaries into the mirror row (a batch with no
+    events yields none); the same job writes it. The aggregate is a
+    shuffle boundary, so the write stage starts only after EVERY
+    delivery task has succeeded: an exhausted retry fails its task and
+    the job before any mirror row exists, ``foreachBatch`` raises, and
+    the checkpoint does not commit → the batch replays (K3). The write
+    is a per-write dynamic partition overwrite of ``batch_id={id}``, so
+    a replayed batch replaces its own row and never touches earlier
+    batches' rows."""
+    from pyspark.sql import functions as F
 
     def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
+        import pandas as pd
 
-        batch_df.persist()
-        try:
-            batch_df.select(deliver_col, payload_col).foreachPartition(_deliver_partition)
-            stats = batch_df.agg(
-                F.max(seq_col).alias("last_seq"),
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col(deliver_col).cast("int")).alias("n_delivered"),
-            ).first()
-            if stats["n_events"]:
-                spark = batch_df.sparkSession
-                # idempotent on replay: each batch overwrites ITS OWN
-                # partition (dynamic partition overwrite), so a redelivered
-                # batch can't double-append its mirror row; scoped so the
-                # shared session's overwrite semantics aren't changed for
-                # unrelated writes
-                with scoped_conf(
-                    spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                ):
-                    spark.createDataFrame(
-                        [
-                            (
-                                pipeline_id,
-                                topic,
-                                batch_id,
-                                stats["last_seq"],
-                                stats["n_events"],
-                                stats["n_delivered"] or 0,
-                            )
-                        ],
-                        "pipeline_id int, topic string, batch_id long, "
-                        "last_replay_seq long, n_events long, n_delivered long",
-                    ).write.partitionBy("batch_id").mode("overwrite").parquet(offsets_path)
-        finally:
-            batch_df.unpersist()
+        def deliver(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+            posted = _post_batches(
+                batches, url, transport_factory, policy, _post_or_fail,
+                lambda pdf: pdf.loc[pdf[deliver_col].fillna(False).astype(bool), payload_col],
+            )
+            for pdf, delivered in posted:
+                if len(pdf):
+                    yield pd.DataFrame({
+                        "last_seq": [pdf[seq_col].max()],
+                        "n_events": [len(pdf)],
+                        "n_delivered": [len(delivered)],
+                    })
+
+        summaries = batch_df.select(deliver_col, payload_col, seq_col).mapInPandas(
+            deliver, schema="last_seq long, n_events long, n_delivered long"
+        )
+        (
+            summaries.agg(
+                F.max("last_seq").alias("last_replay_seq"),
+                F.sum("n_events").alias("n_events"),
+                F.sum("n_delivered").alias("n_delivered"),
+            )
+            .filter(F.col("n_events") > 0)
+            .select(
+                F.lit(pipeline_id).cast("int").alias("pipeline_id"),
+                F.lit(topic).alias("topic"),
+                F.lit(batch_id).cast("long").alias("batch_id"),
+                "last_replay_seq",
+                "n_events",
+                "n_delivered",
+            )
+            .write.option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .mode("overwrite")
+            .parquet(offsets_path)
+        )
 
     return _batch_fn
 

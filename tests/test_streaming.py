@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import http.server
 import json
+import os
 import threading
 import time
 
@@ -377,6 +378,7 @@ def test_pooled_transport_follows_redirects_with_repost():
         srv.server_close()
 
 
+@pytest.mark.smoke
 def test_offset_mirror_advances_even_when_all_dropped(spark, tmp_path, webhook_server):
     """K2: the queryable offset mirror records every batch's max cursor,
     including batches where nothing was delivered (since-drop / flag
@@ -401,6 +403,143 @@ def test_offset_mirror_advances_even_when_all_dropped(spark, tmp_path, webhook_s
     assert max(r["last_replay_seq"] for r in offs) == 3  # advanced past dropped
     assert sum(r["n_delivered"] for r in offs) == 1
     assert sum(r["n_events"] for r in offs) == 3
+
+
+MIRROR_INPUT = "deliver boolean, payload_json string, replay_seq long"
+
+
+def _mirror_rows(seqs, deliver=lambda seq: seq % 2 == 0):
+    """Sink-shaped rows (deliver flag, payload, cursor) for driving the
+    offset-mirror writer directly, without the changefeed stages."""
+    return [
+        (deliver(seq), json.dumps({"data": [{"Id": f"r{seq}"}]}), seq) for seq in seqs
+    ]
+
+
+def _mirror_writer(tmp_path, server, pid=40):
+    from flash_cdc_spark.streaming.webhook import webhook_batch_writer_with_offsets
+
+    offsets = str(tmp_path / "offsets")
+    url = f"http://127.0.0.1:{server.server_address[1]}/hook"
+    fn = webhook_batch_writer_with_offsets(
+        url, offsets, pid, "/data/OpportunityChangeEvent", policy=FAST_POLICY
+    )
+    return fn, offsets
+
+
+def _read_mirror(spark, offsets):
+    return [r.asDict() for r in spark.read.parquet(offsets).orderBy("batch_id").collect()]
+
+
+@pytest.mark.smoke
+def test_offset_mirror_retries_exhausted_then_replay(spark, tmp_path, webhook_server):
+    """K2/K3 under a failing endpoint: exhausted retries leave no mirror
+    partition for the batch and no checkpoint commit; once the endpoint
+    recovers, the replay delivers the batch again and the mirror holds
+    exactly one row per batch."""
+    from flash_cdc_spark.streaming import await_or_fail
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    for seqs in ((0, 1, 2), (3, 4, 5)):  # one file → one micro-batch each
+        spark.createDataFrame(_mirror_rows(seqs), MIRROR_INPUT).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    batch_fn, offsets = _mirror_writer(tmp_path, webhook_server)
+
+    def run():
+        q = (
+            spark.readStream.schema(MIRROR_INPUT).option("maxFilesPerTrigger", 1)
+            .parquet(src).writeStream.foreachBatch(batch_fn)
+            .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        )
+        await_or_fail(q)
+
+    webhook_server.fail_remaining = 10**6
+    with pytest.raises(Exception, match="WebhookDeliveryError"):
+        run()
+    assert len(webhook_server.requests) == FAST_POLICY.max_attempts  # first record only
+    assert not os.path.exists(os.path.join(offsets, "batch_id=0"))
+    commits = os.path.join(ckpt, "commits")
+    assert not (os.path.isdir(commits) and os.listdir(commits))
+
+    webhook_server.fail_remaining = 0
+    webhook_server.requests.clear()
+    run()
+    assert _delivered_ids(webhook_server) == ["r0", "r2", "r4"]
+    mirror = _read_mirror(spark, offsets)
+    assert [(r["batch_id"], r["last_replay_seq"], r["n_events"], r["n_delivered"])
+            for r in mirror] == [(0, 2, 3, 2), (1, 5, 3, 1)]
+    assert {(r["pipeline_id"], r["topic"]) for r in mirror} == {
+        (40, "/data/OpportunityChangeEvent")
+    }
+
+
+def test_offset_mirror_same_batch_twice_is_idempotent(spark, tmp_path, webhook_server):
+    """A replayed batch id overwrites its own mirror partition: one row,
+    with the earlier batches' rows untouched."""
+    batch_fn, offsets = _mirror_writer(tmp_path, webhook_server)
+    batch_fn(spark.createDataFrame(_mirror_rows([0, 1]), MIRROR_INPUT), 0)
+    replayed = spark.createDataFrame(_mirror_rows([2, 3, 4]), MIRROR_INPUT)
+    batch_fn(replayed, 1)
+    batch_fn(replayed, 1)
+    mirror = _read_mirror(spark, offsets)
+    assert [(r["batch_id"], r["last_replay_seq"], r["n_events"], r["n_delivered"])
+            for r in mirror] == [(0, 1, 2, 1), (1, 4, 3, 2)]
+    assert _delivered_ids(webhook_server) == ["r0", "r2", "r2", "r4", "r4"]
+
+
+def test_offset_mirror_folds_a_multi_partition_batch(spark, tmp_path, webhook_server):
+    """One mirror row for a batch spread over several partitions: the
+    counts are the sums over partitions and the cursor is their max.
+    An all-empty batch writes no row."""
+    batch_fn, offsets = _mirror_writer(tmp_path, webhook_server)
+    rows = _mirror_rows(range(30), deliver=lambda seq: seq % 3 == 0)
+    df = spark.createDataFrame(rows, MIRROR_INPUT).repartition(3)
+    assert df.rdd.getNumPartitions() == 3
+    batch_fn(df, 7)
+    batch_fn(spark.createDataFrame([], MIRROR_INPUT), 8)
+    mirror = _read_mirror(spark, offsets)
+    assert [(r["batch_id"], r["last_replay_seq"], r["n_events"], r["n_delivered"])
+            for r in mirror] == [(7, 29, 30, 10)]
+    assert _delivered_ids(webhook_server) == sorted(f"r{seq}" for seq in range(0, 30, 3))
+
+
+def test_sink_overwrite_is_dynamic_without_touching_session_conf(
+    spark, tmp_path, webhook_server, monkeypatch
+):
+    """The partition-overwrite sinks ask for dynamic overwrite per write,
+    never by flipping the shared session conf: concurrent pipelines
+    share the session, and one pipeline's reset could turn another's
+    write into a STATIC overwrite that deletes every other partition.
+    On a STATIC session the sink never sets the conf, and earlier
+    partitions survive."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    touched = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def recording_set(self, k, v):
+        touched.append(k)
+        real_set(self, k, v)
+
+    def recording_unset(self, k):
+        touched.append(k)
+        real_unset(self, k)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", recording_unset)
+    try:
+        batch_fn, offsets = _mirror_writer(tmp_path, webhook_server)
+        for batch_id in range(3):
+            batch_fn(spark.createDataFrame(_mirror_rows([batch_id]), MIRROR_INPUT), batch_id)
+        assert key not in touched
+        assert spark.conf.get(key) == "STATIC"
+        assert [r["batch_id"] for r in _read_mirror(spark, offsets)] == [0, 1, 2]
+    finally:
+        monkeypatch.undo()
+        spark.conf.unset(key)
 
 
 def test_watchdog_idle_detection():
@@ -512,28 +651,6 @@ def test_autostart_multiple_pipelines_isolated(spark, tmp_path, webhook_server):
     assert 33 not in statuses
 
 
-def test_scoped_conf_restores_previous_value(spark):
-    from flash_cdc_spark.session import scoped_conf
-
-    key = "spark.sql.sources.partitionOverwriteMode"
-    spark.conf.set(key, "static")
-    with scoped_conf(spark, key, "dynamic"):
-        assert spark.conf.get(key) == "dynamic"
-    assert spark.conf.get(key) == "static"
-
-
-def test_scoped_conf_unsets_when_previously_unset(spark):
-    from flash_cdc_spark.session import scoped_conf
-
-    key = "flash.cdc.test.scoped.key"
-    with scoped_conf(spark, key, "on"):
-        assert spark.conf.get(key) == "on"
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        spark.conf.get(key)
-
-
 def test_cursor_corruption_detection_is_narrow():
     """R7: only known corrupt-checkpoint signatures clear the cursor; a
     transient failure that merely *mentions* offsets must NOT (a wipe
@@ -594,6 +711,26 @@ def test_pipeline_from_flashfeed_source_end_to_end(spark, tmp_path, webhook_serv
     mgr.wait(31, timeout_s=120)
     assert _delivered_ids(webhook_server) == ["a1", "b1"]
     assert mgr.status(31)["status"] == "stopped"
+
+
+def test_available_now_drains_whole_flashfeed_backlog(spark, tmp_path, webhook_server):
+    """The default availableNow trigger drains a flashfeed backlog of
+    several ``flow_batch_size`` chunks to the end of the feed: every
+    record is delivered exactly once and the pipeline ends stopped."""
+    from flash_cdc_spark.sources.flashfeed import append_events
+
+    log = str(tmp_path / "feed.jsonl")
+    append_events(log, [_envelope_line(seq, [f"n{seq}"], flag="true") for seq in range(10)])
+    mgr = PipelineManager(spark, retry_policy=FAST_POLICY)
+    config = _mk_config(tmp_path, webhook_server, pid=34)
+    config.source_path = log
+    config.source_format = "flashfeed"
+    config.flow_batch_size = 4
+    mgr.start(config)
+    mgr.wait(34, timeout_s=180)
+    assert _delivered_ids(webhook_server) == sorted(f"n{seq}" for seq in range(10))
+    status = mgr.status(34)
+    assert status["status"] == "stopped" and status["batches_seen"] == 3
 
 
 def test_pipeline_from_flashfeed_latest_mode_skips_existing(spark, tmp_path, webhook_server):
