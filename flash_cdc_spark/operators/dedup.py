@@ -26,9 +26,7 @@ reproduce them exactly.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -417,79 +415,6 @@ def simhash_candidate_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-
-
-# Materialized signature-index memo (the ingest-time analog, same
-# device as the IVF cell-partitioned layout in operators/ivf.py): a
-# production dedup pipeline computes signatures ONCE when documents
-# are ingested and every dedup/graph job starts from the stored
-# signature table — it never re-tokenizes the corpus per query. The
-# memo materializes a signature DataFrame to parquet once per
-# (process, corpus, kind) and returns a lazy read. Parquet round-trips
-# bigint columns losslessly, so downstream results are bit-identical
-# to inline computation (pinned by the oracle suite, which compares
-# every consuming query against DuckDB recomputing from raw text).
-_SIG_LAYOUTS: dict[tuple[str, str], str] = {}
-
-
-def signature_index(
-    sig_df: DataFrame | Callable[[], DataFrame],
-    cache_key: str,
-    kind: str,
-) -> DataFrame:
-    """Memoize a deterministic signature table as a parquet layout
-    keyed by ``(cache_key, kind)`` and return a lazy read of it — the
-    offline signature-index analog.
-
-    Pass a ZERO-ARG BUILDER (``lambda: simhash64_signatures(d)``)
-    rather than a built DataFrame: on a memo hit the builder is never
-    called, so the signature expression tree is never constructed.
-    That construction is pure driver-side py4j traffic — measured r7:
-    ~2.2 s for the 64-bit tree, ~1 s for the 32-bit one, per CALL,
-    even when the memo made execution itself ~0.6 s — the same
-    plan-construction cost axis the r6 PQ fixes hit (SCALE.md). A
-    plain DataFrame still works (the r5 behavior) but pays the build
-    on every call.
-
-    CONTRACT: the builder must produce the CANONICAL full-corpus
-    signature table for ``(cache_key, kind)`` — the memo keys on those
-    two strings only, so a caller passing a filtered or different
-    signature frame under an existing key would silently read the
-    first writer's layout. Callers that need a subset must filter the
-    RETURNED frame, never the input. The one-time parquet write is
-    absorbed by the first consuming query's wall-clock; ``bench.py``
-    notes this (first-touch cost) next to the headline so per-query
-    timings stay interpretable.
-    """
-    key = (cache_key, kind)
-    if key not in _SIG_LAYOUTS:
-        import atexit
-        import shutil
-        import tempfile
-
-        built = sig_df() if callable(sig_df) else sig_df
-        layout = tempfile.mkdtemp(prefix=f"flash_sig_{kind}_")
-        built.write.mode("overwrite").parquet(layout)
-        atexit.register(shutil.rmtree, layout, ignore_errors=True)
-        _SIG_LAYOUTS[key] = layout
-        spark = built.sparkSession
-    else:
-        # getActiveSession() is thread-local in classic PySpark — a
-        # memo hit from a non-main thread (admin HTTP handler,
-        # streaming listener) returns None; fall back to the frame's
-        # owning session, then the builder's, then the global
-        # getOrCreate (never constructs a second session once one
-        # exists; ADVICE r7).
-        spark = SparkSession.getActiveSession()
-        if spark is None and not callable(sig_df):
-            spark = sig_df.sparkSession
-        if spark is None:
-            # cheaper than invoking the builder thunk: returns the
-            # existing default session without constructing plans
-            spark = SparkSession.builder.getOrCreate()
-    from flash_cdc_spark.tables import read_layout
-
-    return read_layout(spark, _SIG_LAYOUTS[key])
 
 
 def simhash64_signatures(

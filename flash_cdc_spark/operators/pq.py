@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flash_cdc_spark.artifacts import session_memo, stored
 from flash_cdc_spark.operators import ivf as IVF
 
 __all__ = [
@@ -37,7 +38,6 @@ __all__ = [
     "PQ_ITERS",
     "train_codebooks",
     "encode",
-    "encoded_corpus",
     "encode_wide",
     "encoded_corpus_wide",
     "adc_lut",
@@ -121,45 +121,6 @@ def encode(
     )
 
 
-# Materialized code-table memo (offline index-build analog, the exact
-# counterpart of ivf.assigned_corpus): PQ's whole point is that the
-# CODE TABLE is the stored index — so store it. encode() evaluates
-# m × k distance expressions (interpreted HOFs — zip_with/aggregate
-# run outside codegen) over the corpus; without the memo every search
-# re-pays that, which made the PQ queries the two slowest headline
-# rows in the r6 bench (6.7-7.8 s at sf0.1). Reading the written
-# layout is one narrow scan of ~m small ints per vector.
-_CODE_LAYOUTS: dict[str, str] = {}
-
-
-def encoded_corpus(
-    vecs: DataFrame,
-    books: list[list[tuple[int, list[float]]]],
-    dim: int,
-    cache_key: str,
-    v_col: str = "v",
-) -> DataFrame:
-    """Return the corpus code table ``(vec_id, m, code)`` as a LAZY
-    read of a memoized parquet layout — encode once per (process,
-    corpus), search many. At 100 TB this is the nightly index build;
-    codes are low-cardinality ints (RLE/dictionary parquet gold)."""
-    spark = vecs.sparkSession
-    if cache_key not in _CODE_LAYOUTS:
-        import atexit
-        import shutil
-        import tempfile
-
-        layout = tempfile.mkdtemp(prefix="flash_pq_codes_")
-        encode(vecs, books, dim=dim, v_col=v_col).write.mode(
-            "overwrite"
-        ).parquet(layout)
-        atexit.register(shutil.rmtree, layout, ignore_errors=True)
-        _CODE_LAYOUTS[cache_key] = layout
-    from flash_cdc_spark.tables import read_layout
-
-    return read_layout(spark, _CODE_LAYOUTS[cache_key])
-
-
 def encode_wide(
     vecs: DataFrame,
     books: list[list[tuple[int, list[float]]]],
@@ -185,9 +146,6 @@ def encode_wide(
     return vecs.select("vec_id", arr.alias("codes"))
 
 
-_CODE_LAYOUTS_WIDE: dict[str, str] = {}
-
-
 def encoded_corpus_wide(
     vecs: DataFrame,
     books: list[list[tuple[int, list[float]]]],
@@ -196,38 +154,30 @@ def encoded_corpus_wide(
     v_col: str = "v",
     cells: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
-    """Pivoted counterpart of :func:`encoded_corpus`: the corpus code
-    table ``(vec_id, codes)`` — plus the IVF ``cell`` assignment,
-    partitioned by it, when ``cells`` (the coarse-quantizer centers)
-    are given — as a LAZY read of a memoized parquet layout. With
-    ``cells`` this IS the IVFADC index (Jégou et al. 2011 §IV): one
-    nightly build, searches read ~``m`` small ints per vector from the
-    probed cells only."""
-    spark = vecs.sparkSession
-    key = f"{cache_key}#wide{'+cells' if cells is not None else ''}"
-    if key not in _CODE_LAYOUTS_WIDE:
-        import atexit
-        import shutil
-        import tempfile
+    """The corpus code table ``(vec_id, codes)`` — plus the IVF ``cell``
+    assignment, partitioned by it, when ``cells`` (the coarse-quantizer
+    centers) are given — as a LAZY read of the stored layout of the
+    corpus at ``cache_key`` (:func:`flash_cdc_spark.artifacts.stored`).
+    PQ's whole point is that the CODE TABLE is the stored index: encoding
+    evaluates m × k interpreted distance HOFs over the corpus, which
+    made the PQ queries the two slowest headline rows before it was
+    stored (r6 bench, 6.7-7.8 s at sf0.1). With ``cells`` this IS the
+    IVFADC index (Jégou et al. 2011 §IV): one nightly build, searches
+    read ~``m`` small ints per vector from the probed cells only."""
 
-        layout = tempfile.mkdtemp(prefix="flash_pq_codes_wide_")
+    def build() -> DataFrame:
         df = encode_wide(vecs, books, dim=dim, v_col=v_col)
-        if cells is not None:
-            assigned = vecs.select(
-                "vec_id",
-                F.element_at(IVF.cells_ranked(v_col, cells), 1)["cell"].alias(
-                    "cell"
-                ),
-            )
-            df = df.join(assigned, "vec_id")
-            df.write.partitionBy("cell").mode("overwrite").parquet(layout)
-        else:
-            df.write.mode("overwrite").parquet(layout)
-        atexit.register(shutil.rmtree, layout, ignore_errors=True)
-        _CODE_LAYOUTS_WIDE[key] = layout
-    from flash_cdc_spark.tables import read_layout
+        if cells is None:
+            return df
+        assigned = vecs.select(
+            "vec_id",
+            F.element_at(IVF.cells_ranked(v_col, cells), 1)["cell"].alias("cell"),
+        )
+        return df.join(assigned, "vec_id")
 
-    return read_layout(spark, _CODE_LAYOUTS_WIDE[key])
+    if cells is None:
+        return stored(build, cache_key, "pq_codes_wide")
+    return stored(build, cache_key, "pq_codes_wide+cells", partition_by="cell")
 
 
 def adc_lut_maps(
@@ -261,15 +211,8 @@ def adc_lut_maps(
             for book in books
         ),
     )
-    memo = getattr(spark, "_flash_expr_memo", None)
-    if memo is None:
-        memo = {}
-        try:
-            spark._flash_expr_memo = memo
-        except AttributeError:
-            memo = None
-    expr = memo.get(ekey) if memo is not None else None
-    if expr is None:
+
+    def parse() -> Column:
         maps = []
         for i, book in enumerate(books):
             entries = ", ".join(
@@ -277,9 +220,9 @@ def adc_lut_maps(
                 for cid, center in book
             )
             maps.append(f"map({entries})")
-        expr = F.expr("array(" + ", ".join(maps) + ")")
-        if memo is not None:
-            memo[ekey] = expr
+        return F.expr("array(" + ", ".join(maps) + ")")
+
+    expr = session_memo(spark, ekey, parse)
     return probes.select(id_col, expr.alias("luts"))
 
 

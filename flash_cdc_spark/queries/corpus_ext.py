@@ -91,10 +91,10 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11: the shingled-doc table itself is a stored signature index
     # (same device and same argument as the dedup family's shingles3
     # memo) — the per-run shingling sweep moves to first touch.
-    from flash_cdc_spark.operators.dedup import signature_index
+    from flash_cdc_spark.artifacts import stored
 
     d = load_table(spark, sf_dir, "documents")
-    sh_docs = signature_index(
+    sh_docs = stored(
         lambda: d.select(
             "doc_id",
             "source",

@@ -192,23 +192,23 @@ def q_text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Reading c2 from parquet also gives the planner an exact size, so
     # the scoring join broadcasts instead of shuffling the corpus
     # bigram stream.
-    from flash_cdc_spark.operators.dedup import signature_index
+    from flash_cdc_spark.artifacts import stored
 
-    c2 = signature_index(
+    c2 = stored(
         lambda: bigrams.filter("is_train")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c2")),
         sf_dir,
         "bigram_c2_train",
     )
-    c1 = signature_index(
+    c1 = stored(
         lambda: c2.groupBy(F.col("w1").alias("c1_w1")).agg(
             F.sum("c2").alias("c1")
         ),
         sf_dir,
         "bigram_c1_train",
     )
-    vocab = signature_index(
+    vocab = stored(
         lambda: toks.filter("is_train")
         .select(F.explode("ws").alias("w"))
         .agg(F.countDistinct("w").alias("v")),

@@ -274,7 +274,7 @@ def q_train_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate are gone entirely. Hit semantics are unchanged: all k
     # positions set — duplicate positions within a gram test the same
     # bit twice on both forms.
-    from flash_cdc_spark.operators.dedup import signature_index
+    from flash_cdc_spark.artifacts import stored
 
     def _mask_builder():
         pos = (
@@ -297,7 +297,7 @@ def q_train_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("m")
         )
 
-    mask = signature_index(
+    mask = stored(
         _mask_builder,
         sf_dir,
         f"bloommask{_BLOOM_M}k{_BLOOM_K}_train90_grams8",

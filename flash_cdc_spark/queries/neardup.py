@@ -11,11 +11,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flash_cdc_spark.artifacts import stored
 from flash_cdc_spark.operators import multimodal as MM
 from flash_cdc_spark.operators import similarity as SIM
 from flash_cdc_spark.operators.dedup import (
     SIMHASH_MAX_BUCKET_WIDTH,
-    signature_index,
     banded_minhash,
     jaccard_verified_pairs,
     minhash_bands,
@@ -260,8 +260,8 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     1,024-bucket byte-banding's known 100× scale hazard (VERDICT r2)."""
     d = load_table(spark, sf_dir, "documents")
     # read from the memoized signature index (ingest-time analog) —
-    # bit-identical to inline computation, see operators/dedup.py
-    sigs = signature_index(lambda: simhash_signatures(d), sf_dir, "simhash32")
+    # bit-identical to inline computation, see flash_cdc_spark/artifacts.py
+    sigs = stored(lambda: simhash_signatures(d), sf_dir, "simhash32")
     return simhash_candidate_pairs(
         sigs, max_hamming=3, max_bucket_width=SIMHASH_MAX_BUCKET_WIDTH
     )
@@ -331,7 +331,7 @@ def q_dedup_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate boilerplate). Signature carried as two 32-bit halves —
     bit-exact on both engines, no 2⁶³ overflow on either."""
     d = load_table(spark, sf_dir, "documents")
-    sigs = signature_index(lambda: simhash64_signatures(d), sf_dir, "simhash64")
+    sigs = stored(lambda: simhash64_signatures(d), sf_dir, "simhash64")
     return simhash64_candidate_pairs(
         sigs, max_hamming=3, max_bucket_width=SIMHASH_MAX_BUCKET_WIDTH
     )
@@ -684,7 +684,7 @@ def q_multimodal_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     imgs = d.withColumn("media", MM.synth_pgm_grouped_udf()(F.col("doc_id")))
     # ingest-time signature index: decode+hash once per (process,
     # corpus), every search reads the stored signature table
-    sig = signature_index(lambda: MM.dhash_features(imgs, "media"), sf_dir, "dhash")
+    sig = stored(lambda: MM.dhash_features(imgs, "media"), sf_dir, "dhash")
     return simhash64_candidate_pairs(sig, max_hamming=3)
 
 
@@ -749,7 +749,7 @@ def q_multimodal_audiohash_neardup(spark: SparkSession, sf_dir: str) -> DataFram
     banding shuffle, never all-pairs."""
     d = ensure_min_parallelism(load_table(spark, sf_dir, "documents")).select("doc_id")
     clips = d.withColumn("media", MM.synth_wav_grouped_udf()(F.col("doc_id")))
-    sig = signature_index(
+    sig = stored(
         lambda: MM.audiohash_features(clips, "media"), sf_dir, "audiohash"
     )
     return simhash64_candidate_pairs(sig, max_hamming=3)
@@ -836,7 +836,7 @@ def q_multimodal_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     vids = d.withColumn("media", MM.synth_video_udf()(F.col("doc_id")))
     # the signature index matters doubly here: the self-join would
     # otherwise run the mapInPandas decode subtree TWICE per search
-    sig = signature_index(
+    sig = stored(
         lambda: MM.video_frame_hashes(vids, "media"), sf_dir, "videohash"
     )
     a = sig.select(F.col("doc_id").alias("doc_a"), "sim_hi", "sim_lo")
@@ -917,7 +917,7 @@ def q_multimodal_video_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     d = ensure_min_parallelism(load_table(spark, sf_dir, "documents")).select("doc_id")
     vids = d.withColumn("media", MM.synth_video_udf()(F.col("doc_id")))
-    sig = signature_index(
+    sig = stored(
         lambda: MM.video_frame_hashes(vids, "media"), sf_dir, "videohash"
     )
     vhash = sig.select("doc_id", "sim_hi", "sim_lo").distinct()
@@ -1450,7 +1450,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flash_cdc_spark.operators.graph import connected_components
 
     d = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    sigs = signature_index(lambda: simhash_signatures(d), sf_dir, "simhash32")
+    sigs = stored(lambda: simhash_signatures(d), sf_dir, "simhash32")
     grp = (
         sigs.groupBy("simhash")
         .agg(
@@ -1715,7 +1715,7 @@ def q_dedup_clusters64(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flash_cdc_spark.operators.graph import connected_components
 
     d = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    sigs = signature_index(lambda: simhash64_signatures(d), sf_dir, "simhash64")
+    sigs = stored(lambda: simhash64_signatures(d), sf_dir, "simhash64")
     grp = (
         sigs.groupBy("sim_hi", "sim_lo")
         .agg(
@@ -1833,7 +1833,7 @@ def q_dedup_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus the KM decimal-cumsum device), so the unrolled-CTE oracle is
     bit-comparable with NO float reduction anywhere."""
     d = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    sigs = signature_index(lambda: simhash64_signatures(d), sf_dir, "simhash64")
+    sigs = stored(lambda: simhash64_signatures(d), sf_dir, "simhash64")
     grp = (
         sigs.groupBy("sim_hi", "sim_lo")
         .agg(F.min("doc_id").alias("doc_id"))
@@ -2065,7 +2065,7 @@ def q_graph_jaccard_link_prediction(
     TakeOrdered (per-partition heaps), no global sort.
     """
     d = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    sigs = signature_index(lambda: simhash64_signatures(d), sf_dir, "simhash64")
+    sigs = stored(lambda: simhash64_signatures(d), sf_dir, "simhash64")
     grp = (
         sigs.groupBy("sim_hi", "sim_lo")
         .agg(F.min("doc_id").alias("doc_id"))
@@ -2212,7 +2212,7 @@ def q_dedup_editdist_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~5 s over sf0.1's 97k candidate pairs, embarrassingly parallel.
     """
     d = load_table(spark, sf_dir, "documents")
-    sigs = signature_index(lambda: simhash64_signatures(d), sf_dir, "simhash64")
+    sigs = stored(lambda: simhash64_signatures(d), sf_dir, "simhash64")
     pairs = simhash64_candidate_pairs(
         sigs, max_hamming=3, max_bucket_width=SIMHASH_MAX_BUCKET_WIDTH
     ).select("doc_a", "doc_b")

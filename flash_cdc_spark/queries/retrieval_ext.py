@@ -81,10 +81,10 @@ def _tok_tf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per process at first touch (bench warmup, like every index
     memo) and each pass is a narrow scan with predicate pushdown on
     ``t``."""
-    from flash_cdc_spark.operators.dedup import signature_index
+    from flash_cdc_spark.artifacts import stored
 
     d = load_table(spark, sf_dir, "documents")
-    return signature_index(
+    return stored(
         lambda: d.select(
             "doc_id", F.explode(tokens_col("text")).alias("t")
         )
@@ -99,10 +99,10 @@ def _dl_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document lengths ``(doc_id, dl)`` derived from the tf index
     (``dl = Σ tf`` — identical to ``count(*)`` over the token stream),
     stored alongside it."""
-    from flash_cdc_spark.operators.dedup import signature_index
+    from flash_cdc_spark.artifacts import stored
 
     idx = _tok_tf_index(spark, sf_dir)
-    return signature_index(
+    return stored(
         lambda: idx.groupBy("doc_id").agg(F.sum("tf").alias("dl")),
         sf_dir,
         "tok_dl",

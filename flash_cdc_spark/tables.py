@@ -3,6 +3,11 @@
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings, one parquet per table under
 ``/root/testdata/sf{0.001,0.01,0.1}/``.
+
+:func:`load_table` memoizes each table's analyzed plan per session
+(:func:`flash_cdc_spark.artifacts.session_memo`), keyed on the file's
+identity (:func:`_stat_key`), which is also the corpus identity that
+:func:`flash_cdc_spark.artifacts.stored` keys derived tables on.
 """
 
 from __future__ import annotations
@@ -11,36 +16,16 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from flash_cdc_spark.artifacts import session_memo
+
 __all__ = [
     "TABLE_NAMES",
     "load_table",
     "load_tables",
     "register_views",
     "default_sf_dir",
-    "read_layout",
 ]
 
-
-def read_layout(spark: SparkSession, path: str) -> "DataFrame":
-    """Per-session analyzed-plan memo for PROCESS-IMMUTABLE parquet
-    layouts (the mkdtemp index memos: IVF cell layout, PQ code tables,
-    signature indexes). ``spark.read.parquet`` re-lists the directory
-    and re-reads footer schemas on every call (~0.1 s of driver time);
-    these layouts are written exactly once per process and never
-    change, so caching the analyzed DataFrame is always safe — a plan,
-    never data: every execution still scans the parquet files. Same
-    device as ``load_table``'s memo, minus the staleness key (the path
-    is unique per write by construction)."""
-    memo = getattr(spark, "_flash_layout_memo", None)
-    if memo is None:
-        memo = {}
-        try:
-            spark._flash_layout_memo = memo
-        except AttributeError:
-            return spark.read.parquet(path)
-    if path not in memo:
-        memo[path] = spark.read.parquet(path)
-    return memo[path]
 
 TABLE_NAMES = (
     "region",
@@ -93,29 +78,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Per-session PLAN memo: spark.read.parquet re-lists and re-reads
     # the footer schema on every call (~0.1 s) — across ~111 bench
     # queries × 2 tables that is tens of seconds of pure driver time.
-    # The memo caches the analyzed DataFrame (a plan, never data: every
-    # execution still scans the parquet), lives on the session object
-    # (dies with it), and keys on the file's mtime+size so an
-    # in-place rewrite invalidates it.
-    memo = getattr(spark, "_flash_table_memo", None)
-    if memo is None:
-        memo = {}
-        try:
-            spark._flash_table_memo = memo
-        except AttributeError:
-            memo = None
+    # Keyed on the file's mtime+size so an in-place rewrite invalidates
+    # it.
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if memo is not None:
-        try:
-            key = (name, _stat_key(path))
-        except OSError:
-            key = None
-        if key is not None and key in memo:
-            return memo[key]
-    df = _read_table(spark, sf_dir, name)
-    if memo is not None and key is not None:
-        memo[key] = df
-    return df
+    try:
+        key = ("table", name, _stat_key(path))
+    except OSError:
+        return _read_table(spark, sf_dir, name)
+    return session_memo(spark, key, lambda: _read_table(spark, sf_dir, name))
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

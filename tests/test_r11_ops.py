@@ -169,7 +169,7 @@ def test_prefix_queries_have_no_window_at_query_time(spark, sf_dir):
     for name in ("q_dedup_containment_pairs", "q_dedup_prefix_jaccard_join"):
         p = _plan(QUERIES[name](spark, sf_dir))
         assert "Window" not in p, name
-        assert "flash_sig_shingles3_prefrank" in p, name
+        assert "flash_shingles3_prefrank" in p, name
 
 
 def test_knn_arrow_ab_identical(spark, sf_dir):

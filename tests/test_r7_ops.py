@@ -169,26 +169,3 @@ def test_video_dup_groups_cover_exactly_the_pair_query(spark, sf_dir):
     assert covered == pairs
     # and it genuinely contracts on the duplicate-heavy fixture
     assert groups.count() < pairs
-
-
-def test_signature_index_lazy_builder_skips_construction(spark):
-    """The r7 drift fix's contract: on a memo HIT the zero-arg builder
-    must never run (plan construction is the cost being skipped); on a
-    MISS it runs exactly once and the layout round-trips the frame."""
-    from flash_cdc_spark.operators.dedup import signature_index
-
-    calls = []
-
-    def build():
-        calls.append(1)
-        return spark.createDataFrame(
-            [(1, 10), (2, 20)], "doc_id bigint, sig bigint"
-        )
-
-    key = "unit-test-lazy-memo"
-    first = signature_index(build, key, "unitsig")
-    assert calls == [1]
-    assert sorted(map(tuple, first.collect())) == [(1, 10), (2, 20)]
-    again = signature_index(build, key, "unitsig")
-    assert calls == [1], "builder ran on a memo hit"
-    assert sorted(map(tuple, again.collect())) == [(1, 10), (2, 20)]

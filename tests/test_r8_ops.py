@@ -303,42 +303,3 @@ def test_code_detection_counts_keywords(spark, sf_dir):
         assert r["kw_density"] == a[2] / a[3]
         flagged_total += r["n_flagged"]
     assert flagged_total > 0  # the detector is non-vacuous on the fixture
-
-
-def test_signature_index_memo_hit_from_non_main_thread(spark, sf_dir):
-    """ADVICE r7: getActiveSession() is thread-local in classic
-    PySpark, so a memo hit from a non-main thread (admin HTTP handler,
-    streaming listener) used to crash on spark.read. The fallback must
-    serve the memoized layout WITHOUT invoking the builder thunk."""
-    import threading
-
-    from flash_cdc_spark.operators import multimodal as MM
-    from flash_cdc_spark.operators.dedup import (
-        signature_index,
-        simhash64_signatures,
-    )
-    from flash_cdc_spark.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    primed = signature_index(
-        lambda: simhash64_signatures(d), sf_dir, "simhash64"
-    )
-    assert primed.count() > 0  # memo primed (or already present)
-
-    result: dict = {}
-
-    def worker():
-        def must_not_build():
-            raise AssertionError("builder must not be called on a memo hit")
-
-        try:
-            df = signature_index(must_not_build, sf_dir, "simhash64")
-            result["n"] = df.count()
-        except Exception as exc:  # pragma: no cover - failure detail
-            result["err"] = repr(exc)
-
-    t = threading.Thread(target=worker)
-    t.start()
-    t.join(60)
-    assert result.get("err") is None, result
-    assert result["n"] > 0
