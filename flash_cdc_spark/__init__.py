@@ -10,7 +10,7 @@ Layout:
 - :mod:`flash_cdc_spark.session`    — SparkSession factory (AQE, Arrow, tuned shuffles)
 - :mod:`flash_cdc_spark.schemas`    — canonical StructTypes (event envelope, config tables)
 - :mod:`flash_cdc_spark.tables`     — test-table catalog loader
-- :mod:`flash_cdc_spark.artifacts`  — stored per-corpus index tables + per-session plan memo
+- :mod:`flash_cdc_spark.artifacts`  — stored per-corpus index tables, trained state + per-session plan memo
 - :mod:`flash_cdc_spark.functions`  — pure Column-expression helpers (no UDFs in hot paths)
 - :mod:`flash_cdc_spark.operators`  — batch operators (changefeed, admin, dedup, similarity, text, multimodal)
 - :mod:`flash_cdc_spark.sources`    — changelog source + replay-mode resolution

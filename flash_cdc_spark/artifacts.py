@@ -1,4 +1,5 @@
-"""Stored per-corpus artifacts and the per-session plan memo.
+"""Stored per-corpus artifacts, trained per-corpus state and the
+per-session plan memo.
 
 :func:`stored` is the one place that writes a derived table of a corpus
 — a signature or shingle index, an IVF cell layout, a PQ code table —
@@ -30,6 +31,19 @@ recomputes every consumer from raw data).
 The one-time write is absorbed by the first consuming query's wall
 time (``first_touch_s`` in the bench).
 
+:func:`trained` is the same memo for driver-side trained state — IVF
+centers, PQ codebooks, BPE merges, classifier weights, profile rows.
+
+- **Key:** ``(kind, corpus, identity)``, the identity exactly as for
+  :func:`stored`, so a rewritten corpus is trained afresh.
+- **Lifetime:** the process; the value lives in driver memory.
+- **Train:** a zero-argument callable run only on a miss. It returns
+  a driver-side value, trained on the CANONICAL full-corpus input for
+  ``kind`` (one fixed set of hyper-parameters per kind). A ``train``
+  that raises records nothing. Callers always build their plans from
+  the returned value, so the first call and every later call run one
+  plan.
+
 :func:`session_memo` is the per-session memo of client-side plan
 objects (analyzed DataFrames, parsed Columns). It caches a plan, never
 data: every execution still scans the parquet. It lives on the
@@ -47,11 +61,19 @@ from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["stored", "session_memo"]
+__all__ = ["stored", "session_memo", "trained"]
 
 T = TypeVar("T")
 
 _STORED: dict[tuple, str] = {}
+_TRAINED: dict[tuple, object] = {}
+
+
+def _identity(corpus: str) -> tuple:
+    """Stat identity of every entry of the ``corpus`` directory."""
+    from flash_cdc_spark.tables import _stat_key
+
+    return tuple(_stat_key(os.path.join(corpus, n)) for n in sorted(os.listdir(corpus)))
 
 
 def session_memo(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
@@ -79,13 +101,7 @@ def stored(
     """Lazy read of the stored ``kind`` artifact of ``corpus``, built by
     ``builder()`` and written (partitioned by ``partition_by``, if given)
     on the first call for the corpus's current identity."""
-    from flash_cdc_spark.tables import _stat_key
-
-    key = (
-        kind,
-        corpus,
-        tuple(_stat_key(os.path.join(corpus, n)) for n in sorted(os.listdir(corpus))),
-    )
+    key = (kind, corpus, _identity(corpus))
     layout = _STORED.get(key)
     if layout is None:
         # no lock: two threads that miss together each write a complete
@@ -110,3 +126,14 @@ def stored(
         # session and is cheaper than running the builder.
         spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
     return session_memo(spark, ("stored", layout), lambda: spark.read.parquet(layout))
+
+
+def trained(corpus: str, kind: str, train: Callable[[], T]) -> T:
+    """``train()``, memoized per process under the ``kind`` of
+    ``corpus``'s current identity."""
+    key = (kind, corpus, _identity(corpus))
+    if key not in _TRAINED:
+        # no lock: training is deterministic, so two threads that miss
+        # together record equal values
+        _TRAINED[key] = train()
+    return _TRAINED[key]

@@ -55,12 +55,6 @@ IVF_K = 16  # > label cardinality (10) — cells are genuinely trained
 IVF_ITERS = 2  # Lloyd refinement passes after seeding
 _SAMPLE_MOD = 2  # train on the 1/2 deterministic hash-sample
 
-# Trained-quantizer cache: in a real IVF system training is an offline
-# step and queries load the centers; here the analog is memoizing by
-# corpus key (training is fully deterministic, so the cache can never
-# go stale for a given key). Queries pass cache_key=sf_dir.
-_TRAINED: dict[tuple[str, int, int], list[tuple[int, list[float]]]] = {}
-
 
 def _train_sample(vecs: DataFrame, id_col: str) -> DataFrame:
     bucket = F.conv(
@@ -138,17 +132,13 @@ def train_kmeans(
     iters: int = IVF_ITERS,
     id_col: str = "vec_id",
     v_col: str = "v",
-    cache_key: str | None = None,
 ) -> list[tuple[int, list[float]]]:
     """Lloyd's k-means over the deterministic hash-sample; returns
     ``[(cell_id, center_vector), ...]``. Cell ids are seed ranks; a cell
     that loses all members drops out (both engines drop it the same
-    way). Pass ``cache_key`` (e.g. the corpus path) to reuse an
-    already-trained quantizer — the offline-training analog."""
-    if cache_key is not None:
-        cached = _TRAINED.get((cache_key, k, iters))
-        if cached is not None:
-            return cached
+    way). Queries reuse a trained quantizer through
+    :func:`flash_cdc_spark.artifacts.trained` — the offline-training
+    analog."""
     sample = _train_sample(vecs.select(id_col, v_col), id_col)
     seeds = (
         sample.orderBy(F.md5(F.col(id_col).cast("string")), id_col).limit(k).collect()
@@ -174,8 +164,6 @@ def train_kmeans(
             (cid, [dims[d] for d in range(len(dims))])
             for cid, dims in sorted(by_cell.items())
         ]
-    if cache_key is not None:
-        _TRAINED[(cache_key, k, iters)] = centers
     return centers
 
 

@@ -56,13 +56,6 @@ def _sub(v_col: str | Column, m: int, sub_dim: int) -> Column:
     return F.slice(col, m * sub_dim + 1, sub_dim)
 
 
-# Codebook-list memo: IVF.train_kmeans memoizes each subspace, but the
-# per-subspace ``vecs.select`` slice plans were still being BUILT on
-# every call (~0.1 s of py4j traffic per query construction, r11
-# profile). Keyed on the same identity the per-subspace memos use.
-_TRAINED_BOOKS: dict[tuple, list] = {}
-
-
 def train_codebooks(
     vecs: DataFrame,
     dim: int,
@@ -70,30 +63,18 @@ def train_codebooks(
     k: int = PQ_K,
     iters: int = PQ_ITERS,
     v_col: str = "v",
-    cache_key: str | None = None,
 ) -> list[list[tuple[int, list[float]]]]:
     """Train ``m`` independent subspace codebooks by running the shared
     relational k-means on each subvector slice. Seeds are the same
     md5-ranked sample ids in every subspace (their subvectors), the
     standard PQ setup with a deterministic twist both engines share."""
-    bkey = (cache_key, dim, m, k, iters)
-    if cache_key is not None and bkey in _TRAINED_BOOKS:
-        return _TRAINED_BOOKS[bkey]
     sub_dim = dim // m
-    books = []
-    for i in range(m):
-        sliced = vecs.select("vec_id", _sub(v_col, i, sub_dim).alias("v"))
-        books.append(
-            IVF.train_kmeans(
-                sliced,
-                k=k,
-                iters=iters,
-                cache_key=None if cache_key is None else f"{cache_key}#pq{i}",
-            )
+    return [
+        IVF.train_kmeans(
+            vecs.select("vec_id", _sub(v_col, i, sub_dim).alias("v")), k=k, iters=iters
         )
-    if cache_key is not None:
-        _TRAINED_BOOKS[bkey] = books
-    return books
+        for i in range(m)
+    ]
 
 
 def encode(

@@ -53,11 +53,6 @@ __all__ = [
 # from repeated spaces are dropped). Mirrored verbatim in the oracle.
 WORD_RE = "^[a-z0-9]+$"
 
-# Learned-merges memo per (process, corpus): the trained-tokenizer
-# state is k strings — metadata-sized, same memo shape as the logreg
-# weights and IVF centers.
-_MERGES_MEMO: dict[tuple[str, int], list[str]] = {}
-
 
 def _words(df: DataFrame, text_col: str = "text") -> DataFrame:
     return (
@@ -67,15 +62,13 @@ def _words(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def learn_first_merges(
-    docs: DataFrame, k: int = 20, text_col: str = "text", cache_key: str | None = None
+    docs: DataFrame, k: int = 20, text_col: str = "text"
 ) -> list[str]:
     """Top-k adjacent-character pairs by corpus frequency (ties broken
     by pair ascending — the deterministic rank ``q_text_bpe_merge_
     candidates`` publishes), returned as a driver-side list in rank
     order. Pair cardinality is charset²-bounded, so the aggregate state
     and the collect are tiny at any corpus size."""
-    if cache_key is not None and (cache_key, k) in _MERGES_MEMO:
-        return _MERGES_MEMO[(cache_key, k)]
     pairs = (
         _words(docs, text_col)
         .filter(F.length("w") >= 2)
@@ -92,10 +85,7 @@ def learn_first_merges(
         .orderBy(F.col("c").desc(), "pair")
         .limit(k)
     )
-    merges = [r["pair"] for r in pairs.collect()]
-    if cache_key is not None:
-        _MERGES_MEMO[(cache_key, k)] = merges
-    return merges
+    return [r["pair"] for r in pairs.collect()]
 
 
 def _norm_merge(m) -> tuple[str, str]:
@@ -124,15 +114,10 @@ def bpe_segment(word: Column, merges: list) -> Column:
     return seg
 
 
-# Learned multi-round merges memo per (process, corpus, rounds).
-_ROUNDS_MEMO: dict[tuple[str, int], list[tuple[str, str, int]]] = {}
-
-
 def learn_bpe_rounds(
     docs: DataFrame,
     rounds: int = 5,
     text_col: str = "text",
-    cache_key: str | None = None,
 ) -> list[tuple[str, str, int]]:
     """FULL sequential BPE training (Sennrich et al. 2016): merge r+1
     is the most frequent adjacent SYMBOL pair counted over the corpus
@@ -146,10 +131,7 @@ def learn_bpe_rounds(
     Cost: ``rounds`` sequential corpus aggregates (each: segment with
     the merges so far — chained codegen'd ``replace`` — then ONE
     partial-aggregatable groupBy over adjacent symbol pairs) + a
-    1-row collect per round. The learned state is ``rounds`` rows,
-    memoized per corpus like the first-round list."""
-    if cache_key is not None and (cache_key, rounds) in _ROUNDS_MEMO:
-        return _ROUNDS_MEMO[(cache_key, rounds)]
+    1-row collect per round. The learned state is ``rounds`` rows."""
     words = _words(docs, text_col)
     merges: list[tuple[str, str]] = []
     learned: list[tuple[str, str, int]] = []
@@ -184,8 +166,6 @@ def learn_bpe_rounds(
         left, right = top[0]["pair"].split("|")
         merges.append((left, right))
         learned.append((left, right, top[0]["c"]))
-    if cache_key is not None:
-        _ROUNDS_MEMO[(cache_key, rounds)] = learned
     return learned
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flash_cdc_spark.artifacts import stored
+from flash_cdc_spark.artifacts import stored, trained
 from flash_cdc_spark.operators import ivf as IVF
 from flash_cdc_spark.operators import similarity as SIM
 from flash_cdc_spark.operators.dedup import (
@@ -358,7 +358,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = e.select(
         "vec_id", v.alias("v"), SIM.l2_norm("embedding", cast=True).alias("nrm")
     )
-    centers = IVF.train_kmeans(vecs, cache_key=sf_dir)
+    centers = trained(sf_dir, "ivf_centers", lambda: IVF.train_kmeans(vecs))
     corpus = IVF.assigned_corpus(vecs, centers, cache_key=sf_dir)
 
     a = corpus.select(

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flash_cdc_spark.artifacts import trained
 from flash_cdc_spark.operators.dedup import let_bound
 from flash_cdc_spark.operators import ivf as IVF
 from flash_cdc_spark.operators import similarity as SIM
@@ -223,7 +224,7 @@ def q_sim_ann_ivf_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = e.select(
         "vec_id", v.alias("v"), SIM.l2_norm("embedding", cast=True).alias("nrm")
     )
-    centers = IVF.train_kmeans(vecs, cache_key=sf_dir)
+    centers = trained(sf_dir, "ivf_centers", lambda: IVF.train_kmeans(vecs))
     # the shared memoized layout (operators/ivf.py) — the same index
     # the topk/multiprobe queries read
     corpus = IVF.assigned_corpus(vecs, centers, cache_key=sf_dir)

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flash_cdc_spark.artifacts import trained
 from flash_cdc_spark.operators.dedup import let_bound
 from flash_cdc_spark.operators.global_order import with_global_order
 from flash_cdc_spark.queries import llm_ext3, query
@@ -643,7 +644,7 @@ def q_sim_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     all_vecs = e.select("vec_id", v.alias("v"))
     base = all_vecs.filter(F.col("vec_id") % 10 != 7)
     delta = all_vecs.filter(F.col("vec_id") % 10 == 7)
-    centers = IVF.train_kmeans(base, cache_key=f"{sf_dir}#ivf-base")
+    centers = trained(sf_dir, "ivf_centers_base", lambda: IVF.train_kmeans(base))
     cell_of = F.element_at(IVF.cells_ranked("v", centers), 1)["cell"]
     assigned = base.select(cell_of.alias("cell"), F.lit(0).alias("is_delta")).unionAll(
         delta.select(cell_of.alias("cell"), F.lit(1).alias("is_delta"))

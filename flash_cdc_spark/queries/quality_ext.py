@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flash_cdc_spark.artifacts import trained
 from flash_cdc_spark.operators.dedup import let_bound
 from flash_cdc_spark.queries import query
 from flash_cdc_spark.tables import load_table
@@ -36,9 +37,6 @@ from flash_cdc_spark.tables import load_table
 
 _LOGREG_ITERS = 4
 _LOGREG_LR = 1.0
-# Trained-weights memo per (process, corpus) — see the cached branch in
-# q_quality_logreg_score for the contract.
-_LOGREG_STATE: dict[str, list] = {}
 # The tiny English stopword probe set shared with the quality profile
 # (llm.py) — the classifier's strongest signal for the en/other label.
 _LR_STOPWORDS = ("the", "a", "of", "and")
@@ -159,13 +157,12 @@ def q_quality_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _logreg_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train (or reuse the memoized weights of) the quality classifier
+    """Train (or reuse the trained weights of) the quality classifier
     and score every document: ``(doc_id, lang, y, p)``. Shared by the
     per-language profile and the calibration curve."""
     d = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     ws = F.split("text", " ")
     n_tok = F.size(ws).cast("double")
-    cached = _LOGREG_STATE.get(sf_dir)
     stop_arr = F.array(*[F.lit(s) for s in _LR_STOPWORDS])
     scalars = d.select(
         "doc_id",
@@ -188,122 +185,76 @@ def _logreg_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
     )
-    if cached is not None:
-        # r10 apply-path rewrite (guide §2.4/§4.1): with the trained
-        # weights memoized driver-side (4 floats), the margin is a
-        # row-local dot product over the standardized features — the
-        # melted 4-rows-per-doc explode, its localCheckpoint, the
-        # broadcast-weight join + groupBy(doc_id) shuffle and the
-        # final doc_id join all disappear; scoring is one projection
-        # over the scalar features. Value-identical: z_i keeps the
-        # same 9-dp rounding, m keeps the same 9-dp rounding over the
-        # same four z_i·w_i terms (the r6 sum's add order inside each
-        # 4-row group was already partial-agg-arbitrary), and p is the
-        # same expression.
-        wmap = dict(cached)
-        zi = {
-            i: F.round(
-                (F.col(f"x{i}") - F.col(f"mu{i}")) / F.col(f"s{i}"), 9
+    standardized = scalars.crossJoin(F.broadcast(stats))
+    zi = {
+        i: F.round((F.col(f"x{i}") - F.col(f"mu{i}")) / F.col(f"s{i}"), 9)
+        for i in (1, 2, 3)
+    }
+
+    def _train() -> list[tuple[int, float]]:
+        feats = (
+            standardized.select(
+                "doc_id",
+                "y",
+                F.explode(
+                    F.array(
+                        F.struct(F.lit(0).alias("f"), F.lit(1.0).alias("z")),
+                        *[
+                            F.struct(F.lit(i).alias("f"), zi[i].alias("z"))
+                            for i in (1, 2, 3)
+                        ],
+                    )
+                ).alias("fz"),
             )
-            for i in (1, 2, 3)
-        }
-        m = F.round(
-            F.lit(wmap[0])
-            + zi[1] * F.lit(wmap[1])
-            + zi[2] * F.lit(wmap[2])
-            + zi[3] * F.lit(wmap[3]),
-            9,
-        )
-        return scalars.crossJoin(F.broadcast(stats)).select(
-            "doc_id",
-            "lang",
-            "y",
-            F.round(
-                F.lit(1.0) / (F.lit(1.0) + F.exp(-m)), 9
-            ).alias("p"),
-        )
-    melted = scalars.crossJoin(F.broadcast(stats)).select(
-        "doc_id",
-        "y",
-        F.explode(
-            F.array(
-                *(
-                    [F.struct(F.lit(0).alias("f"), F.lit(1.0).alias("z"))]
-                    + [
-                        F.struct(
-                            F.lit(i).alias("f"),
-                            F.round(
-                                (F.col(f"x{i}") - F.col(f"mu{i}"))
-                                / F.col(f"s{i}"),
-                                9,
-                            ).alias("z"),
-                        )
-                        for i in (1, 2, 3)
-                    ]
-                )
-            )
-        ).alias("fz"),
-    )
-    feats = melted.select(
-        "doc_id", "y", F.col("fz.f").alias("f"), F.col("fz.z").alias("z")
-    ).localCheckpoint(eager=False)
-    if cached is not None:
-        # Trained-model memo (same offline-training analog as the IVF
-        # center / PCA state memos): the LEARNED state is 4 weight
-        # rows + 6 standardization stats — repeat calls pay only the
-        # feature scan + scoring pass, the production apply shape.
-        # Values are identical to inline training (the memo stores the
-        # collected 9-dp-rounded deterministic results).
-        w = spark.createDataFrame(cached, "f int, w double")
-    else:
-        w = spark.createDataFrame(
-            [(i, 0.0) for i in range(4)], "f int, w double"
-        )
-    for _ in range(_LOGREG_ITERS if cached is None else 0):
-        m = (
-            feats.join(F.broadcast(w), "f")
-            .groupBy("doc_id")
-            .agg(F.round(F.sum(F.col("z") * F.col("w")), 9).alias("m"))
-        )
-        p = m.select(
-            "doc_id",
-            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("m"))), 9).alias(
-                "p"
-            ),
-        )
-        g = (
-            feats.join(p, "doc_id")
-            .groupBy("f")
-            .agg(
-                F.round(
-                    F.avg(F.col("z") * (F.col("y") - F.col("p"))), 9
-                ).alias("g")
-            )
-        )
-        w = (
-            w.join(g, "f")
-            .select(
-                "f",
-                F.round(
-                    F.col("w") + F.lit(_LOGREG_LR) * F.col("g"), 9
-                ).alias("w"),
-            )
+            .select("doc_id", "y", F.col("fz.f").alias("f"), F.col("fz.z").alias("z"))
             .localCheckpoint(eager=False)
         )
-    if cached is None:
-        _LOGREG_STATE[sf_dir] = [(r["f"], r["w"]) for r in w.collect()]
-    final_m = (
-        feats.join(F.broadcast(w), "f")
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(F.col("z") * F.col("w")), 9).alias("m"))
+        w = spark.createDataFrame([(i, 0.0) for i in range(4)], "f int, w double")
+        for _ in range(_LOGREG_ITERS):
+            m = (
+                feats.join(F.broadcast(w), "f")
+                .groupBy("doc_id")
+                .agg(F.round(F.sum(F.col("z") * F.col("w")), 9).alias("m"))
+            )
+            p = m.select(
+                "doc_id",
+                F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("m"))), 9).alias("p"),
+            )
+            g = (
+                feats.join(p, "doc_id")
+                .groupBy("f")
+                .agg(
+                    F.round(F.avg(F.col("z") * (F.col("y") - F.col("p"))), 9).alias("g")
+                )
+            )
+            w = (
+                w.join(g, "f")
+                .select(
+                    "f",
+                    F.round(F.col("w") + F.lit(_LOGREG_LR) * F.col("g"), 9).alias("w"),
+                )
+                .localCheckpoint(eager=False)
+            )
+        return [(r["f"], r["w"]) for r in w.collect()]
+
+    # Scoring is a row-local dot product over the standardized
+    # features (guide §2.4/§4.1): no melt, no weight join, no
+    # groupBy(doc_id). z_i and m keep the training pass's 9-dp
+    # rounding over the same four z_i·w_i terms, so the scores equal
+    # the melted join's.
+    wmap = dict(trained(sf_dir, "logreg_weights", _train))
+    m = F.round(
+        F.lit(wmap[0])
+        + zi[1] * F.lit(wmap[1])
+        + zi[2] * F.lit(wmap[2])
+        + zi[3] * F.lit(wmap[3]),
+        9,
     )
-    return final_m.join(
-        scalars.select("doc_id", "lang", "y"), "doc_id"
-    ).select(
+    return standardized.select(
         "doc_id",
         "lang",
         "y",
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("m"))), 9).alias("p"),
+        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-m)), 9).alias("p"),
     )
 
 
@@ -312,11 +263,6 @@ def _logreg_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------
 
 _DSIR_BUCKETS = 8192
-# λ-table memo per (process, corpus) — the DSIR "trained" state is the
-# bounded bucket→log-ratio table; repeat calls pay only the gram scan
-# + probe join (the apply shape). Identical values: the memo stores the
-# collected 9-dp-rounded deterministic table.
-_DSIR_STATE: dict[str, list] = {}
 
 
 @query(
@@ -424,11 +370,8 @@ def q_train_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    if sf_dir in _DSIR_STATE:
-        lam = spark.createDataFrame(
-            _DSIR_STATE[sf_dir], "b bigint, lam double"
-        )
-    else:
+
+    def _train() -> list[tuple[int, float]]:
         bucket_stats = grams.groupBy("b").agg(
             F.count(F.lit(1)).alias("n_raw"),
             F.sum((F.col("lang") == "en").cast("int")).alias("n_tgt"),
@@ -450,10 +393,11 @@ def q_train_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 9,
             ).alias("lam"),
         )
-        _DSIR_STATE[sf_dir] = [(r["b"], r["lam"]) for r in lam.collect()]
-        lam = spark.createDataFrame(
-            _DSIR_STATE[sf_dir], "b bigint, lam double"
-        )
+        return [(r["b"], r["lam"]) for r in lam.collect()]
+
+    lam = spark.createDataFrame(
+        trained(sf_dir, "dsir_lambda", _train), "b bigint, lam double"
+    )
     doc_w = (
         grams.filter(F.col("lang") != "en")
         .join(F.broadcast(lam), "b")
@@ -690,8 +634,6 @@ def q_quality_logreg_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------
 
 _LANGID_K = 100
-# per-corpus trained trigram profiles: sf_dir -> [(lang, tri), ...]
-_LANGID_PROFILE: dict[str, list[tuple[str, str]]] = {}
 
 
 @query(
@@ -762,16 +704,14 @@ def q_text_langid_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    # trained-model memo (the BPE-merge/IVF-center pattern): the
-    # profile is #langs × K rows — metadata-sized — and training it
-    # re-scans the full trigram stream; collect once per corpus so
-    # repeat searches pay only the scoring pass
-    if sf_dir not in _LANGID_PROFILE:
+    # the profile is #langs × K rows — metadata-sized — and training
+    # it re-scans the full trigram stream
+    def _train() -> list[tuple[str, str]]:
         tris = d.select(
             "doc_id", "lang", F.explode(tri_arr).alias("tri")
         )
         wk = Window.partitionBy("lang").orderBy(F.col("c").desc(), "tri")
-        _LANGID_PROFILE[sf_dir] = [
+        return [
             (r["cand"], r["tri"])
             for r in (
                 tris.groupBy("lang", "tri")
@@ -803,7 +743,7 @@ def q_text_langid_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # always true, so results are unchanged. The only shuffle left is
     # the #langs²-bounded confusion aggregate.
     by_lang: dict[str, list[str]] = {}
-    for cand, tri in _LANGID_PROFILE[sf_dir]:
+    for cand, tri in trained(sf_dir, "langid_profile", _train):
         by_lang.setdefault(cand, []).append(tri)
     langs = sorted(by_lang)
     base = d.select(F.col("lang").alias("true_lang"), F.lower("text").alias("_lt"))

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flash_cdc_spark.artifacts import trained
 from flash_cdc_spark.operators import tokenize as TOK
 from flash_cdc_spark.operators.global_order import with_global_order
 from flash_cdc_spark.queries import query
@@ -91,7 +92,9 @@ def q_text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch. At 100 TB: learn = one charset²-bounded aggregate; apply
     = one narrow projection + one groupBy. Linear."""
     d = load_table(spark, sf_dir, "documents")
-    merges = TOK.learn_first_merges(d, k=_BPE_K, cache_key=sf_dir)
+    merges = trained(
+        sf_dir, "bpe_first_merges", lambda: TOK.learn_first_merges(d, k=_BPE_K)
+    )
     return TOK.bpe_token_counts(d, merges)
 
 
@@ -160,14 +163,16 @@ def q_text_bpe_train_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment-and-count corpus aggregate (chained codegen'd `replace` +
     one partial-aggregatable groupBy over adjacent symbol pairs) and a
     1-row collect; the learned table is `rounds` rows, memoized per
-    corpus (`operators/tokenize.py:learn_bpe_rounds`). The oracle
-    unrolls the same twelve stages as CTEs with scalar-subquery merge
-    application — wrong tie-breaking, a false cross-boundary match, or
-    a stale segmentation all mismatch. At 100 TB: rounds sequential
+    corpus (`artifacts.trained`). The oracle unrolls the same twelve
+    stages as CTEs with scalar-subquery merge application — wrong
+    tie-breaking, a false cross-boundary match, or a stale
+    segmentation all mismatch. At 100 TB: rounds sequential
     linear scans (vocabulary builders run exactly this, sampled);
     aggregate state is bounded by the live symbol-pair vocabulary."""
     d = load_table(spark, sf_dir, "documents")
-    learned = TOK.learn_bpe_rounds(d, rounds=_BPE_ROUNDS, cache_key=sf_dir)
+    learned = trained(
+        sf_dir, "bpe_rounds", lambda: TOK.learn_bpe_rounds(d, rounds=_BPE_ROUNDS)
+    )
     rows = [
         (i + 1, left, right, left + right, int(c))
         for i, (left, right, c) in enumerate(learned)

@@ -7,7 +7,8 @@ lineitem events documents embeddings, one parquet per table under
 :func:`load_table` memoizes each table's analyzed plan per session
 (:func:`flash_cdc_spark.artifacts.session_memo`), keyed on the file's
 identity (:func:`_stat_key`), which is also the corpus identity that
-:func:`flash_cdc_spark.artifacts.stored` keys derived tables on.
+:func:`flash_cdc_spark.artifacts.stored` keys derived tables on and
+:func:`flash_cdc_spark.artifacts.trained` keys trained state on.
 """
 
 from __future__ import annotations

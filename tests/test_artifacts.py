@@ -1,19 +1,27 @@
 """Contract of the artifact store (:mod:`flash_cdc_spark.artifacts`):
 the builder runs only on a miss, a hit works from any thread, a
-rewritten corpus is never served its old artifact, and a failed build
-leaves nothing behind."""
+rewritten corpus is never served its old artifact or trained state, a
+failed build leaves nothing behind, and a trained-state consumer runs
+one plan whether or not it trained."""
 
 from __future__ import annotations
 
+import contextlib
 import glob
+import io
 import os
+import re
+import shutil
 import tempfile
 import threading
 
 import pytest
 from pyspark.sql import functions as F
 
-from flash_cdc_spark.artifacts import stored
+from flash_cdc_spark.artifacts import stored, trained
+from flash_cdc_spark.operators import tokenize as TOK
+from flash_cdc_spark.queries import QUERIES
+from flash_cdc_spark.queries.tokenize_ext import _BPE_K
 from flash_cdc_spark.tables import load_table
 
 
@@ -113,3 +121,69 @@ def test_stored_failed_build_leaves_no_temp_dir(spark, tmp_path):
 
     good = stored(lambda: spark.range(3), str(tmp_path), kind)
     assert sorted(r["id"] for r in good.collect()) == [0, 1, 2]
+
+
+@pytest.mark.smoke
+def test_trained_memo_hit_returns_same_object(spark, sf_dir):
+    """A hit returns the very object the first ``train`` returned,
+    without running ``train`` again."""
+    d = load_table(spark, sf_dir, "documents")
+    calls = []
+
+    def train():
+        calls.append(1)
+        return TOK.learn_first_merges(d, k=5)
+
+    a = trained(sf_dir, "unit_bpe_first_merges_k5", train)
+    assert len(a) == 5 and all(len(m) == 2 for m in a)
+    assert trained(sf_dir, "unit_bpe_first_merges_k5", train) is a  # memo hit
+    assert calls == [1]
+
+
+@pytest.mark.smoke
+def test_trained_rebuilds_after_corpus_rewrite(spark, tmp_path):
+    """Rewriting the corpus changes the trained-state key: the BPE
+    query must learn its merges from the new text, not serve the merges
+    of the old one."""
+    corpus = str(tmp_path)
+    path = os.path.join(corpus, "documents.parquet")
+    schema = "doc_id bigint, text string"
+
+    def counts(df):
+        return sorted(map(tuple, df.collect()))
+
+    spark.createDataFrame(
+        [(1, "aaaa baab abba"), (2, "abab aabb")], schema
+    ).write.parquet(path)
+    QUERIES["q_text_bpe_tokenize"](spark, corpus).collect()
+
+    spark.createDataFrame(
+        [(3, "xyzx zyxz yxyz"), (4, "zzyy xxzz yyxx")], schema
+    ).write.mode("overwrite").parquet(path)
+    got = QUERIES["q_text_bpe_tokenize"](spark, corpus)
+    d = load_table(spark, corpus, "documents")
+    want = TOK.bpe_token_counts(d, TOK.learn_first_merges(d, k=_BPE_K))
+    assert counts(got) == counts(want)
+
+
+def _plan_shape(df) -> str:
+    """Formatted physical plan with the per-construction ids (expression
+    ids, exchange plan ids, RDD ids) masked."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return re.sub(r"#\d+L?|plan_id=\d+|RDD\[\d+\]", "#", buf.getvalue())
+
+
+@pytest.mark.parametrize("name", ["q_quality_logreg_score", "q_embedding_pca_project"])
+def test_trained_consumers_plan_is_stable(spark, sf_dir, tmp_path, name):
+    """The call that trains and every later call build ONE plan from
+    the trained value. A fresh copy of the corpus is a fresh identity,
+    so the first call here is a guaranteed miss."""
+    for table in ("documents", "embeddings"):
+        shutil.copyfile(
+            os.path.join(sf_dir, f"{table}.parquet"),
+            os.path.join(str(tmp_path), f"{table}.parquet"),
+        )
+    first = _plan_shape(QUERIES[name](spark, str(tmp_path)))
+    assert first == _plan_shape(QUERIES[name](spark, str(tmp_path)))

@@ -464,12 +464,13 @@ def test_ivf_cell_partitioned_layout_prunes_probe_scan(spark, sf_dir, tmp_path):
     enforced by directory layout, not a row filter."""
     import os
 
+    from flash_cdc_spark.artifacts import trained
     from flash_cdc_spark.operators import ivf as IVF
     from flash_cdc_spark.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", SIM.as_double_vec("embedding").alias("v"))
-    centers = IVF.train_kmeans(vecs, cache_key=sf_dir)
+    centers = trained(sf_dir, "ivf_centers", lambda: IVF.train_kmeans(vecs))
     corpus = vecs.withColumn(
         "cell", F.element_at(IVF.cells_ranked(F.col("v"), centers), 1)["cell"]
     )

@@ -165,27 +165,20 @@ def test_r5_plans_broadcast_and_avoid_nested_loop(spark, sf_dir):
 
 def test_model_curation_plans_stay_broadcast(spark, sf_dir):
     """The model-based curation pair keeps model state broadcast-sized:
-    logreg's weight joins and DSIR's λ-table join are broadcast hash
-    joins; the only nested-loop joins are single-row stat/total
-    cross-joins; DSIR's top-15 is TakeOrdered, never a global sort."""
+    logreg scores row-locally against literal weights, DSIR's λ-table
+    join is a broadcast hash join; the only nested-loop joins are
+    single-row stat/total cross-joins; DSIR's top-15 is TakeOrdered,
+    never a global sort."""
     from flash_cdc_spark.queries.quality_ext import (
         q_quality_logreg_score,
         q_train_dsir_weights,
     )
 
     # the detail section repeats node names as "(n) <Name>", which
-    # must not double-count — match the tree form "<Name> (" only
-    from flash_cdc_spark.queries import quality_ext
-
-    # training path (memo cleared): the weight join must be broadcast
-    quality_ext._LOGREG_STATE.pop(sf_dir, None)
-    lr = _plan(q_quality_logreg_score(spark, sf_dir))
-    assert "BroadcastHashJoin" in lr
-    # one stats cross-join (single-row) is the only permitted BNLJ
-    assert lr.count("BroadcastNestedLoopJoin (") <= 1, lr
-    # memo path (r10): weights inline as literals — no weight join at
-    # all, no melt explode; the single-row stats cross-join remains
-    # (building the plan above already trained + memoized the weights)
+    # must not double-count — match the tree form "<Name> (" only.
+    # Logreg's weights inline as literals — no weight join at all, no
+    # melt explode; the single-row stats cross-join (the only
+    # permitted BNLJ) remains
     lr2 = _plan(q_quality_logreg_score(spark, sf_dir))
     assert "BroadcastHashJoin" not in lr2, lr2
     assert "Generate" not in lr2, lr2
@@ -257,10 +250,12 @@ def test_langid_scoring_is_map_only_single_eval(spark, sf_dir):
     (the bounded confusion aggregate)."""
     import re
 
-    import flash_cdc_spark.queries.quality_ext as qx
+    from flash_cdc_spark.artifacts import trained
 
     plan = _plan(QUERIES["q_text_langid_profile"](spark, sf_dir))
-    n_profile = len(qx._LANGID_PROFILE[sf_dir])
+    n_profile = len(
+        trained(sf_dir, "langid_profile", lambda: pytest.fail("not memoized"))
+    )
     assert len(re.findall(r"[Cc]ontains\(", plan)) == n_profile
     for line in plan.splitlines():
         if line.startswith("Condition"):

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from flash_cdc_spark.artifacts import trained
 from flash_cdc_spark.operators import ivf as IVF
 from flash_cdc_spark.operators import pq as PQ
 from flash_cdc_spark.operators import similarity as SIM
@@ -64,7 +65,7 @@ def _check_adc_wide_matches_long(spark, sf_dir):
     round(·, 9))."""
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", SIM.as_double_vec("embedding").alias("v"))
-    books = PQ.train_codebooks(vecs, dim=SIM.DIM, cache_key=sf_dir)
+    books = trained(sf_dir, "pq_books", lambda: PQ.train_codebooks(vecs, dim=SIM.DIM))
     probes = vecs.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
@@ -95,7 +96,7 @@ def test_adc_lut_maps_expression_contract(spark, sf_dir):
     no join, no aggregate anywhere in the LUT subplan."""
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", SIM.as_double_vec("embedding").alias("v"))
-    books = PQ.train_codebooks(vecs, dim=SIM.DIM, cache_key=sf_dir)
+    books = trained(sf_dir, "pq_books", lambda: PQ.train_codebooks(vecs, dim=SIM.DIM))
     probes = vecs.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
@@ -116,9 +117,7 @@ def test_cells_ranked_column_offset_matches_string_path(spark, sf_dir):
     subspace) exactly as the SQL-text branch does."""
     e = load_table(spark, sf_dir, "embeddings").limit(50)
     vecs = e.select("vec_id", SIM.as_double_vec("embedding").alias("v"))
-    books = PQ.train_codebooks(
-        vecs, dim=SIM.DIM, cache_key=None, m=4, iters=1
-    )
+    books = PQ.train_codebooks(vecs, dim=SIM.DIM, m=4, iters=1)
     sub = SIM.DIM // 4
     for i, book in enumerate(books[:2]):
         via_str = vecs.select(

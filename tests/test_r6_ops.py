@@ -132,15 +132,6 @@ def test_bpe_token_counts_shape(spark):
     assert out[2]["ws_tokens"] == 1 and out[2]["bpe_tokens"] == 1
 
 
-def test_bpe_learn_memoizes(spark, sf_dir):
-    from flash_cdc_spark.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    a = TOK.learn_first_merges(d, k=5, cache_key=sf_dir)
-    assert len(a) == 5 and all(len(m) == 2 for m in a)
-    assert TOK.learn_first_merges(d, k=5, cache_key=sf_dir) is a  # memo hit
-
-
 # --- URL canonicalization --------------------------------------------
 
 

@@ -214,7 +214,7 @@ def measure_semdedup(vecs: DataFrame, k: int) -> dict:
     ).localCheckpoint(eager=True)
     n = vecs.count()
     t0 = time.perf_counter()
-    centers = IVF.train_kmeans(vecs, k=k)  # no cache_key: probe trains fresh
+    centers = IVF.train_kmeans(vecs, k=k)
     assigned = vecs.select(
         "vec_id",
         "v",
@@ -1184,10 +1184,7 @@ def main() -> int:
         from flash_cdc_spark.queries.analytics_ext3 import (
             q_graph_bipartite_projection,
         )
-        from flash_cdc_spark.queries.quality_ext2 import (
-            _NB_STATE,
-            q_quality_nb_classifier,
-        )
+        from flash_cdc_spark.queries.quality_ext2 import q_quality_nb_classifier
 
         for reps in (1, 2, 4, 8):
             docs = synth_corpus(spark, sf_dir, reps)
@@ -1198,7 +1195,6 @@ def main() -> int:
                     "reps": reps,
                     "n_docs": spark.read.parquet(f"{d}/documents.parquet").count(),
                 }
-                _NB_STATE.pop(d, None)
                 t0 = time.perf_counter()
                 q_quality_nb_classifier(spark, d).count()
                 r["nb_cold_sec"] = round(time.perf_counter() - t0, 2)
