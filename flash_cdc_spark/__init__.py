@@ -8,6 +8,7 @@ pipeline operators a 100 TB training-data platform needs.
 Layout:
 
 - :mod:`flash_cdc_spark.session`    — SparkSession factory (AQE, Arrow, tuned shuffles)
+- :mod:`flash_cdc_spark.worker_daemon` — Python worker-daemon bootstrap (no per-task archive re-reads)
 - :mod:`flash_cdc_spark.schemas`    — canonical StructTypes (event envelope, config tables)
 - :mod:`flash_cdc_spark.tables`     — test-table catalog loader
 - :mod:`flash_cdc_spark.artifacts`  — stored per-corpus index tables, trained state + per-session plan memo

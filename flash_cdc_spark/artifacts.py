@@ -19,8 +19,10 @@ recomputes every consumer from raw data).
   60 µs per call on a ten-table corpus (4-vCPU VM).
 - **Lifetime:** one parquet directory per key per process, under
   ``tempfile.mkdtemp(prefix=f"flash_{kind}_")``; ``atexit`` removes
-  it. A write that raises removes its directory at once and records
-  nothing, so the next call builds again.
+  it. A build for a new identity of ``(kind, corpus)`` removes the
+  entry and directory of the old one. A write that raises removes its
+  directory at once and records nothing, so the next call builds
+  again.
 - **Builder:** a zero-argument callable returning the CANONICAL
   full-corpus table for ``(corpus, kind)``. It is called only on a
   miss: constructing the expression tree is itself Spark-client py4j
@@ -36,7 +38,8 @@ centers, PQ codebooks, BPE merges, classifier weights, profile rows.
 
 - **Key:** ``(kind, corpus, identity)``, the identity exactly as for
   :func:`stored`, so a rewritten corpus is trained afresh.
-- **Lifetime:** the process; the value lives in driver memory.
+- **Lifetime:** the process, until a new identity of ``(kind,
+  corpus)`` is trained; the value lives in driver memory.
 - **Train:** a zero-argument callable run only on a miss. It returns
   a driver-side value, trained on the CANONICAL full-corpus input for
   ``kind`` (one fixed set of hyper-parameters per kind). A ``train``
@@ -74,6 +77,14 @@ def _identity(corpus: str) -> tuple:
     from flash_cdc_spark.tables import _stat_key
 
     return tuple(_stat_key(os.path.join(corpus, n)) for n in sorted(os.listdir(corpus)))
+
+
+def _supersede(memo: dict[tuple, T], key: tuple) -> list[T]:
+    """Remove and return the entries of ``memo`` for ``key``'s kind and
+    corpus under any other identity: a rewritten corpus never reverts
+    to an old identity, so they can no longer be served."""
+    old = [k for k in memo if k[:2] == key[:2] and k != key]
+    return [memo.pop(k) for k in old]
 
 
 def session_memo(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
@@ -119,6 +130,9 @@ def stored(
         atexit.register(shutil.rmtree, layout, ignore_errors=True)
         _STORED[key] = layout
         spark = built.sparkSession
+        for old in _supersede(_STORED, key):
+            shutil.rmtree(old, ignore_errors=True)
+            getattr(spark, "_flash_memo", {}).pop(("stored", old), None)
     else:
         # getActiveSession() is thread-local in classic PySpark: a hit
         # from a non-main thread (admin HTTP handler, streaming
@@ -136,4 +150,5 @@ def trained(corpus: str, kind: str, train: Callable[[], T]) -> T:
         # no lock: training is deterministic, so two threads that miss
         # together record equal values
         _TRAINED[key] = train()
+        _supersede(_TRAINED, key)
     return _TRAINED[key]

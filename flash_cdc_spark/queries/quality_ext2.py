@@ -109,7 +109,7 @@ def q_quality_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multinomial Naive Bayes source classifier, trained AND applied
     relationally (McCallum & Nigam 1998): class priors and Laplace-
     smoothed word likelihoods are count aggregates, scoring is one
-    join-aggregate, prediction is an argmax window — no solver, no
+    join-aggregate, prediction is a row-local argmax — no solver, no
     Python in the loop. Output is the source × predicted confusion
     matrix, the corpus-provenance audit ("which sources are textually
     confusable") that also validates any source-based mixture weights.
@@ -123,14 +123,17 @@ def q_quality_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 6 dp before the argmax (likelihoods to 9 dp at build) so
     add-order drift cannot flip a prediction.
 
-    Plan hygiene: the per-(doc, word) count relation is the
-    classifier's feature matrix — ``localCheckpoint`` truncates its
-    lineage so the three consumers (totals, vocab mass, scoring) reuse
-    one materialization instead of re-scanning the corpus (14 → 1
-    parquet scans in the apply plan, measured). The TRAINED state (likelihood table +
-    per-class defaults, ≈ sources×vocab rows, all 9-dp-rounded) is
-    memoized per corpus (``artifacts.trained``) like the logreg/IVF/BPE
-    state — repeat calls pay only the apply pass, the production shape.
+    Plan: training (``_train``) runs four driver-side actions — the
+    vocabulary count, the document count, the likelihood rows and the
+    per-class defaults. Each re-derives what it needs from fresh scans
+    of ``documents`` (the likelihood and defaults queries scan it more
+    than once); nothing is checkpointed. The TRAINED state (likelihood
+    table + per-class defaults, ≈ sources×vocab rows, all 9-dp-rounded)
+    is memoized per corpus (``artifacts.trained``) like the
+    logreg/IVF/BPE state, so repeat calls pay only the apply
+    plan: one scan of ``documents``, the per-(doc, word) counts joined
+    to one broadcast row per vocab word, the per-doc scores and the
+    confusion-matrix count (three aggregates).
     """
     d = load_table(spark, sf_dir, "documents")
     toks = (

@@ -18,6 +18,7 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
+from flash_cdc_spark import artifacts
 from flash_cdc_spark.artifacts import stored, trained
 from flash_cdc_spark.operators import tokenize as TOK
 from flash_cdc_spark.queries import QUERIES
@@ -164,6 +165,34 @@ def test_trained_rebuilds_after_corpus_rewrite(spark, tmp_path):
     d = load_table(spark, corpus, "documents")
     want = TOK.bpe_token_counts(d, TOK.learn_first_merges(d, k=_BPE_K))
     assert counts(got) == counts(want)
+
+
+def test_rewrite_evicts_superseded_identity(spark, tmp_path, monkeypatch):
+    """After a rewrite of the corpus, the next call replaces the entry
+    of the old identity: one trained value and one stored layout are
+    left, and the old layout's directory is gone."""
+    monkeypatch.setattr(artifacts, "_TRAINED", {})
+    monkeypatch.setattr(artifacts, "_STORED", {})
+    kind = "unit_superseded"
+    corpus = str(tmp_path)
+    path = os.path.join(corpus, "documents.parquet")
+    schema = "doc_id bigint, text string"
+
+    def build():
+        return load_table(spark, corpus, "documents")
+
+    spark.createDataFrame([(1, "a")], schema).write.parquet(path)
+    assert trained(corpus, kind, lambda: 1) == 1
+    stored(build, corpus, kind).collect()
+    (old_layout,) = artifacts._STORED.values()
+
+    spark.createDataFrame([(2, "b"), (3, "c")], schema).write.mode("overwrite").parquet(path)
+    assert trained(corpus, kind, lambda: 2) == 2
+    assert stored(build, corpus, kind).count() == 2
+    assert len(artifacts._TRAINED) == 1
+    assert len(artifacts._STORED) == 1
+    assert os.path.basename(old_layout).startswith(f"flash_{kind}_")
+    assert not os.path.exists(old_layout)
 
 
 def _plan_shape(df) -> str:
