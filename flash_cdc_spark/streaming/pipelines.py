@@ -9,8 +9,10 @@
   errors (1 s ×2 capped 60 s — ``listener_manager.py:96-97``), stop on
   fatal config errors (C7 classification, ``sf_pubsub.py:33-35``),
   alert hook on fatal/terminated (K4),
-- R7 invalid-replay recovery: a corrupted checkpoint is cleared and the
-  pipeline restarts from earliest (``sf_pubsub.py:468-479``),
+- R7 invalid-replay recovery: a corrupted checkpoint (a known error
+  signature, a latest offsets/commits entry that does not parse, or a
+  checksum error on a checkpoint file) is cleared and the pipeline
+  restarts from earliest (``sf_pubsub.py:468-479``),
 - status snapshots shaped like the reference's listener status dict
   (C6, ``sf_pubsub.py:382-400``).
 """
@@ -20,6 +22,7 @@ from __future__ import annotations
 import json
 import logging
 import os
+import re
 import threading
 import time
 from collections.abc import Callable
@@ -63,6 +66,14 @@ STREAM_SCHEMA = T.StructType(
     list(DECODED_CHANGE_EVENT.fields) + [T.StructField("replay_seq", T.LongType())]
 )
 
+# Per-micro-batch phases of the last progress that ``status()`` reports:
+# source, planning, the foreachBatch delivery and the two checkpoint
+# writes (write-ahead offsets, commit) inside the whole trigger.
+DURATION_KEYS = (
+    "latestOffset", "walCommit", "queryPlanning", "addBatch", "commitOffsets",
+    "triggerExecution",
+)
+
 FATAL_MARKERS = ("UNAUTHENTICATED", "PERMISSION_DENIED", "NOT_FOUND", "invalid_client")
 
 # R7 corrupt-cursor signatures — deliberately NARROW. These are the
@@ -84,6 +95,51 @@ def is_cursor_corruption(exc: BaseException) -> bool:
     (→ safe to clear the cursor and restart from earliest)."""
     msg = str(exc).lower()
     return any(m in msg for m in CURSOR_CORRUPTION_MARKERS)
+
+
+def _log_entry_parses(path: str) -> bool:
+    """True iff ``path`` reads as a Spark metadata-log entry: a ``v<k>``
+    version line, then one JSON value or ``-`` per line."""
+    try:
+        with open(path, encoding="utf-8") as f:
+            lines = f.read().split("\n")
+    except (OSError, UnicodeDecodeError):
+        return False
+    if lines[-1] == "":  # Spark's line reader accepts a trailing newline
+        lines.pop()
+    if not lines or not re.fullmatch(r"v\d+", lines[0]):
+        return False
+    for line in lines[1:]:
+        if line == "-":
+            continue
+        try:
+            json.loads(line)
+        except ValueError:
+            return False
+    return True
+
+
+def checkpoint_is_corrupt(checkpoint_dir: str, exc: BaseException) -> bool:
+    """R7 beyond the message markers: True iff the latest ``offsets/<n>``
+    or ``commits/<n>`` under ``checkpoint_dir`` does not parse, or
+    ``exc`` is a checksum error naming a file under ``checkpoint_dir``.
+
+    Spark reports such a file with whatever its reader threw (a Jackson
+    ``JsonParseException``, or Hadoop's ``Checksum error: file:…`` when
+    the ``.crc`` no longer matches), so the supervisor asks the files
+    themselves rather than widening the markers."""
+    root = os.path.abspath(checkpoint_dir)
+    msg = str(exc)
+    if "checksum error" in msg.lower() and root + os.sep in msg:
+        return True
+    for log in ("offsets", "commits"):
+        try:
+            batches = [int(n) for n in os.listdir(os.path.join(root, log)) if n.isdigit()]
+        except OSError:
+            continue
+        if batches and not _log_entry_parses(os.path.join(root, log, str(max(batches)))):
+            return True
+    return False
 
 
 def classify_error(exc: BaseException) -> bool:
@@ -294,7 +350,9 @@ class PipelineManager:
                     sup.fatal = True
                     self.alert(sup.config.id, f"fatal: {exc}")
                     return
-                if is_cursor_corruption(exc):
+                if is_cursor_corruption(exc) or checkpoint_is_corrupt(
+                    sup.config.checkpoint_dir(), exc
+                ):
                     # R7: corrupt/invalid cursor → clear + restart earliest
                     apply_replay_start(
                         ReplayStart(True, None, None), sup.config.checkpoint_dir()
@@ -411,6 +469,10 @@ class PipelineManager:
             "observed": ((progress or {}).get("observedMetrics") or {}).get(
                 "pipeline_metrics"
             ),
+            "durations_ms": {
+                k: v for k, v in ((progress or {}).get("durationMs") or {}).items()
+                if k in DURATION_KEYS
+            },
         }
 
     def status_all(self) -> dict[int, dict]:

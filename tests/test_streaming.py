@@ -13,6 +13,7 @@ import pytest
 
 from flash_cdc_spark.sources.changelog import ReplayArgs, encode_seq
 from flash_cdc_spark.streaming.pipelines import (
+    DURATION_KEYS,
     PipelineConfig,
     PipelineManager,
     STREAM_SCHEMA,
@@ -112,6 +113,9 @@ def test_pipeline_end_to_end_delivery(spark, tmp_path, webhook_server):
     assert _delivered_ids(webhook_server) == ["a1", "b1"]
     status = mgr.status(1)
     assert status["status"] == "stopped" and status["batches_seen"] >= 1
+    # the last micro-batch's phase split, straight from lastProgress
+    assert set(status["durations_ms"]) == set(DURATION_KEYS)
+    assert status["durations_ms"]["triggerExecution"] > 0
 
 
 def test_failed_batch_replays_after_restart(spark, tmp_path, webhook_server):
@@ -750,6 +754,161 @@ def test_pipeline_from_flashfeed_latest_mode_skips_existing(spark, tmp_path, web
     # latest resolves the cursor at start(): max seq = 2 → every
     # pre-existing line is skipped, nothing delivered
     assert _delivered_ids(webhook_server) == []
+
+
+def _latest_entry(log_dir):
+    return max((n for n in os.listdir(log_dir) if n.isdigit()), key=int)
+
+
+@pytest.mark.smoke
+@pytest.mark.parametrize("crc", ["kept", "removed"])
+def test_corrupt_offsets_entry_recovers_from_earliest(spark, tmp_path, webhook_server, crc):
+    """R7 on a corrupt write-ahead log: a flashfeed pipeline delivers and
+    stops, then its latest ``offsets/<n>`` is overwritten with garbage.
+    Spark's read fails with a checksum error (stale ``.crc`` kept) or a
+    JSON parse error (``.crc`` removed), neither of which is a known
+    marker; the supervisor finds the entry unparseable, clears the
+    checkpoint, and the stored-mode restart replays every record."""
+    from flash_cdc_spark.sources.flashfeed import append_events
+
+    log = str(tmp_path / "feed.jsonl")
+    append_events(log, [_envelope_line(seq, [f"k{seq}"], flag="true") for seq in range(6)])
+    config = _mk_config(tmp_path, webhook_server, pid=50)
+    config.source_path = log
+    config.source_format = "flashfeed"
+    config.flow_batch_size = 3
+    mgr = PipelineManager(spark, retry_policy=FAST_POLICY)
+    mgr.start(config)
+    mgr.wait(50, timeout_s=120)
+    expected = sorted(f"k{seq}" for seq in range(6))
+    assert _delivered_ids(webhook_server) == expected
+
+    offsets = os.path.join(config.checkpoint_dir(), "offsets")
+    latest = _latest_entry(offsets)
+    with open(os.path.join(offsets, latest), "w") as f:
+        f.write("v1\n{garbage")
+    if crc == "removed":
+        os.remove(os.path.join(offsets, f".{latest}.crc"))
+    webhook_server.requests.clear()
+    mgr2 = PipelineManager(
+        spark, retry_policy=FAST_POLICY, backoff_initial_s=0.05, backoff_cap_s=0.1
+    )
+    mgr2.start(config, ReplayArgs(mode="stored"))
+    try:
+        mgr2.wait(50, timeout_s=120)
+        status = mgr2.status(50)
+        assert _delivered_ids(webhook_server) == expected
+        assert status["status"] == "stopped" and status["restarts"] == 1
+    finally:
+        mgr2.stop(50)
+
+
+def test_checkpoint_corruption_reads_the_files(tmp_path):
+    """R7's file probe: only the latest offsets/commits entry is read, a
+    ``v<k>`` line then JSON or ``-`` per line parses, and a checksum
+    error counts only when it names a file under this checkpoint."""
+    from flash_cdc_spark.streaming.pipelines import checkpoint_is_corrupt
+
+    ckpt = tmp_path / "pipeline-1"
+    transient = RuntimeError("connection reset by peer")
+    assert not checkpoint_is_corrupt(str(ckpt), transient)  # no checkpoint yet
+    (ckpt / "offsets").mkdir(parents=True)
+    (ckpt / "commits").mkdir()
+    (ckpt / "offsets" / "0").write_text('v1\n{"batchWatermarkMs":0}\n{"seq":3}')
+    (ckpt / "offsets" / "1").write_text('v1\n{"batchWatermarkMs":0}\n-')
+    (ckpt / "commits" / "0").write_text('v1\n{"nextBatchWatermarkMs":0}')
+    (ckpt / "offsets" / ".1.crc").write_bytes(b"\x00garbage")
+    assert not checkpoint_is_corrupt(str(ckpt), transient)
+
+    def named(path):
+        return RuntimeError(f"Checksum error: file:{path} at 0 exp: 1 got: 2")
+
+    assert checkpoint_is_corrupt(str(ckpt), named(ckpt / "offsets" / "1"))
+    assert not checkpoint_is_corrupt(str(ckpt), named(tmp_path / "pipeline-10" / "offsets" / "1"))
+    assert not checkpoint_is_corrupt(str(ckpt), RuntimeError("Checksum error: elsewhere"))
+
+    (ckpt / "commits" / "1").write_text("")
+    assert checkpoint_is_corrupt(str(ckpt), transient)
+    (ckpt / "commits" / "1").write_text('v1\n{"nextBatchWatermarkMs":0}')
+    (ckpt / "offsets" / "2").write_text("v1\n{garbage")
+    assert checkpoint_is_corrupt(str(ckpt), transient)
+    (ckpt / "offsets" / "2").write_text('{"seq":3}')  # no version line
+    assert checkpoint_is_corrupt(str(ckpt), transient)
+    (ckpt / "offsets" / "3").write_text('v1\n{"batchWatermarkMs":0}\n{"seq":4}')
+    assert not checkpoint_is_corrupt(str(ckpt), transient)  # latest parses
+
+
+def test_crash_between_delivery_and_commit_redelivers_last_batch(
+    spark, tmp_path, webhook_server
+):
+    """A crash after the last batch was delivered and mirrored but before
+    Spark wrote its commit (simulated by deleting ``commits/<last>`` and
+    its ``.crc``): the stored-mode restart re-runs that batch from its
+    write-ahead offsets. Its records are delivered again, earlier
+    batches' are not, and its mirror row is rewritten, not duplicated."""
+    src = str(tmp_path / "source")
+    for seq in (1, 2, 3):  # one file → one micro-batch each
+        _write_events(spark, src, [_event_row(seq, [f"c{seq}"], flag="true")])
+    config = _mk_config(tmp_path, webhook_server, pid=51)
+    config.offsets_path = str(tmp_path / "offsets")
+    mgr = PipelineManager(spark, retry_policy=FAST_POLICY)
+    mgr.start(config)
+    mgr.wait(51, timeout_s=120)
+    assert _delivered_ids(webhook_server) == ["c1", "c2", "c3"]
+
+    commits = os.path.join(config.checkpoint_dir(), "commits")
+    last = _latest_entry(commits)
+    assert last == "2"
+    part = os.path.join(config.offsets_path, f"batch_id={last}")
+    before = set(os.listdir(part))
+    os.remove(os.path.join(commits, last))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    webhook_server.requests.clear()
+    mgr2 = PipelineManager(spark, retry_policy=FAST_POLICY)
+    mgr2.start(config, ReplayArgs(mode="stored"))
+    mgr2.wait(51, timeout_s=120)
+
+    mirror = _read_mirror(spark, config.offsets_path)
+    assert [r["batch_id"] for r in mirror] == [0, 1, 2]
+    assert _delivered_ids(webhook_server) == [f"c{mirror[2]['last_replay_seq']}"]
+    assert (mirror[2]["n_events"], mirror[2]["n_delivered"]) == (1, 1)
+    assert before and not before & set(os.listdir(part))
+    assert _latest_entry(commits) == last
+
+
+def test_filecontext_checkpoint_resumes_under_filesystem_manager(
+    spark, tmp_path, webhook_server
+):
+    """A checkpoint written through Spark's FileContext-based manager
+    resumes under the session default (the FileSystem-based manager):
+    the stored-mode restart delivers only the new record and the batch
+    ids continue. The old manager is set on a new session, whose SQL
+    conf is its own, so the shared session's conf is untouched."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
+    old = spark.newSession()
+    old.conf.set(key, pkg + "FileContextBasedCheckpointFileManager")
+    src = str(tmp_path / "source")
+    for seq in (1, 2):
+        _write_events(spark, src, [_event_row(seq, [f"m{seq}"], flag="true")])
+    config = _mk_config(tmp_path, webhook_server, pid=52)
+    config.offsets_path = str(tmp_path / "offsets")
+    mgr = PipelineManager(old, retry_policy=FAST_POLICY)
+    mgr.start(config)
+    mgr.wait(52, timeout_s=120)
+    assert _delivered_ids(webhook_server) == ["m1", "m2"]
+
+    _write_events(spark, src, [_event_row(3, ["m3"], flag="true")])
+    webhook_server.requests.clear()
+    assert spark.conf.get(key) == pkg + "FileSystemBasedCheckpointFileManager"
+    mgr2 = PipelineManager(spark, retry_policy=FAST_POLICY)
+    mgr2.start(config, ReplayArgs(mode="stored"))
+    mgr2.wait(52, timeout_s=120)
+    assert _delivered_ids(webhook_server) == ["m3"]
+    mirror = _read_mirror(spark, config.offsets_path)
+    assert [(r["batch_id"], r["last_replay_seq"]) for r in mirror] == [(0, 1), (1, 2), (2, 3)]
+    commits = os.path.join(config.checkpoint_dir(), "commits")
+    assert sorted(n for n in os.listdir(commits) if n.isdigit()) == ["0", "1", "2"]
 
 
 def test_post_classified_permanent_vs_transient():
