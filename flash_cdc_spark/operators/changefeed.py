@@ -44,6 +44,7 @@ __all__ = [
     "align_positional",
     "filter_flagged",
     "project_webhook_payload",
+    "changefeed_with_delivery_flag",
     "changefeed_pipeline",
 ]
 
@@ -144,19 +145,15 @@ def changefeed_with_delivery_flag(
     passthrough: tuple[str, ...] = ("replay_seq",),
 ) -> DataFrame:
     """Variant that KEEPS dropped rows with a ``deliver`` flag instead of
-    filtering them — the shape the offset-mirroring sink needs: the
+    filtering them — the shape every pipeline's webhook sink reads: the
     reference advances the replay cursor for since-dropped, empty-ids,
     and flag-false events alike (``sf_pubsub.py:621-668``, ``752-780``),
     so the sink must see every event's cursor even when nothing is
     posted. Uses ``posexplode_outer`` so empty/null ``recordIds`` events
-    survive as one non-deliverable row."""
-    df = decoded.withColumns(
-        {
-            "entity_name": F.col(f"{HEADER}.entityName"),
-            "change_type": F.col(f"{HEADER}.changeType"),
-            "commit_ms": normalize_commit_ms(F.col(f"{HEADER}.commitTimestamp")),
-        }
-    )
+    survive as one non-deliverable row (the only rows whose
+    ``record_pos`` is null); a null element inside ``recordIds`` is
+    delivered as ``{"Id": null}``, as in :func:`changefeed_pipeline`."""
+    df = normalize_header(decoded)
     since_ok = (
         F.lit(True)
         if drop_before_ms is None
@@ -171,7 +168,7 @@ def changefeed_with_delivery_flag(
     ).withColumn("flag_norm", truthy_flag(F.col("flag_value")))
     deliver = (
         since_ok
-        & F.col("record_id").isNotNull()
+        & F.col("record_pos").isNotNull()
         & F.col("flag_norm").eqNullSafe(F.lit(True))
     )
     df = df.withColumn("deliver", deliver)

@@ -31,10 +31,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from flash_cdc_spark.operators.changefeed import (
-    changefeed_pipeline,
-    changefeed_with_delivery_flag,
-)
+from flash_cdc_spark.operators.changefeed import changefeed_with_delivery_flag
 from flash_cdc_spark.schemas import DECODED_CHANGE_EVENT
 from flash_cdc_spark.sources.changelog import (
     ReplayArgs,
@@ -45,8 +42,9 @@ from flash_cdc_spark.sources.changelog import (
 )
 from flash_cdc_spark.sources.flashfeed import feed_end_offset
 from flash_cdc_spark.streaming.webhook import (
+    RetryPolicy,
+    pooled_http_transport,
     webhook_batch_writer,
-    webhook_batch_writer_with_offsets,
 )
 
 import pyspark.sql.types as T
@@ -205,8 +203,8 @@ class PipelineManager:
         schema_registry=None,
     ) -> None:
         self.spark = spark
-        self.transport_factory = transport_factory
-        self.retry_policy = retry_policy
+        self.transport_factory = transport_factory or pooled_http_transport
+        self.retry_policy = retry_policy or RetryPolicy()
         if schema_registry is None:
             # default: every envelope decodes with the canonical change-
             # event schema (single-id registry → schema_id-agnostic)
@@ -267,44 +265,48 @@ class PipelineManager:
                 replay=replay,
                 max_files_per_trigger=max(1, config.flow_batch_size // 100),
             )
-        sink_kwargs = {}
-        if self.transport_factory:
-            sink_kwargs["transport_factory"] = self.transport_factory
-        if self.retry_policy:
-            sink_kwargs["policy"] = self.retry_policy
-        if config.offsets_path:
-            # K2 mirror: keep dropped rows (deliver flag) so the offset
-            # row advances even for all-filtered batches
-            delivered = changefeed_with_delivery_flag(
-                source, config.topic, config.instance_url,
-                drop_before_ms=replay.drop_before_ms,
-            )
-            batch_fn = webhook_batch_writer_with_offsets(
-                config.webhook_url,
-                config.offsets_path,
-                config.id,
-                config.topic,
-                **sink_kwargs,
-            )
-        else:
-            delivered = changefeed_pipeline(
-                source, config.topic, config.instance_url,
-                drop_before_ms=replay.drop_before_ms,
-            )
-            batch_fn = webhook_batch_writer(config.webhook_url, **sink_kwargs)
+        # every event keeps one row with a ``deliver`` flag, so the
+        # offset mirror advances even for all-filtered batches
+        flagged = changefeed_with_delivery_flag(
+            source, config.topic, config.instance_url,
+            drop_before_ms=replay.drop_before_ms,
+        )
         # C6 custom metrics: per-batch delivered-row count surfaces in
         # lastProgress["observedMetrics"]["pipeline_metrics"]
-        delivered = delivered.observe(
-            "pipeline_metrics", F.count(F.lit(1)).alias("rows_out")
+        flagged = flagged.observe(
+            "pipeline_metrics", F.count_if(F.col("deliver")).alias("rows_out")
+        )
+        batch_fn = webhook_batch_writer(
+            config.webhook_url,
+            self.transport_factory,
+            self.retry_policy,
+            mirror=(
+                (config.offsets_path, config.id, config.topic)
+                if config.offsets_path else None
+            ),
         )
         sup = self._pipelines[config.id]
 
         def _counting_batch_fn(df, batch_id):
-            batch_fn(df, batch_id)
+            try:
+                batch_fn(df, batch_id)
+            except Exception as exc:
+                if not sup.stop_event.is_set():
+                    raise
+                # stop() cancelled this batch's job. Spark decides whether
+                # a foreachBatch error means "interrupted by stop" with a
+                # regex whose repeated alternation recurses once per
+                # character, so the long Py4J traceback of a cancelled job
+                # overflowed the stream thread's stack; a short error
+                # without the chained traceback keeps the stop orderly.
+                raise RuntimeError(
+                    f"pipeline {config.id}: micro-batch {batch_id} stopped before "
+                    f"it committed ({type(exc).__name__}); it replays on restart"
+                ) from None
             sup.batches_seen += 1
 
         return (
-            delivered.writeStream.foreachBatch(_counting_batch_fn)
+            flagged.writeStream.foreachBatch(_counting_batch_fn)
             .queryName(f"pipeline-{config.id}")
             .option("checkpointLocation", config.checkpoint_dir())
             .trigger(**self.trigger)

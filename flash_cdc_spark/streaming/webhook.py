@@ -14,23 +14,35 @@ identical to the reference's).
 
 Scale design: posts run executor-side, one pooled connection per task —
 thousands of concurrent senders on a cluster — never a driver-side
-``collect()``. The plain writer posts from ``foreachPartition``; the
-offset-mirror and dead-letter writers post from an Arrow-batched
-``mapInPandas`` (the shared :func:`_post_batches` generator), whose output
-feeds the same job's write, so delivery, bookkeeping and the write are
-one Spark action per micro-batch. Per-record ordering within a partition
-matches the reference's sequential per-event loop; global ordering
-(which the reference also does not guarantee across clients) is not
-promised.
+``collect()`` of the payloads. There are two writers, and both post from
+an Arrow-batched ``mapInPandas`` pass (the shared :func:`_post_batches`
+generator): :func:`webhook_batch_writer` delivers the flagged change
+feed and yields one small summary per Arrow batch, which either feeds
+the offset mirror's write in the same job or is collected; the
+dead-letter writer yields the rejected payloads. Either way delivery
+and bookkeeping are one Spark action per micro-batch. Per-record
+ordering within a partition matches the reference's sequential
+per-event loop; global ordering (which the reference also does not
+guarantee across clients) is not promised.
+
+Why Arrow batches and not ``foreachPartition`` or pickled rows
+(4-vCPU host, no-op transport, 20 alternating reps, median [Q1, Q3]):
+on a 30-row micro-batch ``foreachPartition`` took 84.5 [81.0, 87.5] ms,
+``mapInPandas`` 93.2 [89.1, 102.9] ms and a pickled-row
+``rdd.mapPartitions`` 83.8 ms; on a 2,500-row mirrored batch
+``mapInPandas`` took 173 ms and pickled rows 184 ms. End to end
+(``perfbench`` ``cdc``, 10 alternating pairs, ``foreachPartition`` tail
+writer → this one) the merge is flat: ``latency_p50_ms`` 232 → 237,
+``throughput_per_s`` 2,840 → 2,930, ``cold_start_s`` 9.9 → 9.7, no
+pair failing. Pickled rows won tail latency (−11 %) but lost
+throughput (−5 % paired median) and cold start, and the mirror needs
+the Arrow summary path anyway, so one writer serves both.
 """
 
 from __future__ import annotations
 
-import json
 import random
 import time
-import urllib.error
-import urllib.request
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 
@@ -40,7 +52,6 @@ __all__ = [
     "RetryPolicy",
     "post_with_retry",
     "post_classified",
-    "http_transport",
     "pooled_http_transport",
     "webhook_batch_writer",
     "webhook_batch_writer_with_dlq",
@@ -65,23 +76,6 @@ class RetryPolicy:
     backoff_factor: float = 2.0
     backoff_cap_s: float = 30.0
     jitter_max_s: float = 0.25
-
-
-def http_transport(timeout_s: float = 15.0) -> Transport:
-    """Default stdlib transport: POST JSON, return status code."""
-
-    def _post(url: str, body: str) -> int:
-        req = urllib.request.Request(
-            url, data=body.encode("utf-8"), headers={"Content-Type": "application/json"},
-            method="POST",
-        )
-        try:
-            with urllib.request.urlopen(req, timeout=timeout_s) as resp:
-                return resp.status
-        except urllib.error.HTTPError as exc:  # non-2xx still yields a code
-            return exc.code
-
-    return _post
 
 
 def pooled_http_transport(timeout_s: float = 15.0) -> Transport:
@@ -174,6 +168,44 @@ def pooled_http_transport(timeout_s: float = 15.0) -> Transport:
     return _post
 
 
+def _permanent(status: int) -> bool:
+    """A final 3xx or a 4xx other than 429: a rejection that retries
+    cannot fix (malformed payload, revoked endpoint, redirect loop)."""
+    return 300 <= status < 500 and status != 429
+
+
+def _retrying_post(
+    transport: Transport,
+    url: str,
+    body: str,
+    policy: RetryPolicy = RetryPolicy(),
+    sleep: Callable[[float], None] = time.sleep,
+    permanent: Callable[[int], bool] = lambda status: False,
+) -> int:
+    """The K1 attempt loop: ≤max_attempts posts with capped exponential
+    backoff + jitter. Returns the status of the first 2xx or
+    ``permanent`` attempt (a transport error counts as status -1);
+    raises :class:`WebhookDeliveryError` once the attempts are
+    exhausted, so the task, the job and the micro-batch fail and the
+    batch replays (K3)."""
+    delay = policy.backoff_initial_s
+    status = -1
+    for attempt in range(1, policy.max_attempts + 1):
+        try:
+            status = transport(url, body)
+        except Exception:
+            status = -1
+        if 200 <= status < 300 or permanent(status):
+            return status
+        if attempt < policy.max_attempts:
+            sleep(min(delay, policy.backoff_cap_s) + random.uniform(0, policy.jitter_max_s))
+            delay *= policy.backoff_factor
+    raise WebhookDeliveryError(
+        f"webhook delivery failed after {policy.max_attempts} attempts "
+        f"(last status {status})"
+    )
+
+
 def post_with_retry(
     transport: Transport,
     url: str,
@@ -181,20 +213,13 @@ def post_with_retry(
     policy: RetryPolicy = RetryPolicy(),
     sleep: Callable[[float], None] = time.sleep,
 ) -> bool:
-    """K1: ≤max_attempts posts with capped exponential backoff + jitter;
-    True iff some attempt returned 2xx."""
-    delay = policy.backoff_initial_s
-    for attempt in range(1, policy.max_attempts + 1):
-        try:
-            status = transport(url, body)
-        except Exception:
-            status = -1
-        if 200 <= status < 300:
-            return True
-        if attempt < policy.max_attempts:
-            sleep(min(delay, policy.backoff_cap_s) + random.uniform(0, policy.jitter_max_s))
-            delay *= policy.backoff_factor
-    return False
+    """K1 as in the reference: every non-2xx retries; True iff some
+    attempt returned 2xx."""
+    try:
+        _retrying_post(transport, url, body, policy, sleep)
+    except WebhookDeliveryError:
+        return False
+    return True
 
 
 def post_classified(
@@ -206,54 +231,25 @@ def post_classified(
 ) -> int:
     """K1 variant for the DLQ path: returns the FINAL status code.
     2xx → delivered. 4xx other than 429 returns immediately — a
-    permanent rejection that retries cannot fix (malformed payload,
-    revoked endpoint). A FINAL 3xx is also permanent (ADVICE r5): the
+    permanent rejection. A FINAL 3xx is also permanent (ADVICE r5): the
     transport already followed up to 3 redirect hops, so a surviving
     3xx is a redirect loop or chain that retrying replays verbatim —
     exactly the wedge the DLQ exists to avoid. Transient failures
-    (5xx, 429, network errors) retry with the same backoff as
-    :func:`post_with_retry` and raise :class:`WebhookDeliveryError`
-    when exhausted, so the batch replays and at-least-once is
-    preserved for everything transient."""
-    delay = policy.backoff_initial_s
-    status = -1
-    for attempt in range(1, policy.max_attempts + 1):
-        try:
-            status = transport(url, body)
-        except Exception:
-            status = -1
-        if 200 <= status < 300:
-            return status
-        if 300 <= status < 500 and status != 429:
-            return status  # permanent — no retry, caller dead-letters
-        if attempt < policy.max_attempts:
-            sleep(min(delay, policy.backoff_cap_s) + random.uniform(0, policy.jitter_max_s))
-            delay *= policy.backoff_factor
-    raise WebhookDeliveryError(
-        f"transient webhook failure after {policy.max_attempts} attempts "
-        f"(last status {status})"
-    )
+    (5xx, 429, network errors) retry and raise
+    :class:`WebhookDeliveryError` when exhausted, so the batch replays
+    and at-least-once is preserved for everything transient."""
+    return _retrying_post(transport, url, body, policy, sleep, _permanent)
 
 
 def _make_transport(transport_factory, policy: "RetryPolicy") -> Transport:
-    """Build the transport, plumbing ``policy.timeout_s`` into the two
-    stock factories (they take a ``timeout_s`` argument; a custom
-    zero-arg factory — the test seam — is called as-is). Without this
-    the policy's timeout was silently ignored and the stock default
-    (15 s) applied regardless."""
-    if transport_factory in (http_transport, pooled_http_transport):
+    """Build the transport, plumbing ``policy.timeout_s`` into the stock
+    factory (it takes a ``timeout_s`` argument; a custom zero-arg
+    factory — the test seam — is called as-is). Without this the
+    policy's timeout was silently ignored and the stock default (15 s)
+    applied regardless."""
+    if transport_factory is pooled_http_transport:
         return transport_factory(policy.timeout_s)
     return transport_factory()
-
-
-def _post_or_fail(transport: Transport, url: str, body: str, policy: RetryPolicy) -> None:
-    """K1 + K3 for one record: :func:`post_with_retry`, raising
-    :class:`WebhookDeliveryError` when the retries are exhausted so the
-    task, the job and the micro-batch fail and the batch replays."""
-    if not post_with_retry(transport, url, body, policy):
-        raise WebhookDeliveryError(
-            f"webhook delivery failed after {policy.max_attempts} attempts"
-        )
 
 
 def _post_batches(
@@ -274,107 +270,40 @@ def _post_batches(
         yield pdf, [post(transport, url, body, policy) for body in bodies(pdf)]
 
 
-def webhook_batch_writer_with_dlq(
-    url: str,
-    dlq_path: str,
-    transport_factory: Callable[[], Transport] = pooled_http_transport,
-    policy: RetryPolicy = RetryPolicy(),
-    payload_col: str = "payload_json",
-):
-    """Poison-message isolation (beyond the reference — its K3
-    all-or-nothing commit means ONE permanently-rejected record wedges
-    the pipeline forever, replaying the same failing batch): records
-    the endpoint rejects with a non-retryable 4xx are routed to a
-    dead-letter parquet table and the batch COMMITS; transient
-    failures (5xx/429/network) still fail the batch after retries, so
-    at-least-once delivery is unchanged for everything recoverable.
-
-    Delivery runs executor-side in Arrow-batched ``mapInPandas`` (the
-    dead-letter relation is its output — usually empty); the DLQ write
-    lands in ``{dlq_path}/batch_id={id}`` with overwrite, so a batch
-    replay rewrites the same dead letters instead of duplicating them
-    (same idempotence device as the offsets mirror), and the DLQ table
-    reads back partitioned by batch_id."""
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        import pandas as pd
-
-        def deliver(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            posted = _post_batches(
-                batches, url, transport_factory, policy, post_classified,
-                lambda pdf: pdf[payload_col],
-            )
-            for pdf, statuses in posted:
-                dead = [
-                    (body, status)
-                    for body, status in zip(pdf[payload_col], statuses)
-                    if not (200 <= status < 300)
-                ]
-                yield pd.DataFrame(dead, columns=[payload_col, "status"])
-
-        dead = batch_df.select(payload_col).mapInPandas(
-            deliver, schema=f"`{payload_col}` string, status int"
-        )
-        dead.write.mode("overwrite").parquet(f"{dlq_path}/batch_id={batch_id}")
-
-    return _batch_fn
+Mirror = tuple[str, int, str]  # (offsets_path, pipeline_id, topic)
 
 
 def webhook_batch_writer(
     url: str,
     transport_factory: Callable[[], Transport] = pooled_http_transport,
     policy: RetryPolicy = RetryPolicy(),
-    payload_col: str = "payload_json",
+    mirror: Mirror | None = None,
 ):
-    """Build the ``foreachBatch`` function delivering each row's payload.
-
-    All-or-nothing per micro-batch (K3): the first exhausted-retry record
-    raises :class:`WebhookDeliveryError` from its executor task; the
-    batch function re-raises → Structured Streaming does not commit the
-    offsets → the batch replays on restart.
-    """
-
-    def _deliver_partition(rows: Iterator) -> None:
-        transport = _make_transport(transport_factory, policy)
-        for row in rows:
-            _post_or_fail(transport, url, row[payload_col], policy)
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select(payload_col).foreachPartition(_deliver_partition)
-
-    return _batch_fn
-
-
-def webhook_batch_writer_with_offsets(
-    url: str,
-    offsets_path: str,
-    pipeline_id: int,
-    topic: str,
-    transport_factory: Callable[[], Transport] = pooled_http_transport,
-    policy: RetryPolicy = RetryPolicy(),
-    payload_col: str = "payload_json",
-    deliver_col: str = "deliver",
-    seq_col: str = "replay_seq",
-):
-    """K2 variant: posts only rows flagged ``deliver`` and, once the
-    whole batch delivered, writes a *queryable offset mirror* row
-    ``(pipeline_id, topic, batch_id, last_replay_seq, n_events,
-    n_delivered)`` to a parquet table — the reference's Postgres
-    ``listener_offsets`` store (``sf_pubsub.py:104-176``) made
-    queryable. The authoritative cursor remains Spark's checkpoint (R6).
+    """Build the ``foreachBatch`` function delivering a micro-batch of the
+    flagged change feed (``deliver``, ``payload_json``, ``replay_seq``;
+    see ``changefeed_with_delivery_flag``).
 
     One Spark action per micro-batch: a ``mapInPandas`` pass posts the
-    flagged rows in partition order and yields one ``(last_seq,
-    n_events, n_delivered)`` summary per Arrow batch; a global
-    aggregate folds the summaries into the mirror row (a batch with no
-    events yields none); the same job writes it. The aggregate is a
-    shuffle boundary, so the write stage starts only after EVERY
-    delivery task has succeeded: an exhausted retry fails its task and
-    the job before any mirror row exists, ``foreachBatch`` raises, and
-    the checkpoint does not commit → the batch replays (K3). The write
-    is a per-write dynamic partition overwrite of ``batch_id={id}``, so
-    a replayed batch replaces its own row and never touches earlier
-    batches' rows."""
+    ``deliver`` rows in partition order and yields one ``(last_seq,
+    n_events, n_delivered)`` summary per Arrow batch. All-or-nothing
+    per micro-batch (K3): the first exhausted-retry record raises
+    :class:`WebhookDeliveryError` from its executor task; the batch
+    function re-raises → Structured Streaming does not commit the
+    offsets → the batch replays on restart.
+
+    Without a ``mirror`` the action collects the summaries. With
+    ``mirror = (offsets_path, pipeline_id, topic)`` (K2) a global
+    aggregate folds the summaries into a *queryable offset mirror* row
+    ``(pipeline_id, topic, batch_id, last_replay_seq, n_events,
+    n_delivered)`` (a batch with no events yields none) and the same
+    job writes it to a parquet table — the reference's Postgres
+    ``listener_offsets`` store (``sf_pubsub.py:104-176``) made
+    queryable; the authoritative cursor remains Spark's checkpoint
+    (R6). The aggregate is a shuffle boundary, so the write stage
+    starts only after EVERY delivery task has succeeded: a failed batch
+    leaves no mirror row. The write is a per-write dynamic partition
+    overwrite of ``batch_id={id}``, so a replayed batch replaces its
+    own row and never touches earlier batches' rows."""
     from pyspark.sql import functions as F
 
     def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
@@ -382,20 +311,24 @@ def webhook_batch_writer_with_offsets(
 
         def deliver(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
             posted = _post_batches(
-                batches, url, transport_factory, policy, _post_or_fail,
-                lambda pdf: pdf.loc[pdf[deliver_col].fillna(False).astype(bool), payload_col],
+                batches, url, transport_factory, policy, _retrying_post,
+                lambda pdf: pdf.loc[pdf["deliver"].fillna(False).astype(bool), "payload_json"],
             )
             for pdf, delivered in posted:
                 if len(pdf):
                     yield pd.DataFrame({
-                        "last_seq": [pdf[seq_col].max()],
+                        "last_seq": [pdf["replay_seq"].max()],
                         "n_events": [len(pdf)],
                         "n_delivered": [len(delivered)],
                     })
 
-        summaries = batch_df.select(deliver_col, payload_col, seq_col).mapInPandas(
+        summaries = batch_df.select("deliver", "payload_json", "replay_seq").mapInPandas(
             deliver, schema="last_seq long, n_events long, n_delivered long"
         )
+        if mirror is None:
+            summaries.collect()
+            return
+        offsets_path, pipeline_id, topic = mirror
         (
             summaries.agg(
                 F.max("last_seq").alias("last_replay_seq"),
@@ -420,12 +353,48 @@ def webhook_batch_writer_with_offsets(
     return _batch_fn
 
 
-def collecting_batch_writer(sink: list):
-    """Test/debug sink: append (batch_id, rows) to a driver-side list.
-    JSON-serializes rows so assertions don't hold Row objects."""
+def webhook_batch_writer_with_dlq(
+    url: str,
+    dlq_path: str,
+    transport_factory: Callable[[], Transport] = pooled_http_transport,
+    policy: RetryPolicy = RetryPolicy(),
+):
+    """Build the ``foreachBatch`` function delivering each row's
+    ``payload_json`` with poison-message isolation (beyond the
+    reference — its K3 all-or-nothing commit means ONE
+    permanently-rejected record wedges the pipeline forever, replaying
+    the same failing batch): records the endpoint rejects with a
+    non-retryable 4xx are routed to a dead-letter parquet table and the
+    batch COMMITS; transient failures (5xx/429/network) still fail the
+    batch after retries, so at-least-once delivery is unchanged for
+    everything recoverable.
+
+    Delivery runs executor-side in Arrow-batched ``mapInPandas`` (the
+    dead-letter relation is its output — usually empty); the DLQ write
+    lands in ``{dlq_path}/batch_id={id}`` with overwrite, so a batch
+    replay rewrites the same dead letters instead of duplicating them
+    (same idempotence device as the offsets mirror), and the DLQ table
+    reads back partitioned by batch_id."""
 
     def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        sink.append((batch_id, [json.loads(r) for r in
-                                [row["payload_json"] for row in batch_df.collect()]]))
+        import pandas as pd
+
+        def deliver(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+            posted = _post_batches(
+                batches, url, transport_factory, policy, post_classified,
+                lambda pdf: pdf["payload_json"],
+            )
+            for pdf, statuses in posted:
+                dead = [
+                    (body, status)
+                    for body, status in zip(pdf["payload_json"], statuses)
+                    if not (200 <= status < 300)
+                ]
+                yield pd.DataFrame(dead, columns=["payload_json", "status"])
+
+        dead = batch_df.select("payload_json").mapInPandas(
+            deliver, schema="payload_json string, status int"
+        )
+        dead.write.mode("overwrite").parquet(f"{dlq_path}/batch_id={batch_id}")
 
     return _batch_fn

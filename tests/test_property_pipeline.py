@@ -8,7 +8,10 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from flash_cdc_spark.operators.changefeed import changefeed_pipeline
+from flash_cdc_spark.operators.changefeed import (
+    changefeed_pipeline,
+    changefeed_with_delivery_flag,
+)
 from flash_cdc_spark.schemas import DECODED_CHANGE_EVENT
 
 # ---- python oracle (transcribed reference semantics) ----------------------
@@ -60,7 +63,12 @@ def python_oracle(events, drop_before_ms=None):
                 flag = scalar
             if _truthy(flag) is True:
                 delivered.append((rid, idx, commit_ms))
-    return sorted(delivered)
+    return sorted(delivered, key=_null_first)
+
+
+def _null_first(row):
+    """Sort key for rows that may hold None: None sorts before values."""
+    return tuple((v is not None, v) for v in row)
 
 
 # ---- strategies ------------------------------------------------------------
@@ -87,7 +95,8 @@ def events_strategy(draw):
     events = []
     for i in range(n):
         n_ids = draw(st.integers(min_value=0, max_value=4))
-        ids = [f"r{i}_{k}" for k in range(n_ids)]
+        # a null element inside recordIds is delivered as {"Id": null}
+        ids = [draw(st.sampled_from([f"r{i}_{k}", None])) for k in range(n_ids)]
         use_arr = draw(st.booleans())
         if use_arr:
             arr_len = draw(st.integers(min_value=0, max_value=5))
@@ -120,13 +129,22 @@ def events_strategy(draw):
 )
 @given(events=events_strategy(), use_cutoff=st.booleans())
 def test_pipeline_matches_python_oracle(spark, events, use_cutoff):
+    """Both plans deliver the oracle's records: the filtered
+    ``changefeed_pipeline`` and the flagged plan every pipeline runs,
+    filtered on ``deliver``."""
     cutoff = 1_700_000_000_000 if use_cutoff else None
     df = spark.createDataFrame(events, DECODED_CHANGE_EVENT)
-    out = changefeed_pipeline(df, "/t", "https://u", drop_before_ms=cutoff)
-    got = sorted(
-        (r["record_id"], r["record_pos"], r["commit_ms"]) for r in out.collect()
-    )
-    assert got == python_oracle(events, cutoff)
+    expected = python_oracle(events, cutoff)
+    for out in (
+        changefeed_pipeline(df, "/t", "https://u", drop_before_ms=cutoff),
+        changefeed_with_delivery_flag(df, "/t", "https://u", drop_before_ms=cutoff)
+        .filter("deliver"),
+    ):
+        got = sorted(
+            ((r["record_id"], r["record_pos"], r["commit_ms"]) for r in out.collect()),
+            key=_null_first,
+        )
+        assert got == expected
 
 
 @given(

@@ -36,6 +36,7 @@ class _CaptureHandler(http.server.BaseHTTPRequestHandler):
     def do_POST(self):  # noqa: N802
         length = int(self.headers.get("Content-Length", 0))
         body = self.rfile.read(length).decode("utf-8")
+        time.sleep(getattr(self.server, "delay_s", 0.0))
         with self.server.lock:
             self.server.requests.append(json.loads(body))
             fail = self.server.fail_remaining > 0
@@ -95,6 +96,7 @@ def _delivered_ids(server):
     return sorted(req["data"][0]["Id"] for req in server.requests)
 
 
+@pytest.mark.smoke
 def test_pipeline_end_to_end_delivery(spark, tmp_path, webhook_server):
     _write_events(
         spark,
@@ -113,6 +115,9 @@ def test_pipeline_end_to_end_delivery(spark, tmp_path, webhook_server):
     assert _delivered_ids(webhook_server) == ["a1", "b1"]
     status = mgr.status(1)
     assert status["status"] == "stopped" and status["batches_seen"] >= 1
+    # one micro-batch: rows_out counts the delivered records only, not
+    # the flag-false or empty-ids rows the flagged plan carries
+    assert status["observed"]["rows_out"] == 2
     # the last micro-batch's phase split, straight from lastProgress
     assert set(status["durations_ms"]) == set(DURATION_KEYS)
     assert status["durations_ms"]["triggerExecution"] > 0
@@ -298,14 +303,13 @@ def test_pooled_transport_reuses_connection_and_survives_close():
 
 
 def test_make_transport_plumbs_policy_timeout():
-    """r5 review fix: the stock factories receive the POLICY's
-    timeout_s (previously the RetryPolicy timeout was silently ignored
-    and the stock 15 s default always applied); a custom zero-arg
-    factory — the test seam — is called as-is."""
+    """r5 review fix: the stock factory receives the POLICY's timeout_s
+    (previously the RetryPolicy timeout was silently ignored and the
+    stock 15 s default always applied); a custom zero-arg factory — the
+    test seam — is called as-is."""
     from flash_cdc_spark.streaming.webhook import (
         RetryPolicy,
         _make_transport,
-        http_transport,
         pooled_http_transport,
     )
 
@@ -322,9 +326,7 @@ def test_make_transport_plumbs_policy_timeout():
         return out
 
     policy = RetryPolicy(timeout_s=7.5)
-    for factory in (http_transport, pooled_http_transport):
-        t = _make_transport(factory, policy)
-        assert 7.5 in _floats(t), factory.__name__
+    assert 7.5 in _floats(_make_transport(pooled_http_transport, policy))
 
     sentinel = object()
     assert _make_transport(lambda: sentinel, policy) is sentinel
@@ -386,16 +388,19 @@ def test_pooled_transport_follows_redirects_with_repost():
 def test_offset_mirror_advances_even_when_all_dropped(spark, tmp_path, webhook_server):
     """K2: the queryable offset mirror records every batch's max cursor,
     including batches where nothing was delivered (since-drop / flag
-    false / empty recordIds)."""
+    false / empty recordIds). The second file is a batch with nothing
+    to deliver: its mirror row still advances, and ``rows_out`` is 0."""
+    src = str(tmp_path / "source")
     _write_events(
         spark,
-        str(tmp_path / "source"),
+        src,
         [
             _event_row(1, ["d1"], flag="true"),
             _event_row(2, ["d2"], flag="false"),  # dropped, offset advances
             _event_row(3, [], flag="true"),  # empty ids, offset advances
         ],
     )
+    _write_events(spark, src, [_event_row(4, ["d4"], flag="no"), _event_row(5, [], flag="1")])
     config = _mk_config(tmp_path, webhook_server, pid=10)
     config.offsets_path = str(tmp_path / "offsets")
     mgr = PipelineManager(spark, retry_policy=FAST_POLICY)
@@ -404,9 +409,11 @@ def test_offset_mirror_advances_even_when_all_dropped(spark, tmp_path, webhook_s
     assert _delivered_ids(webhook_server) == ["d1"]
     offs = spark.read.parquet(config.offsets_path).orderBy("batch_id").collect()
     assert offs  # mirror rows written
-    assert max(r["last_replay_seq"] for r in offs) == 3  # advanced past dropped
+    assert max(r["last_replay_seq"] for r in offs) == 5  # advanced past dropped
     assert sum(r["n_delivered"] for r in offs) == 1
-    assert sum(r["n_events"] for r in offs) == 3
+    assert sum(r["n_events"] for r in offs) == 5
+    assert [(r["last_replay_seq"], r["n_delivered"]) for r in offs][-1] == (5, 0)
+    assert mgr.status(10)["observed"]["rows_out"] == 0
 
 
 MIRROR_INPUT = "deliver boolean, payload_json string, replay_seq long"
@@ -421,12 +428,12 @@ def _mirror_rows(seqs, deliver=lambda seq: seq % 2 == 0):
 
 
 def _mirror_writer(tmp_path, server, pid=40):
-    from flash_cdc_spark.streaming.webhook import webhook_batch_writer_with_offsets
+    from flash_cdc_spark.streaming.webhook import webhook_batch_writer
 
     offsets = str(tmp_path / "offsets")
     url = f"http://127.0.0.1:{server.server_address[1]}/hook"
-    fn = webhook_batch_writer_with_offsets(
-        url, offsets, pid, "/data/OpportunityChangeEvent", policy=FAST_POLICY
+    fn = webhook_batch_writer(
+        url, policy=FAST_POLICY, mirror=(offsets, pid, "/data/OpportunityChangeEvent")
     )
     return fn, offsets
 
@@ -874,6 +881,43 @@ def test_crash_between_delivery_and_commit_redelivers_last_batch(
     assert (mirror[2]["n_events"], mirror[2]["n_delivered"]) == (1, 1)
     assert before and not before & set(os.listdir(part))
     assert _latest_entry(commits) == last
+
+
+def test_stop_mid_delivery_redelivers_uncommitted_batch(spark, tmp_path, webhook_server):
+    """A stop that lands while a micro-batch is posting: the query ends
+    with a short "stopped before it committed" error (not a
+    ``StackOverflowError`` in Spark's interrupted-by-stop check, which
+    left no termination cause), the batch does not commit, and the
+    stored-mode restart delivers every record, the ones posted before
+    the stop again."""
+    ids = [f"s{k}" for k in range(6)]
+    _write_events(spark, str(tmp_path / "source"), [_event_row(1, ids, flag="true")])
+    webhook_server.delay_s = 1.0  # one partition posts for ~6 s
+    config = _mk_config(tmp_path, webhook_server, pid=53)
+    mgr = PipelineManager(spark, retry_policy=FAST_POLICY,
+                          trigger={"processingTime": "1 second"})
+    mgr.start(config)
+    deadline = time.time() + 60
+    while time.time() < deadline and not webhook_server.requests:
+        time.sleep(0.05)
+    mgr.stop(53)
+    status = mgr.status(53)
+    before_stop = _delivered_ids(webhook_server)
+    assert status["status"] == "stopped" and status["batches_seen"] == 0
+    assert "micro-batch 0 stopped before it committed" in status["last_error"]
+    assert 1 <= len(before_stop) < len(ids)
+    commits = os.path.join(config.checkpoint_dir(), "commits")
+    assert not (os.path.isdir(commits) and any(n.isdigit() for n in os.listdir(commits)))
+
+    webhook_server.delay_s = 0.0
+    webhook_server.requests.clear()
+    mgr2 = PipelineManager(spark, retry_policy=FAST_POLICY)
+    mgr2.start(config, ReplayArgs(mode="stored"))
+    mgr2.wait(53, timeout_s=120)
+    # the whole batch again (a post of the cancelled task that lands
+    # after the stop can only repeat one of these ids)
+    assert sorted(set(_delivered_ids(webhook_server))) == ids
+    assert _latest_entry(commits) == "0"
 
 
 def test_filecontext_checkpoint_resumes_under_filesystem_manager(
