@@ -70,27 +70,38 @@ no registered query orders by a NaN-able key).
 ``global_ntile`` layers exact SQL NTILE semantics on top of the rank
 (first ``n mod k`` buckets get ``ceil(n/k)`` rows), so queries keep
 bit-identical cross-engine semantics with a DuckDB ``ntile`` oracle
-while dropping the global sort.
+while dropping the global sort; ``multi_exact_ntile`` gets the same
+values without a rank by selecting the ``k - 1`` cut keys.
+
+Persist and memo. The module keeps no registry of its own: inputs go
+into Spark's cache (``df.persist()`` unless ``df.storageLevel`` shows
+the plan cached already). Spark's CacheManager shares a cached
+relation between plans with the same result (a rebuild of the same
+query, a renamed projection) and never between different data, and
+``spark.catalog.clearCache()`` releases it. The literals the
+construction jobs collect — range boundaries and NTILE cut keys — go
+into ONE memo keyed on ``(plan digest, kind, order spec, buckets or
+k)``; the digest (:func:`_plan_digest`) is the input's full data
+identity, and an in-memory input has none, so it is never memoized.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 import re
 from collections.abc import Mapping, Sequence
 from functools import cmp_to_key, reduce
+from typing import Callable, NamedTuple
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
     "with_global_order",
-    "multi_global_rank",
     "multi_exact_ntile",
     "bounded_running_sum",
     "global_ntile",
-    "release_persisted_inputs",
 ]
 
 _PID = "__go_pid"
@@ -99,102 +110,36 @@ _OFF = "__go_off"
 
 _SAMPLE_PER_BUCKET = 200
 
-# Boundary memo: canonicalized-input-plan digest -> collected boundary
-# tuples. Boundaries only affect BALANCE, never values (any
-# order-contiguous boundary set yields the same exact ranks/sums), so
-# reusing a prior sample for an identical logical plan is
-# correctness-free and skips both construction jobs on re-construction
-# of the same query (bench iterations, repeated dashboards) — the
-# signature-index memo philosophy applied to the one operator that
-# runs jobs at plan-construction time.
-_BOUNDS_MEMO: dict[tuple, list] = {}
+# Construction memo: (plan digest, kind, order spec, size) -> the
+# literals a construction job collected. Two kinds share it:
+# ``"bounds"`` (range boundaries, sized by ``buckets``; they decide
+# balance only) and ``"cuts"`` (exact NTILE cut keys, sized by ``k``;
+# they decide values). Both are keyed on the same full data identity
+# (:func:`_plan_digest`), so re-constructing the same query skips its
+# count/sample/selection jobs and a different input never shares an
+# entry.
+_MEMO: dict[tuple, list[tuple]] = {}
 
-# Exact-ntile cut memo: (schema-aware plan digest, order spec, k,
-# buckets) -> (n, cut key tuples). Unlike boundaries, cuts are DATA
-# (they decide values, not balance), so the key must be a full data
-# identity: the schema-aware digest — the same identity the persist
-# registry trusts for handle reuse (canonical plan + file-leaf
-# identity + output schema).
-_NTILE_CUTS_MEMO: dict[tuple, tuple[int, list]] = {}
-
-# Persisted-input registry (ADVICE r8): both operators persist their
-# input because the plan references it several times. Handles are
-# deduplicated on the canonicalized analyzed plan — repeated
-# construction of the same query (the Kaplan-Meier query builds two
-# bounded grids per run; bench iterations rebuild every query) shares
-# ONE cached relation instead of pinning a new copy per call — and are
-# tracked so long-lived library sessions can release every block via
-# :func:`release_persisted_inputs` instead of accumulating them for
-# the session lifetime.
-_PERSISTED: dict[str, DataFrame] = {}
-_PERSISTED_ANON: list[DataFrame] = []
-
-# Plan nodes whose string form HIDES the underlying data: a
+# Plan leaves whose string form HIDES the underlying data: a
 # LocalRelation / materialized-RDD scan prints only its output schema,
 # so two different in-memory datasets with the same shape canonicalize
-# to the SAME string. Deduplicating on such a plan would silently serve
-# the FIRST dataset's rows for the second (caught by the two-phase
-# hypothesis property test) — these persist anonymously instead:
-# tracked for release, never shared.
+# to the SAME string. Plans with such a leaf have no digest and are
+# never memoized: a second frame would get the first one's NTILE cuts.
 _NON_DEDUP_NODES = ("LocalRelation", "LogicalRDD", "ExistingRDD")
 
 
-def _persist_shared(df: DataFrame) -> DataFrame:
-    """Persist ``df`` (MEMORY_AND_DISK, lineage preserved), reusing an
-    already-persisted handle for an identical canonicalized plan —
-    only when every leaf's data is identified BY the plan string (file
-    scans, ranges); in-memory leaves persist anonymously (see
-    ``_NON_DEDUP_NODES``). A registry hit whose cache entry was
-    dropped externally (e.g. a global ``spark.catalog.clearCache()``)
-    is re-persisted, not trusted stale."""
-    key = None
-    try:
-        canon = df._jdf.queryExecution().analyzed().canonicalized().toString()
-        if not any(tok in canon for tok in _NON_DEDUP_NODES):
-            # The registry key folds the OUTPUT SCHEMA in (ADVICE r9,
-            # medium): canonicalization erases alias names, so two
-            # structurally identical inputs that differ only in column
-            # NAMING would otherwise share one persisted handle with
-            # the first caller's schema — a missing name raises on
-            # previously-working code; swapped names silently bind
-            # downstream keys to the wrong underlying columns. The
-            # boundary memo deliberately keeps the name-blind digest
-            # (boundaries affect balance only, never values).
-            key = _plan_digest(df, include_schema=True)
-    except Exception:
-        key = None
-    if key is None:
-        handle = df.persist()
-        _PERSISTED_ANON.append(handle)
-        return handle
-    hit = _PERSISTED.get(key)
-    if hit is not None:
-        try:
-            if hit.is_cached:
-                return hit
-        except Exception:
-            pass  # stale session handle — fall through and re-persist
-        _PERSISTED.pop(key, None)
-    handle = df.persist()
-    _PERSISTED[key] = handle
-    return handle
-
-
-def release_persisted_inputs() -> int:
-    """Unpersist every input relation the global-order operators have
-    cached in this session and clear the registry; returns the number
-    of handles released. Safe to call at any time — subsequent operator
-    calls simply re-persist."""
-    released = 0
-    for handle in list(_PERSISTED.values()) + _PERSISTED_ANON:
-        try:
-            handle.unpersist()
-            released += 1
-        except Exception:
-            pass  # session already stopped; nothing to release
-    _PERSISTED.clear()
-    _PERSISTED_ANON.clear()
-    return released
+def _persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK, lineage preserved) unless Spark
+    already caches its plan. Spark's CacheManager deduplicates on
+    ``sameResult``: a rebuild of the same query over the same files
+    reuses the cached relation (under its own column names), another
+    path or a different in-memory frame does not, and
+    ``spark.catalog.clearCache()`` releases everything. The
+    ``storageLevel`` check only avoids Spark's "already cached" warning
+    on every rebuild."""
+    if df.storageLevel == StorageLevel.NONE:
+        df.persist()
+    return df
 
 
 def _data_identity(jdf) -> str:
@@ -206,20 +151,17 @@ def _data_identity(jdf) -> str:
     - **Cache-substitution-proof.** ``DataFrame.inputFiles()`` reads
       the OPTIMIZED plan, where an already-persisted subplan has been
       replaced by ``InMemoryRelation`` — the file scan vanishes and the
-      list comes back EMPTY. A second construction of the same query
-      therefore hashed differently (re-persisting already-cached data),
-      and two CACHED plans over different scale dirs both hashed with
-      no files at all — the exact cross-scale wrong-data collision the
-      r9 fix was for, resurrected through the cache path. The analyzed
-      plan is pre-substitution, so the scan (and its location) is
-      always visible.
+      list comes back EMPTY, so two CACHED plans over different scale
+      dirs both hashed with no files at all. The analyzed plan is
+      pre-substitution, so the scan (and its location) is always
+      visible.
     - **O(1) in file count.** At 100 TB ``inputFiles()`` is O(10⁵)
       paths walked per operator call on the driver (VERDICT r9 scale
       nit); root paths + total bytes is a handful of strings per scan
       with the same identity power (a dataset OVERWRITTEN in place with
       bit-identical total size could collide — but Spark's own cache
-      serves stale blocks across an overwrite anyway, so the registry
-      is exactly as consistent as the cache it fronts).
+      serves stale blocks across an overwrite anyway, so the memo is
+      exactly as consistent as the cache the operators persist into).
     """
     plan = jdf.queryExecution().analyzed()
     leaves = plan.collectLeaves()
@@ -246,48 +188,60 @@ def _data_identity(jdf) -> str:
     return "\n".join(parts)
 
 
-def _plan_digest(df: DataFrame, *, include_schema: bool = False) -> str | None:
-    """md5 of the CANONICALIZED analyzed plan string PLUS the data
-    identity of its file-backed leaves. The canonical string alone is
-    NOT a data identity: a ``LogicalRelation`` prints
-    ``Relation[cols] parquet`` with NO path, so the same query shape
-    over two scale factors collides (caught in r9 by the sf0.1 parity
-    tier — the persist registry served sf0.001 rows to an sf0.1 query;
-    the boundary memo had the same collision, harmless for values but
-    silently reusing toy-scale boundaries at scale).
-    :func:`_data_identity` restores the missing identity for every
-    file-backed leaf — from the analyzed plan, so it survives cache
-    substitution and costs O(1) in file count; non-file leaves whose
-    data the plan string also hides are handled separately
-    (``_NON_DEDUP_NODES``). ``include_schema=True`` additionally folds
-    the output schema in — required for the persist registry
-    (canonicalization erases alias names; ADVICE r9), deliberately NOT
-    for the balance-only boundary memo. Returns None when the
-    canonical form is unavailable (e.g. Spark Connect)."""
+def _plan_digest(df: DataFrame) -> str | None:
+    """md5 of the CANONICALIZED analyzed plan string, the data identity
+    of its file-backed leaves and the output schema — the one data
+    identity the construction memo is keyed on.
+
+    - The canonical string alone is NOT a data identity: a
+      ``LogicalRelation`` prints ``Relation[cols] parquet`` with NO
+      path, so the same query shape over two scale factors collides
+      (caught in r9 by the sf0.1 parity tier). :func:`_data_identity`
+      restores it for every file-backed leaf.
+    - Canonicalization erases alias names, so two projections that
+      differ only in column NAMING collide; the schema tells them
+      apart (ADVICE r9).
+    - In-memory leaves (``_NON_DEDUP_NODES``) print no data at all:
+      such a plan returns None, and None means "do not memoize" — the
+      same as when the canonical form is unavailable (e.g. Spark
+      Connect)."""
     try:
         canon = (
             df._jdf.queryExecution().analyzed().canonicalized().toString()
         )
+        if any(tok in canon for tok in _NON_DEDUP_NODES):
+            return None
         h = hashlib.md5(canon.encode())
         h.update(b"\x00")
         h.update(_data_identity(df._jdf).encode())
-        if include_schema:
-            h.update(b"\x00")
-            h.update(str(df.schema).encode())
+        h.update(b"\x00")
+        h.update(str(df.schema).encode())
     except Exception:
         return None
     return h.hexdigest()
 
 
-def _memo_key(df: DataFrame, order_reprs: tuple, buckets: int):
-    """Stable key for the boundary memo: the plan digest (canonical
-    plan + backing files — see :func:`_plan_digest`) plus the
-    order/bucket spec. Returns None when the canonical form is
-    unavailable — memoization is then skipped."""
-    digest = _plan_digest(df)
-    if digest is None:
-        return None
-    return (digest, order_reprs, buckets)
+def _memoized(
+    digest: str | None,
+    kind: str,
+    specs: Sequence[tuple],
+    build: Callable[[list[int]], list[list[tuple]]],
+) -> list[list[tuple]]:
+    """One memo entry per spec under ``(digest, kind, *spec)``: the
+    hits come from :data:`_MEMO`, ``build(missing indices)`` computes
+    every miss in one pass, and the misses are stored unless the
+    digest is None."""
+    keys = [None if digest is None else (digest, kind, *s) for s in specs]
+    out = [None if k is None else _MEMO.get(k) for k in keys]
+    missing = [i for i, v in enumerate(out) if v is None]
+    if missing:
+        for i, v in zip(missing, build(missing)):
+            out[i] = v
+            if keys[i] is not None:
+                _MEMO[keys[i]] = v
+    return out
+
+
 _SORT_SUFFIX = re.compile(r"^(?P<body>.*) (?P<dir>ASC|DESC) NULLS (?P<nulls>FIRST|LAST)$")
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -323,6 +277,30 @@ def _parse_order(entry: Column | str) -> tuple[Column, bool, bool, str | None]:
     return F.col(name), m.group("dir") == "DESC", m.group("nulls") == "FIRST", name
 
 
+class _Order(NamedTuple):
+    """One parsed total order: the entries as given (for
+    ``Window.orderBy``), their bare key columns, (descending,
+    nulls_first) metas, plain names (None for expressions), and the
+    entries' string forms (the order spec in memo keys)."""
+
+    cols: tuple
+    keys: list[Column]
+    metas: list[tuple[bool, bool]]
+    names: list[str | None]
+    spec: tuple[str, ...]
+
+
+def _parse(order: Sequence[Column | str]) -> _Order:
+    parsed = [_parse_order(c) for c in order]
+    return _Order(
+        tuple(order),
+        [p[0] for p in parsed],
+        [(p[1], p[2]) for p in parsed],
+        [p[3] for p in parsed],
+        tuple(str(c) for c in order),
+    )
+
+
 def _cmp_factory(metas: Sequence[tuple[bool, bool]]):
     """Driver-side comparator over key tuples matching Spark's sort
     semantics per column (direction + null ordering)."""
@@ -348,11 +326,10 @@ def _cmp_factory(metas: Sequence[tuple[bool, bool]]):
     return cmp
 
 
-def _sample_rows(df: DataFrame, ncols: int, buckets: int) -> list[tuple]:
+def _sample_rows(df: DataFrame, buckets: int) -> list[tuple]:
     """One count job + one bounded sample-collect over a pre-projected
-    key relation (columns ``__go_k0..__go_k{ncols-1}``): returns
-    ~``buckets * 200`` rows regardless of input size, or [] for inputs
-    too small to need boundaries."""
+    key relation: returns ~``buckets * 200`` rows regardless of input
+    size, or [] for inputs too small to need boundaries."""
     n = df.count()
     if n <= 1 or buckets <= 1:
         return []
@@ -391,18 +368,39 @@ def _boundaries_from_sample(
     return bounds
 
 
-def _collect_boundaries(
-    df: DataFrame,
-    keys: Sequence[Column],
-    metas: Sequence[tuple[bool, bool]],
+def _range_boundaries(
+    src: DataFrame,
+    digest: str | None,
+    orders: Sequence[_Order],
     buckets: int,
-) -> list[tuple]:
-    """Sample the order keys once, sort on the driver, and return up to
-    ``buckets - 1`` deduplicated quantile boundary tuples (bounded:
-    ~``buckets * 200`` sampled rows regardless of input size)."""
-    keyed = df.select(*[k.alias(f"__go_k{i}") for i, k in enumerate(keys)])
-    rows = _sample_rows(keyed, len(keys), buckets)
-    return _boundaries_from_sample(rows, metas, buckets)
+) -> list[list[tuple]]:
+    """Range boundaries per order: memo hits first, then ONE count job
+    and ONE sample-collect over the union of every missed order's key
+    columns, each order's boundaries derived from that one sample
+    driver-side. Sharing the sample (and reusing a memoized one) is
+    correctness-free: boundary placement affects balance only, never
+    values."""
+
+    def sample(missing: list[int]) -> list[list[tuple]]:
+        keys = [k for i in missing for k in orders[i].keys]
+        rows = _sample_rows(
+            src.select(*[k.alias(f"__go_k{j}") for j, k in enumerate(keys)]),
+            buckets,
+        )
+        out, start = [], 0
+        for i in missing:
+            nk = len(orders[i].keys)
+            out.append(
+                _boundaries_from_sample(
+                    [r[start : start + nk] for r in rows], orders[i].metas, buckets
+                )
+            )
+            start += nk
+        return out
+
+    return _memoized(
+        digest, "bounds", [(o.spec, buckets) for o in orders], sample
+    )
 
 
 def _sql_lit(v) -> str | None:
@@ -486,12 +484,7 @@ def _pid_sql(
     return " + ".join(terms)
 
 
-def _pid_expr(
-    keys: Sequence[Column],
-    metas: Sequence[tuple[bool, bool]],
-    boundaries: Sequence[tuple],
-    names: Sequence[str | None] = (),
-) -> Column:
+def _pid_expr(o: _Order, boundaries: Sequence[tuple]) -> Column:
     """pid = number of boundary tuples strictly BEFORE the row under
     the composite order — a bounded literal-comparison expression
     (≤ buckets−1 terms), monotone in the order by construction. When
@@ -502,8 +495,8 @@ def _pid_expr(
     reference — both construct the identical predicate."""
     if not boundaries:
         return F.lit(0)
-    if len(names) == len(keys) and all(n is not None for n in names):
-        sql = _pid_sql(names, metas, boundaries)  # type: ignore[arg-type]
+    if all(n is not None for n in o.names):
+        sql = _pid_sql(o.names, o.metas, boundaries)  # type: ignore[arg-type]
         if sql is not None:
             return F.expr(sql)
 
@@ -511,7 +504,7 @@ def _pid_expr(
         # lexicographic "row strictly after bound", folded right-to-left
         acc = F.lit(False)
         for key, (desc, nulls_first), bv in reversed(
-            list(zip(keys, metas, bound))
+            list(zip(o.keys, o.metas, bound))
         ):
             if bv is None:
                 eq = key.isNull()
@@ -556,51 +549,33 @@ def with_global_order(
     ~``buckets*200``-row sample collect) to freeze the range boundaries
     as literals — see the module docstring for why that, not
     ``repartitionByRange``/``localCheckpoint``, is the deterministic
-    and fault-tolerant form. The input is persisted (MEMORY_AND_DISK,
-    lineage preserved) so its upstream plan evaluates once across the
-    boundary jobs and both downstream branches. Re-constructing the
-    same query skips both jobs: boundaries are memoized on the
-    canonicalized input plan (safe — boundary placement affects only
-    balance, never values).
+    and fault-tolerant form. The input is persisted in Spark's cache
+    (MEMORY_AND_DISK, lineage preserved; a rebuild of the same query
+    reuses the cached relation) so its upstream plan evaluates once
+    across the boundary jobs and both downstream branches. Re-
+    constructing the same query skips both jobs: boundaries are
+    memoized on the input's data identity (:func:`_plan_digest`; an
+    in-memory input is never memoized).
     """
     if rank_col is None and not sums:
         raise ValueError("request at least one of rank_col / sums")
-    sums = dict(sums or {})
-
-    parsed = [_parse_order(c) for c in order]
-    keys = [p[0] for p in parsed]
-    metas = [(p[1], p[2]) for p in parsed]
-    names = [p[3] for p in parsed]
-
-    src = _persist_shared(df)
-    memo_key = _memo_key(df, tuple(str(c) for c in order), buckets)
-    if memo_key is not None and memo_key in _BOUNDS_MEMO:
-        boundaries = _BOUNDS_MEMO[memo_key]
-    else:
-        boundaries = _collect_boundaries(src, keys, metas, buckets)
-        if memo_key is not None:
-            _BOUNDS_MEMO[memo_key] = boundaries
-    return _two_phase(
-        src, order, keys, metas, boundaries, rank_col, sums, names
-    )
+    o = _parse(order)
+    src = _persist(df)
+    (boundaries,) = _range_boundaries(src, _plan_digest(df), [o], buckets)
+    return _two_phase(src, o, boundaries, rank_col, dict(sums or {}))
 
 
 def _two_phase(
     src: DataFrame,
-    order: Sequence[Column | str],
-    keys: Sequence[Column],
-    metas: Sequence[tuple[bool, bool]],
+    o: _Order,
     boundaries: Sequence[tuple],
     rank_col: str | None,
     sums: Mapping[str, Column],
-    names: Sequence[str | None] = (),
 ) -> DataFrame:
     """Phases 1+2 of the exact global order given frozen literal
     boundaries: within-range window + triangular offsets + broadcast
     join-back (see :func:`with_global_order`)."""
-    assigned = src.withColumn(
-        _PID, _pid_expr(keys, metas, boundaries, names)
-    )
+    assigned = src.withColumn(_PID, _pid_expr(o, boundaries))
 
     # Phase 1: within-range running aggregates (parallel window; the
     # hash exchange on the range id keeps each range one group, and is
@@ -608,7 +583,7 @@ def _two_phase(
     # consumers agree whether or not Catalyst reuses the exchange).
     w = (
         Window.partitionBy(_PID)
-        .orderBy(*order)
+        .orderBy(*o.cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     within = assigned
@@ -655,97 +630,6 @@ def _two_phase(
     return out_df.drop(*drop)
 
 
-def multi_global_rank(
-    df: DataFrame,
-    axes: Mapping[str, Sequence[Column | str]],
-    *,
-    key: str | Sequence[str],
-    buckets: int = 32,
-) -> DataFrame:
-    """Attach one exact 1-based global-rank column PER AXIS to ``df``
-    (``axes``: out-column → total order), sharing construction work
-    that chained :func:`with_global_order` calls would repeat.
-
-    The chained form persists a progressively WIDER plan per call
-    (each stage's output includes the prior rank columns — a new
-    registry entry, a new count job and a new sample-collect each;
-    VERDICT r9 flagged ``q_customer_rfm_segments``'s three chained
-    calls as the round's perf-weak item). This form instead:
-
-    - persists the BASE relation once (single persist-registry entry);
-    - runs ONE count job and ONE sample-collect over the union of all
-      axes' key columns, then derives each axis's boundaries from that
-      one sample driver-side (per-axis comparator sort — boundary
-      placement affects balance only, never values, so sharing the
-      sample is correctness-free, same argument as the boundary memo);
-    - builds each axis's two-phase rank from the SAME persisted base
-      and joins the (key, rank) columns back on ``key``.
-
-    ``key`` must be unique on ``df`` (every axis needs a unique
-    tiebreak anyway — use it). Each axis's rank is bit-identical to
-    ``with_global_order(df, axes[out], rank_col=out)``; the join-back
-    on the unique key preserves the row set exactly.
-    """
-    if not axes:
-        raise ValueError("multi_global_rank: need at least one axis")
-    key_cols = [key] if isinstance(key, str) else list(key)
-    clash = [c for c in axes if c in df.columns]
-    if clash:
-        raise ValueError(f"output columns already exist on df: {clash}")
-
-    parsed = {rk: [_parse_order(c) for c in order] for rk, order in axes.items()}
-    src = _persist_shared(df)
-
-    # Per-axis boundary memo first; ONE shared sample pass for misses.
-    bounds: dict[str, list[tuple]] = {}
-    digest = _plan_digest(df)  # one inputFiles() walk for all axes
-    memo_keys = {
-        rk: (
-            None
-            if digest is None
-            else (digest, tuple(str(c) for c in axes[rk]), buckets)
-        )
-        for rk in axes
-    }
-    missing = [
-        rk
-        for rk in axes
-        if memo_keys[rk] is None or memo_keys[rk] not in _BOUNDS_MEMO
-    ]
-    for rk in axes:
-        if rk not in missing:
-            bounds[rk] = _BOUNDS_MEMO[memo_keys[rk]]
-    if missing:
-        proj: list[Column] = []
-        slots: dict[str, tuple[int, int]] = {}
-        idx = 0
-        for rk in missing:
-            ks = [p[0] for p in parsed[rk]]
-            slots[rk] = (idx, len(ks))
-            proj.extend(k.alias(f"__go_k{idx + j}") for j, k in enumerate(ks))
-            idx += len(ks)
-        rows = _sample_rows(src.select(*proj), idx, buckets)
-        for rk in missing:
-            start, nk = slots[rk]
-            metas = [(p[1], p[2]) for p in parsed[rk]]
-            bounds[rk] = _boundaries_from_sample(
-                [r[start : start + nk] for r in rows], metas, buckets
-            )
-            if memo_keys[rk] is not None:
-                _BOUNDS_MEMO[memo_keys[rk]] = bounds[rk]
-
-    out = src
-    for rk, order in axes.items():
-        keys = [p[0] for p in parsed[rk]]
-        metas = [(p[1], p[2]) for p in parsed[rk]]
-        names = [p[3] for p in parsed[rk]]
-        branch = _two_phase(
-            src, order, keys, metas, bounds[rk], rk, {}, names
-        ).select(*key_cols, rk)
-        out = out.join(branch, key_cols)
-    return out
-
-
 def _ntile_cut_ranks(n: int, k: int) -> list[int]:
     """SQL ``NTILE(k)`` boundary ranks ``b_1..b_{k-1}`` (``b_i`` = rows
     in buckets 1..i): first ``n mod k`` buckets hold ``n div k + 1``
@@ -775,8 +659,11 @@ def multi_exact_ntile(
     ``key > key_at(b_i)``. The cuts are found once at construction
     time (selection over the persisted input: per-range counts map
     each boundary rank to (range, local rank); one within-range
-    row_number job extracts the ≤ ``k-1`` keys) and memoized on the
-    full data identity; the output column is then a bounded
+    row_number job extracts the ≤ ``k-1`` keys; the axes missing from
+    the memo share one sample pass for their range boundaries). Cuts
+    decide values, so they are memoized only on the input's full data
+    identity (:func:`_plan_digest`: plan, file leaves and schema; an
+    in-memory input is never memoized). The output column is then a bounded
     literal-comparison expression ``1 + #{cuts strictly before row}``
     — the same single-``F.expr`` fold the range assignment uses. The
     final plan is ONE scan with per-row arithmetic: no rank windows,
@@ -801,76 +688,36 @@ def multi_exact_ntile(
     clash = [c for c in axes if c in df.columns]
     if clash:
         raise ValueError(f"output columns already exist on df: {clash}")
-    parsed = {
-        out: [_parse_order(c) for c in order] for out, (order, _k) in axes.items()
-    }
-    src = _persist_shared(df)
-    digest = _plan_digest(df, include_schema=True)
+    outs = list(axes)
+    orders = [_parse(axes[out][0]) for out in outs]
+    ks = [axes[out][1] for out in outs]
+    src = _persist(df)
+    digest = _plan_digest(df)
 
-    cuts_by_axis: dict[str, list[tuple]] = {}
-    memo_keys = {}
-    missing = []
-    for out, (order, k) in axes.items():
-        mk = (
-            None
-            if digest is None
-            else (digest, tuple(str(c) for c in order), k, buckets)
-        )
-        memo_keys[out] = mk
-        if mk is not None and mk in _NTILE_CUTS_MEMO:
-            cuts_by_axis[out] = _NTILE_CUTS_MEMO[mk][1]
-        else:
-            missing.append(out)
-
-    if missing:
-        # Shared sample pass (same device as multi_global_rank) for the
-        # balance-only range boundaries of every missing axis.
-        proj: list[Column] = []
-        slots: dict[str, tuple[int, int]] = {}
-        idx = 0
-        for out in missing:
-            ks = [p[0] for p in parsed[out]]
-            slots[out] = (idx, len(ks))
-            proj.extend(k.alias(f"__go_k{idx + j}") for j, k in enumerate(ks))
-            idx += len(ks)
-        sample = _sample_rows(src.select(*proj), idx, buckets)
+    def select(missing: list[int]) -> list[list[tuple]]:
         n = src.count()
-        for out in missing:
-            order, k = axes[out]
-            start, nk = slots[out]
-            keys = [p[0] for p in parsed[out]]
-            metas = [(p[1], p[2]) for p in parsed[out]]
-            names = [p[3] for p in parsed[out]]
-            bounds = _boundaries_from_sample(
-                [r[start : start + nk] for r in sample], metas, buckets
-            )
-            cuts = _select_cut_keys(
-                src, order, keys, metas, names, bounds, n, k
-            )
-            cuts_by_axis[out] = cuts
-            if memo_keys[out] is not None:
-                _NTILE_CUTS_MEMO[memo_keys[out]] = (n, cuts)
+        bounds = _range_boundaries(
+            src, digest, [orders[i] for i in missing], buckets
+        )
+        return [
+            _select_cut_keys(src, orders[i], b, n, ks[i])
+            for i, b in zip(missing, bounds)
+        ]
 
+    cuts = _memoized(
+        digest, "cuts", [(o.spec, k) for o, k in zip(orders, ks)], select
+    )
     out_df = src
-    for out, (order, k) in axes.items():
-        keys = [p[0] for p in parsed[out]]
-        metas = [(p[1], p[2]) for p in parsed[out]]
-        names = [p[3] for p in parsed[out]]
+    for out, o, c in zip(outs, orders, cuts):
         out_df = out_df.withColumn(
-            out,
-            (_pid_expr(keys, metas, cuts_by_axis[out], names) + F.lit(1)).cast(
-                "int"
-            ),
+            out, (_pid_expr(o, c) + F.lit(1)).cast("int")
         )
     return out_df
 
 
 def _select_cut_keys(
     src: DataFrame,
-    order: Sequence[Column | str],
-    keys: Sequence[Column],
-    metas: Sequence[tuple[bool, bool]],
-    names: Sequence[str | None],
+    o: _Order,
     bounds: list[tuple],
     n: int,
     k: int,
@@ -885,7 +732,7 @@ def _select_cut_keys(
     ranks = _ntile_cut_ranks(n, k)
     if not ranks or n == 0:
         return []
-    assigned = src.withColumn(_PID, _pid_expr(keys, metas, bounds, names))
+    assigned = src.withColumn(_PID, _pid_expr(o, bounds))
     counts = sorted(
         (r[0], r[1])
         for r in assigned.groupBy(_PID).agg(F.count(F.lit(1)).alias("c")).collect()
@@ -902,7 +749,7 @@ def _select_cut_keys(
                 targets[r] = (pid, r - lo)
                 break
     pids = sorted({p for p, _ in targets.values()})
-    w = Window.partitionBy(_PID).orderBy(*order)
+    w = Window.partitionBy(_PID).orderBy(*o.cols)
     cond = " OR ".join(
         f"({_PID} = {p} AND __go_rk = {lk})" for p, lk in targets.values()
     )
@@ -913,7 +760,7 @@ def _select_cut_keys(
         .select(
             F.col(_PID),
             "__go_rk",
-            *[key.alias(f"__go_k{i}") for i, key in enumerate(keys)],
+            *[key.alias(f"__go_k{i}") for i, key in enumerate(o.keys)],
         )
     )
     by_target = {
@@ -955,7 +802,7 @@ def bounded_running_sum(
     *,
     rank_col: str | None = None,
     sums: Mapping[str, Column] | None = None,
-    validate: bool | None = None,
+    validate: bool = False,
     max_rows: int = 100_000,
 ) -> DataFrame:
     """Exact global running sums / rank over a relation that is BOUNDED
@@ -967,16 +814,16 @@ def bounded_running_sum(
     is one broadcast triangular join — the device phase 2 of
     ``with_global_order`` already uses for its offsets relation —
     instead of the full two-phase decomposition. No boundary jobs, no
-    persist, no window anywhere in the plan (the registry-wide
+    memo, no window anywhere in the plan (the registry-wide
     single-partition-window ban holds trivially), and no fixed
     construction cost: at toy scale this is ~10× cheaper per call than
     the two-phase form, and at cluster scale the O(g²) comparison work
     stays negligible because g is domain-bounded.
 
-    Contract (caller-verified by default; pass ``validate=True`` or set
-    ``FLASH_CDC_VALIDATE_BOUNDED=1`` to enforce both clauses at runtime
-    — one cheap job on the persisted grid that raises on a corpus-sized
-    or duplicate-key input instead of degrading silently):
+    Contract (caller-verified by default; pass ``validate=True`` to
+    enforce both clauses at runtime — one cheap job on the persisted
+    grid that raises on a corpus-sized or duplicate-key input instead
+    of degrading silently):
 
     - ``df`` must be domain-bounded — a few thousand rows at ANY corpus
       scale. The join emits g·(g+1)/2 rows; at g = 10⁴ that is 5·10⁷
@@ -1009,11 +856,11 @@ def bounded_running_sum(
     nk = len(keys)
 
     # The plan references df three times (both triangular sides + the
-    # join-back); persisting the BOUNDED grid (MEMORY_AND_DISK, lineage
-    # preserved — same policy as with_global_order's input, shared and
-    # releasable through the module persist registry) makes the
-    # corpus-sized upstream evaluate once, not per reference.
-    df = _persist_shared(df)
+    # join-back); persisting the BOUNDED grid in Spark's cache
+    # (MEMORY_AND_DISK, lineage preserved — same policy as
+    # with_global_order's input) makes the corpus-sized upstream
+    # evaluate once, not per reference.
+    df = _persist(df)
     vals = df.select(
         *[k.alias(f"__brs_k{i}") for i, k in enumerate(keys)],
         *[expr.alias(f"__brs_v_{out}") for out, expr in sums.items()],
@@ -1025,8 +872,6 @@ def bounded_running_sum(
     # broadcast join (driver OOM), duplicate keys turn the ROWS frame
     # into tie-inclusive RANGE-like sums. Debug mode fails loudly
     # instead; both checks are one cheap job on the persisted grid.
-    if validate is None:
-        validate = bool(os.environ.get("FLASH_CDC_VALIDATE_BOUNDED"))
     if validate:
         n = df.count()
         if n > max_rows:

@@ -786,10 +786,14 @@ _KNN_K = 5
 
 
 def _knn_label_prop_arrow(vecs: DataFrame) -> DataFrame:
-    """Flag-gated Arrow prototype of the kNN scoring pass (r11, VERDICT
+    """Arrow scoring pass of ``q_quality_knn_label_prop`` (r11, VERDICT
     r10 #7; design note: ``plans/r11/knn_label_prop_arrow_note.md``).
+    Measured 2.4× faster than the interpreted-HOF form
+    (:func:`_knn_label_prop_hof`, 1.99 → 0.82 s at sf0.1): its per-row
+    transform/array_sort chain runs outside codegen, numpy over Arrow
+    batches vectorizes it (guide §4.2).
 
-    Bit-parity contract: the shipped path's cosine is
+    Bit-parity contract: the interpreted-HOF form's cosine is
     ``round(left_fold(v·s) / (sqrt(left_fold(v·v)) * sqrt(left_fold(s·s))), 6)``
     where every fold is a strict LEFT fold in index order (the oracle's
     ``list_dot_product`` order). This path reproduces it exactly:
@@ -950,27 +954,27 @@ def q_quality_knn_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is touched ONCE with no shuffle on the k·n score pass, and
     the only shuffles are the bounded per-target top-k and the
     label-cardinality² confusion aggregate."""
-    e = load_table(spark, sf_dir, "embeddings")
+    vecs = _knn_vecs(spark, sf_dir)
+    return _knn_label_prop_arrow(vecs.select("vec_id", "label", "v"))
+
+
+def _knn_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flash_cdc_spark.operators import similarity as SIM
-    from flash_cdc_spark.operators.dedup import let_bound
 
     v = SIM.as_double_vec("embedding")
-    vecs = e.select("vec_id", "label", v.alias("v"), SIM.l2_norm(v).alias("nrm"))
-    import os as _os
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", v.alias("v"), SIM.l2_norm(v).alias("nrm")
+    )
 
-    if _os.environ.get("SPARK_GRAFT_KNN_ARROW", "1") == "1":
-        # Arrow scoring path (VERDICT r10 #7), ON by default since the
-        # parity proof landed: hash-identical to the interpreted-HOF
-        # path by construction (strict left folds via
-        # np.add.accumulate, HALF_UP rounding with exact-decimal
-        # boundary fixup — see _knn_label_prop_arrow), verified by
-        # tests/test_r11_ops.py::test_knn_arrow_ab_identical and the
-        # strict oracle at sf0.001 AND sf0.01. Measured 2.4× (1.99 →
-        # 0.82 s at sf0.1): the interpreted per-row transform/
-        # array_sort chain runs outside codegen; numpy over Arrow
-        # batches vectorizes it (guide §4.2). Set
-        # SPARK_GRAFT_KNN_ARROW=0 to fall back.
-        return _knn_label_prop_arrow(vecs.select("vec_id", "label", "v"))
+
+def _knn_label_prop_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interpreted-HOF form of ``q_quality_knn_label_prop``: the
+    reference the Arrow pass (:func:`_knn_label_prop_arrow`) is pinned
+    to, hash-identical on every confusion cell
+    (``tests/test_r11_ops.py::test_knn_arrow_ab_identical``)."""
+    from flash_cdc_spark.operators import similarity as SIM
+
+    vecs = _knn_vecs(spark, sf_dir)
     # r10 rewrite (guide §2.4, §4.1): the seed set rides along as ONE
     # broadcast row holding the 100 seed structs, so the k·n scoring,
     # the top-k selection AND the majority vote are all row-local array

@@ -186,6 +186,17 @@ class _Supervised:
     batches_seen: int = 0
 
 
+def _java_error_head(exc: BaseException) -> str:
+    """The head of a Py4J error: its type and the Java exception's first
+    line, e.g. ``py4j.protocol.Py4JJavaError: An error occurred while
+    calling o266.collectToPython.`` / ``: java.lang.InterruptedException``.
+    Spark's ``StreamExecution.isInterruptionException`` reads a stop
+    from exactly this text: an interrupted call, or a ``SparkException``
+    naming a job of the query's cancelled job group."""
+    head = "\n".join(str(exc).splitlines()[:2])
+    return f"{type(exc).__module__}.{type(exc).__qualname__}: {head}"
+
+
 class PipelineManager:
     """C3 registry + C1 supervisor + C4 autostart + C5 graceful stop +
     C6 status + C8 dry-run validation."""
@@ -299,9 +310,12 @@ class PipelineManager:
                 # character, so the long Py4J traceback of a cancelled job
                 # overflowed the stream thread's stack; a short error
                 # without the chained traceback keeps the stop orderly.
+                # It keeps the head of the interrupted call's Java error,
+                # which is what Spark reads a stop from, so the query ends
+                # as stopped, without an exception.
                 raise RuntimeError(
                     f"pipeline {config.id}: micro-batch {batch_id} stopped before "
-                    f"it committed ({type(exc).__name__}); it replays on restart"
+                    f"it committed ({_java_error_head(exc)}); it replays on restart"
                 ) from None
             sup.batches_seen += 1
 

@@ -134,21 +134,31 @@ def test_boundary_memo_hits_on_identical_plan(spark):
     balance-only, so results stay identical either way."""
     from flash_cdc_spark.operators import global_order as go
 
-    go._BOUNDS_MEMO.clear()
+    go._MEMO.clear()
     mk = lambda: spark.range(5000).select(  # noqa: E731
         F.col("id"), (F.col("id") * 7 % 97).alias("v")
     )
     order = [F.col("v").asc(), F.col("id").asc()]
     r1 = with_global_order(mk(), order, rank_col="rk", buckets=8)
-    assert len(go._BOUNDS_MEMO) == 1
+    assert len(go._MEMO) == 1
+    assert next(iter(go._MEMO))[1] == "bounds"
     r2 = with_global_order(mk(), order, rank_col="rk", buckets=8)
-    assert len(go._BOUNDS_MEMO) == 1  # hit, no second entry
+    assert len(go._MEMO) == 1  # hit, no second entry
     assert sorted(map(tuple, r1.collect())) == sorted(map(tuple, r2.collect()))
     other = spark.range(4000).select(
         F.col("id"), (F.col("id") * 11 % 89).alias("v")
     )
     with_global_order(other, order, rank_col="rk", buckets=8)
-    assert len(go._BOUNDS_MEMO) == 2  # different plan, different key
+    assert len(go._MEMO) == 2  # different plan, different key
+    # multi_exact_ntile shares the memo: its first axis reuses the
+    # boundaries above, the second axis's boundaries and both axes'
+    # cuts are new, and a re-call over the same plan is a full hit
+    axes = {"n1": (order, 4), "n2": ([F.col("id").desc()], 3)}
+    n1 = go.multi_exact_ntile(mk(), axes, buckets=8)
+    assert sorted(k[1] for k in go._MEMO) == ["bounds"] * 3 + ["cuts"] * 2
+    n2 = go.multi_exact_ntile(mk(), axes, buckets=8)
+    assert len(go._MEMO) == 5
+    assert sorted(map(tuple, n1.collect())) == sorted(map(tuple, n2.collect()))
 
 
 def test_sampled_boundaries_stay_consistent(spark):
@@ -260,70 +270,77 @@ def test_bounded_running_sum_contract_guard(spark):
         )
 
 
-def test_persisted_input_registry_dedups_and_releases(spark):
-    from flash_cdc_spark.operators import global_order as go
+def _cached(df) -> bool:
+    from pyspark import StorageLevel
 
-    go.release_persisted_inputs()
+    return df.storageLevel != StorageLevel.NONE
+
+
+def test_persisted_input_registry_dedups_and_releases(spark):
+    spark.catalog.clearCache()
     rel = spark.range(80).select(F.col("id"), (F.col("id") % 5).alias("v"))
-    before = len(go._PERSISTED)
+    assert not _cached(rel)
     bounded_running_sum(rel, [F.col("id")], sums={"a": F.col("v")}).count()
-    # identical input plan → the second call reuses the cached handle
+    # identical input plan → the second call reuses Spark's cache entry
+    assert _cached(rel)
     bounded_running_sum(rel, [F.col("id")], sums={"b": F.col("v")}).count()
-    assert len(go._PERSISTED) == before + 1
-    released = go.release_persisted_inputs()
-    assert released >= 1
-    assert not go._PERSISTED
-    # a released (or externally clearCache'd) entry is re-persisted,
+    assert _cached(rel)
+    spark.catalog.clearCache()
+    assert not _cached(rel)
+    # a released (or externally clearCache'd) input is re-persisted,
     # not trusted stale
     bounded_running_sum(rel, [F.col("id")], sums={"c": F.col("v")}).count()
-    assert len(go._PERSISTED) == 1
-    go.release_persisted_inputs()
+    assert _cached(rel)
+    spark.catalog.clearCache()
 
 
 def test_persisted_registry_distinguishes_scale_factors(spark):
     # A LogicalRelation prints "Relation[cols] parquet" with NO path,
     # so the same query shape over two scale factors collides on the
     # canonical plan STRING alone — the r9 full-suite parity failures:
-    # the registry served sf0.001 rows to the sf0.1 queries. The digest
-    # folds inputFiles() in; both the persist registry and the boundary
-    # memo must keep the scales apart.
-    from flash_cdc_spark.operators import global_order as go
+    # a cache keyed on that string served sf0.001 rows to the sf0.1
+    # queries. Spark's cache and the boundary memo must keep the scales
+    # apart.
     from flash_cdc_spark.tables import load_table
 
-    go.release_persisted_inputs()
+    spark.catalog.clearCache()
 
-    def ranked(sf_dir):
-        per_cust = (
+    def per_cust(sf_dir):
+        return (
             load_table(spark, sf_dir, "orders")
             .groupBy("o_custkey")
             .agg(F.count(F.lit(1)).alias("c"))
         )
+
+    def ranked(sf_dir):
         return with_global_order(
-            per_cust, [F.col("o_custkey").asc()], rank_col="r"
+            per_cust(sf_dir), [F.col("o_custkey").asc()], rank_col="r"
         )
 
     n_small = ranked("/root/testdata/sf0.001").count()
+    assert not _cached(per_cust("/root/testdata/sf0.01"))
     n_big = ranked("/root/testdata/sf0.01").count()
     assert n_small == 150 and n_big == 1500  # NOT the shared plan's rows
-    assert len(go._PERSISTED) == 2  # one cached relation per scale
-    go.release_persisted_inputs()
+    # one cached relation per scale
+    assert _cached(per_cust("/root/testdata/sf0.001"))
+    assert _cached(per_cust("/root/testdata/sf0.01"))
+    spark.catalog.clearCache()
 
 
 def test_persisted_registry_never_dedups_in_memory_data(spark):
     # Two DIFFERENT in-memory datasets with the same schema print the
     # same canonicalized plan (LocalRelation/LogicalRDD hide their
-    # rows) — sharing the persisted handle would serve the FIRST
-    # dataset's rows for the second. They must persist anonymously.
-    from flash_cdc_spark.operators import global_order as go
-
-    go.release_persisted_inputs()
+    # rows) — sharing the persisted relation would serve the FIRST
+    # dataset's rows for the second. Spark's cache must keep them apart.
+    spark.catalog.clearCache()
     d1 = spark.createDataFrame([(1, 10), (2, 20)], "id bigint, v bigint")
     d2 = spark.createDataFrame([(1, 99), (2, 77)], "id bigint, v bigint")
     bounded_running_sum(d1, [F.col("id")], sums={"cs": F.col("v")}).count()
+    assert _cached(d1) and not _cached(d2)
     r2 = bounded_running_sum(d2, [F.col("id")], sums={"cs": F.col("v")})
     got = [r.cs for r in r2.orderBy("id").collect()]
     assert got == [99, 176], got
-    go.release_persisted_inputs()
+    spark.catalog.clearCache()
 
 
 def test_bounded_running_sum_plan_is_window_free(spark):
@@ -342,80 +359,14 @@ def test_bounded_running_sum_rejects_clashing_output(spark):
         bounded_running_sum(rel, [F.col("id")])
 
 
-def test_multi_global_rank_matches_single_axis_calls(spark):
-    """Each axis rank from the shared-sample multi-axis form must be
-    bit-identical to the chained with_global_order form it replaces
-    (the r10 rfm restructure), and the join-back on the unique key
-    must preserve the row set exactly."""
-    from flash_cdc_spark.operators.global_order import multi_global_rank
-
-    rel = spark.range(3000).select(
-        F.col("id"),
-        (F.col("id") * 7 % 11).alias("a"),  # tie-heavy
-        (F.col("id") * 13 % 97).alias("b"),
-        ((F.col("id") * 31 % 53) - 20).alias("c"),
-    )
-    axes = {
-        "ra": [F.col("a").desc(), F.col("id")],
-        "rb": [F.col("b").asc(), F.col("id")],
-        "rc": [F.col("c").asc(), F.col("id")],
-    }
-    got = multi_global_rank(rel, axes, key="id", buckets=16)
-    assert got.count() == 3000
-    chained = rel
-    for rk, order in axes.items():
-        chained = with_global_order(chained, order, rank_col=rk, buckets=16)
-    cols = ["id", "ra", "rb", "rc"]
-    assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
-        map(tuple, chained.select(*cols).collect())
-    )
-
-
-def test_multi_global_rank_shares_one_persist_and_one_sample(spark):
-    """Three axes over the same base relation: ONE persist-registry
-    entry, three boundary-memo entries derived from ONE shared sample
-    pass (a re-call is a full memo hit)."""
-    from flash_cdc_spark.operators import global_order as go
-    from flash_cdc_spark.operators.global_order import multi_global_rank
-    from flash_cdc_spark.tables import load_table
-
-    go.release_persisted_inputs()
-    go._BOUNDS_MEMO.clear()
-
-    def build():
-        base = (
-            load_table(spark, "/root/testdata/sf0.001", "orders")
-            .groupBy("o_custkey")
-            .agg(F.count(F.lit(1)).alias("f"), F.max("o_totalprice").alias("m"))
-        )
-        return multi_global_rank(
-            base,
-            {
-                "rf": [F.col("f").asc(), F.col("o_custkey")],
-                "rm": [F.col("m").desc(), F.col("o_custkey")],
-            },
-            key="o_custkey",
-            buckets=8,
-        )
-
-    r1 = build()
-    assert len(go._PERSISTED) == 1  # one shared input entry
-    assert len(go._BOUNDS_MEMO) == 2  # per-axis boundaries, one sample
-    r2 = build()
-    assert len(go._PERSISTED) == 1 and len(go._BOUNDS_MEMO) == 2
-    assert sorted(map(tuple, r1.collect())) == sorted(map(tuple, r2.collect()))
-    go.release_persisted_inputs()
-
-
 def test_persisted_registry_distinguishes_output_names(spark):
     """ADVICE r9 (medium): canonicalization erases alias names, so two
     structurally identical projections that differ only in column
     NAMING must not share a persisted handle — the second caller would
     get the first caller's schema (missing/SWAPPED column bindings)."""
-    from flash_cdc_spark.operators import global_order as go
     from flash_cdc_spark.tables import load_table
 
-    go.release_persisted_inputs()
+    spark.catalog.clearCache()
     base = load_table(spark, "/root/testdata/sf0.001", "orders").select(
         "o_orderkey", "o_custkey"
     )
@@ -427,7 +378,9 @@ def test_persisted_registry_distinguishes_output_names(spark):
     )
     r1 = with_global_order(d1, [F.col("x").asc()], rank_col="r")
     r2 = with_global_order(d2, [F.col("x").asc()], rank_col="r")
-    assert len(go._PERSISTED) == 2  # schema-distinct registry entries
+    # Spark's cache serves the name-swapped projection from one cached
+    # relation under its own column names
+    assert _cached(d1) and _cached(d2)
     # d2's x is o_custkey: its rank-1 row must carry the MIN custkey,
     # not d1's min orderkey binding.
     top2 = r2.filter(F.col("r") == 1).select("x").collect()[0][0]
@@ -436,7 +389,7 @@ def test_persisted_registry_distinguishes_output_names(spark):
     top1 = r1.filter(F.col("r") == 1).select("x").collect()[0][0]
     min_ok = base.agg(F.min("o_orderkey")).collect()[0][0]
     assert top1 == min_ok
-    go.release_persisted_inputs()
+    spark.catalog.clearCache()
 
 
 def test_digest_survives_cache_substitution(spark):
@@ -452,7 +405,7 @@ def test_digest_survives_cache_substitution(spark):
     from flash_cdc_spark.operators import global_order as go
     from flash_cdc_spark.tables import load_table
 
-    go.release_persisted_inputs()
+    spark.catalog.clearCache()
 
     def mk(sf):
         return (
@@ -461,20 +414,20 @@ def test_digest_survives_cache_substitution(spark):
             .agg(F.count(F.lit(1)).alias("f"))
         )
 
-    a1 = go._plan_digest(mk("sf0.001"), include_schema=True)
-    b1 = go._plan_digest(mk("sf0.01"), include_schema=True)
-    go._persist_shared(mk("sf0.001")).count()
-    go._persist_shared(mk("sf0.01")).count()
+    a1 = go._plan_digest(mk("sf0.001"))
+    b1 = go._plan_digest(mk("sf0.01"))
+    go._persist(mk("sf0.001")).count()
+    go._persist(mk("sf0.01")).count()
     # rebuilt plans now resolve against the cache — digests must not move
-    assert go._plan_digest(mk("sf0.001"), include_schema=True) == a1
-    assert go._plan_digest(mk("sf0.01"), include_schema=True) == b1
+    assert go._plan_digest(mk("sf0.001")) == a1
+    assert go._plan_digest(mk("sf0.01")) == b1
     assert a1 != b1
-    # and the registry must still hold exactly one handle per scale
-    assert len(go._PERSISTED) == 2
-    go._persist_shared(mk("sf0.001"))
-    go._persist_shared(mk("sf0.01"))
-    assert len(go._PERSISTED) == 2  # hits, not re-persists
-    go.release_persisted_inputs()
+    # and Spark's cache must hold one relation per scale: a rebuild
+    # finds it cached, so it is a hit, not a re-persist
+    assert _cached(mk("sf0.001")) and _cached(mk("sf0.01"))
+    assert go._persist(mk("sf0.001")).count() == 150
+    assert go._persist(mk("sf0.01")).count() == 1500
+    spark.catalog.clearCache()
 
 
 @pytest.mark.parametrize("k", [1, 3, 5, 7])
@@ -517,3 +470,24 @@ def test_multi_exact_ntile_small_n_degenerates_like_ntile(spark):
     assert sorted((r.id, r.nt) for r in got.collect()) == [
         (1, 3), (2, 1), (3, 2)
     ]
+
+
+@pytest.mark.smoke
+def test_multi_exact_ntile_never_serves_foreign_cuts(spark):
+    """Cut keys decide values, so they may only be reused for the same
+    data. Two in-memory frames with the same schema print the same
+    canonical plan (LocalRelation hides its rows): the second frame
+    must get its own cuts, not the first frame's (which put 300 of its
+    400 rows in the wrong bucket)."""
+    from flash_cdc_spark.operators.global_order import multi_exact_ntile
+
+    order = [F.col("v").asc(), F.col("id").asc()]
+    for sign in (1, -1):
+        rel = spark.createDataFrame(
+            [(i, sign * i) for i in range(400)], "id bigint, v bigint"
+        )
+        got = multi_exact_ntile(rel, {"nt": (order, 4)}, buckets=8)
+        exp = rel.select("id", F.ntile(4).over(Window.orderBy(*order)).alias("nt"))
+        assert sorted(map(tuple, got.select("id", "nt").collect())) == sorted(
+            map(tuple, exp.collect())
+        )

@@ -172,25 +172,18 @@ def test_prefix_queries_have_no_window_at_query_time(spark, sf_dir):
 
 
 def test_knn_arrow_ab_identical(spark, sf_dir):
-    """VERDICT r10 #7 A/B: the flag-gated Arrow scoring path must be
-    HASH-IDENTICAL to the shipped interpreted-HOF path — exact float
-    equality on every confusion cell."""
+    """VERDICT r10 #7 A/B: the Arrow scoring path the query ships must
+    be HASH-IDENTICAL to the interpreted-HOF reference form — exact
+    float equality on every confusion cell."""
+    from flash_cdc_spark.queries.quality_ext import _knn_label_prop_hof
+
     name = "q_quality_knn_label_prop"
-    prev = os.environ.get("SPARK_GRAFT_KNN_ARROW")
-    try:
-        os.environ["SPARK_GRAFT_KNN_ARROW"] = "0"
-        base = {
-            (r["true_label"], r["predicted_label"]): r["n_vecs"]
-            for r in QUERIES[name](spark, sf_dir).collect()
-        }
-        os.environ["SPARK_GRAFT_KNN_ARROW"] = "1"
-        arrow = {
-            (r["true_label"], r["predicted_label"]): r["n_vecs"]
-            for r in QUERIES[name](spark, sf_dir).collect()
-        }
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_KNN_ARROW", None)
-        else:
-            os.environ["SPARK_GRAFT_KNN_ARROW"] = prev
+    base = {
+        (r["true_label"], r["predicted_label"]): r["n_vecs"]
+        for r in _knn_label_prop_hof(spark, sf_dir).collect()
+    }
+    arrow = {
+        (r["true_label"], r["predicted_label"]): r["n_vecs"]
+        for r in QUERIES[name](spark, sf_dir).collect()
+    }
     assert base == arrow

@@ -884,12 +884,11 @@ def test_crash_between_delivery_and_commit_redelivers_last_batch(
 
 
 def test_stop_mid_delivery_redelivers_uncommitted_batch(spark, tmp_path, webhook_server):
-    """A stop that lands while a micro-batch is posting: the query ends
-    with a short "stopped before it committed" error (not a
-    ``StackOverflowError`` in Spark's interrupted-by-stop check, which
-    left no termination cause), the batch does not commit, and the
-    stored-mode restart delivers every record, the ones posted before
-    the stop again."""
+    """A stop that lands while a micro-batch is posting: Spark counts it
+    as a stop (not a ``StackOverflowError`` in its interrupted-by-stop
+    check, nor an error termination), so the query ends without an
+    exception; the batch does not commit, and the stored-mode restart
+    delivers every record, the ones posted before the stop again."""
     ids = [f"s{k}" for k in range(6)]
     _write_events(spark, str(tmp_path / "source"), [_event_row(1, ids, flag="true")])
     webhook_server.delay_s = 1.0  # one partition posts for ~6 s
@@ -904,7 +903,7 @@ def test_stop_mid_delivery_redelivers_uncommitted_batch(spark, tmp_path, webhook
     status = mgr.status(53)
     before_stop = _delivered_ids(webhook_server)
     assert status["status"] == "stopped" and status["batches_seen"] == 0
-    assert "micro-batch 0 stopped before it committed" in status["last_error"]
+    assert mgr._pipelines[53].query.exception() is None
     assert 1 <= len(before_stop) < len(ids)
     commits = os.path.join(config.checkpoint_dir(), "commits")
     assert not (os.path.isdir(commits) and any(n.isdigit() for n in os.listdir(commits)))

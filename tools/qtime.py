@@ -40,7 +40,6 @@ def main() -> None:
     spark = get_spark(app_name="qtime")
     spark.range(1000).selectExpr("sum(id)").collect()
     _calibrate(spark)
-    from flash_cdc_spark.operators.global_order import release_persisted_inputs
 
     quiet = float(os.environ.get("SPARK_GRAFT_QTIME_QUIET", "0"))
     for name in names:
@@ -77,7 +76,6 @@ def main() -> None:
             f"calib={pre:.2f}/{post:.2f}",
             flush=True,
         )
-        release_persisted_inputs()
         spark.catalog.clearCache()
     spark.stop()
 

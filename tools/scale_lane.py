@@ -175,7 +175,6 @@ def build_fixture(spark, src_dir: str, out_dir: str) -> None:
 
 
 def cmd_run(fixture_dir: str) -> int:
-    from flash_cdc_spark.operators.global_order import release_persisted_inputs
     from flash_cdc_spark.queries import QUERIES
     from flash_cdc_spark.session import get_spark
     from flash_cdc_spark.tables import default_sf_dir
@@ -251,7 +250,6 @@ def cmd_run(fixture_dir: str) -> int:
             f"{name}: {med:.3f}s {out[name]['samples']} calib={post:.2f}",
             file=sys.stderr,
         )
-        release_persisted_inputs()
         spark.catalog.clearCache()
     spark.sparkContext.setJobDescription(None)
     result = {
