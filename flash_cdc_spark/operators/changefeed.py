@@ -11,24 +11,27 @@ step  reference                                      here
 ====  =============================================  =======================
 P2    header field access (616-633)                  nested-struct projection
 P3    ``_normalize_commit_ms`` (215-227)             :func:`normalize_commit_ms`
-P4    ``since`` drop filter (621-628)                event-time filter
-P5    empty-recordIds guard (660-668)                ``size(recordIds) > 0``
-P6    per-recordId explode (676)                     ``posexplode``
+P4    ``since`` drop filter (621-628)                ``deliver`` conjunct
+P5    empty-recordIds guard (660-668)                ``deliver`` conjunct
+P6    per-recordId explode (676)                     ``posexplode_outer``
 P7    positional list alignment (679-682)            ``element_at`` compat expr
 P8    truthy normalization (690-716)                 :func:`truthy_flag`
-P9    flag-is-True filter (718-727)                  ``flag_norm <=> true``
+P9    flag-is-True filter (718-727)                  ``deliver`` conjunct
 P10   webhook payload projection (736-744)           ``to_json(struct(...))``
 ====  =============================================  =======================
 
-Dropped rows (P4/P5/P9) never suppress offset progress: Structured
-Streaming checkpoints per micro-batch regardless of filters, which is
-exactly the reference's "skip but still advance replay id" behavior.
+The three drops (P4/P5/P9) are not filters: each row carries them as
+one ``deliver`` flag, and a record or event the reference skips keeps
+a non-deliverable row. The reference advances the replay cursor past
+skipped events (``sf_pubsub.py:621-668``, ``752-780``), so the webhook
+sink and the offset mirror must see every event's cursor even when
+nothing is posted. ``.filter("deliver")`` gives exactly the rows the
+reference posts; that is the form the DuckDB oracle checks.
 
-Scale note: the pipeline is narrow (no shuffle at all) — filters,
-projections and a generator (posexplode). On a cluster it runs embarrass-
-ingly parallel over source partitions; Catalyst pushes the ``since``
-cutoff and the ``size(recordIds)`` guard ahead of the explode so the
-generator only sees surviving events.
+Scale note: the pipeline is narrow (no shuffle at all) — projections
+and a generator (``posexplode_outer``). On a cluster it runs embarrass-
+ingly parallel over source partitions; under ``.filter("deliver")``
+Catalyst pushes the ``since`` conjunct ahead of the explode.
 """
 
 from __future__ import annotations
@@ -40,47 +43,25 @@ from flash_cdc_spark.functions.normalize import normalize_commit_ms, truthy_flag
 
 __all__ = [
     "normalize_header",
-    "explode_records",
     "align_positional",
-    "filter_flagged",
-    "project_webhook_payload",
+    "webhook_payload",
     "changefeed_with_delivery_flag",
-    "changefeed_pipeline",
 ]
 
 HEADER = "ChangeEventHeader"
+# FIXTURES.md §2: the flag arrives as a scalar or as a per-record list
+SCALAR_FLAG, ARRAY_FLAG = "FlashField__c", "FlashField__c_arr"
 
 
-def normalize_header(df: DataFrame, drop_before_ms: int | None = None) -> DataFrame:
-    """P2+P3+P4: project header fields, normalize the commit timestamp to
-    epoch-ms, and (``since`` mode) drop events older than the cutoff.
-
-    The cutoff comparison uses the *normalized* ms value, as the reference
-    does (``sf_pubsub.py:621-628`` compares ``commit_ms < drop_before_ms``).
-    Events with an un-parseable timestamp have ``commit_ms`` null; the
-    reference only drops when ``commit_ms is not None and commit_ms <
-    cutoff``, so nulls survive — replicated via a null-tolerant predicate.
-    """
-    out = df.withColumns(
+def normalize_header(df: DataFrame) -> DataFrame:
+    """P2+P3: project header fields and normalize the commit timestamp
+    to epoch-ms (null when it cannot be parsed)."""
+    return df.withColumns(
         {
             "entity_name": F.col(f"{HEADER}.entityName"),
             "change_type": F.col(f"{HEADER}.changeType"),
             "commit_ms": normalize_commit_ms(F.col(f"{HEADER}.commitTimestamp")),
         }
-    )
-    if drop_before_ms is not None:
-        out = out.filter(
-            F.col("commit_ms").isNull() | (F.col("commit_ms") >= F.lit(drop_before_ms))
-        )
-    return out
-
-
-def explode_records(df: DataFrame) -> DataFrame:
-    """P5+P6: drop events with null/empty ``recordIds`` (offset still
-    advances — see module docstring), then emit one row per record id with
-    its position preserved (needed for P7 alignment)."""
-    return df.filter(F.size(F.col(f"{HEADER}.recordIds")) > 0).select(
-        "*", F.posexplode(F.col(f"{HEADER}.recordIds")).alias("record_pos", "record_id")
     )
 
 
@@ -104,26 +85,16 @@ def align_positional(
     )
 
 
-def filter_flagged(df: DataFrame, flag_col: str = "flag_value") -> DataFrame:
-    """P8+P9: normalize the flag leniently, keep rows where it is exactly
-    true (``flash_field_normalized is not True → skip``,
-    ``sf_pubsub.py:718-727``). Null-safe equality (``<=>``) so null
-    normalized values drop instead of filtering to unknown."""
-    return df.withColumn("flag_norm", truthy_flag(F.col(flag_col))).filter(
-        F.col("flag_norm").eqNullSafe(F.lit(True))
-    )
-
-
-def project_webhook_payload(
-    df: DataFrame, topic: Column | str, instance_url: Column | str
-) -> DataFrame:
-    """P10: shape the webhook body
-    ``{"data":[{"Id","subscriptionTopic","instanceUrl"}]}``
-    (``sf_pubsub.py:736-744``) — kept as a struct column plus a JSON
-    rendering for the HTTP sink."""
+def webhook_payload(topic: Column | str, instance_url: Column | str) -> Column:
+    """P10: the webhook body
+    ``{"data":[{"Id","subscriptionTopic","instanceUrl"}]}`` for the
+    row's ``record_id`` (``sf_pubsub.py:736-744``), as a struct. The
+    plan posts its JSON rendering, ``payload_json``; it does not carry
+    the struct, because ``foreachBatch`` materializes every column of a
+    micro-batch whether the writer reads it or not."""
     topic_c = F.lit(topic) if isinstance(topic, str) else topic
     url_c = F.lit(instance_url) if isinstance(instance_url, str) else instance_url
-    payload = F.struct(
+    return F.struct(
         F.array(
             F.struct(
                 F.col("record_id").alias("Id"),
@@ -132,7 +103,6 @@ def project_webhook_payload(
             )
         ).alias("data")
     )
-    return df.withColumn("payload", payload).withColumn("payload_json", F.to_json(payload))
 
 
 def changefeed_with_delivery_flag(
@@ -140,19 +110,21 @@ def changefeed_with_delivery_flag(
     topic: str,
     instance_url: str,
     drop_before_ms: int | None = None,
-    scalar_flag_col: str = "FlashField__c",
-    array_flag_col: str = "FlashField__c_arr",
-    passthrough: tuple[str, ...] = ("replay_seq",),
 ) -> DataFrame:
-    """Variant that KEEPS dropped rows with a ``deliver`` flag instead of
-    filtering them — the shape every pipeline's webhook sink reads: the
-    reference advances the replay cursor for since-dropped, empty-ids,
-    and flag-false events alike (``sf_pubsub.py:621-668``, ``752-780``),
-    so the sink must see every event's cursor even when nothing is
-    posted. Uses ``posexplode_outer`` so empty/null ``recordIds`` events
-    survive as one non-deliverable row (the only rows whose
-    ``record_pos`` is null); a null element inside ``recordIds`` is
-    delivered as ``{"Id": null}``, as in :func:`changefeed_pipeline`."""
+    """Full P2→P10 pipeline over a decoded change-event DataFrame
+    (batch or streaming) in the canonical FIXTURES.md §2 shape.
+
+    Returns one row per record id, plus one row for each event with
+    null or empty ``recordIds`` (``posexplode_outer``; the only rows
+    whose ``record_pos`` is null), with columns ``replay_seq`` (when
+    the input has it), ``record_id, entity_name, change_type,
+    commit_ms, record_pos, deliver, payload_json``. ``deliver`` is true
+    exactly for the records the reference posts; ``drop_before_ms`` is
+    the ``since``-mode cutoff, compared against the *normalized* ms
+    value, and an event whose timestamp cannot be parsed survives it,
+    as in the reference (``commit_ms is not None and commit_ms <
+    cutoff``). A null element inside ``recordIds`` is delivered as
+    ``{"Id": null}``."""
     df = normalize_header(decoded)
     since_ok = (
         F.lit(True)
@@ -164,16 +136,17 @@ def changefeed_with_delivery_flag(
         F.posexplode_outer(F.col(f"{HEADER}.recordIds")).alias("record_pos", "record_id"),
     )
     df = df.withColumn(
-        "flag_value", align_positional(scalar_flag_col, array_flag_col, "record_pos")
+        "flag_value", align_positional(SCALAR_FLAG, ARRAY_FLAG, "record_pos")
     ).withColumn("flag_norm", truthy_flag(F.col("flag_value")))
     deliver = (
         since_ok
         & F.col("record_pos").isNotNull()
         & F.col("flag_norm").eqNullSafe(F.lit(True))
     )
-    df = df.withColumn("deliver", deliver)
-    df = project_webhook_payload(df, topic, instance_url)
-    keep = [c for c in passthrough if c in decoded.columns]
+    df = df.withColumns(
+        {"deliver": deliver, "payload_json": F.to_json(webhook_payload(topic, instance_url))}
+    )
+    keep = ["replay_seq"] if "replay_seq" in decoded.columns else []
     return df.select(
         *keep,
         "record_id",
@@ -182,38 +155,5 @@ def changefeed_with_delivery_flag(
         "commit_ms",
         "record_pos",
         "deliver",
-        "payload_json",
-    )
-
-
-def changefeed_pipeline(
-    decoded: DataFrame,
-    topic: str,
-    instance_url: str,
-    drop_before_ms: int | None = None,
-    scalar_flag_col: str = "FlashField__c",
-    array_flag_col: str = "FlashField__c_arr",
-) -> DataFrame:
-    """Full P2→P10 pipeline over a decoded change-event DataFrame
-    (batch or streaming) in the canonical FIXTURES.md §2 shape.
-
-    Returns one row per *delivered* record id with columns:
-    ``record_id, entity_name, change_type, commit_ms, record_pos,
-    payload (struct), payload_json (string)``.
-    """
-    df = normalize_header(decoded, drop_before_ms=drop_before_ms)
-    df = explode_records(df)
-    df = df.withColumn(
-        "flag_value", align_positional(scalar_flag_col, array_flag_col, "record_pos")
-    )
-    df = filter_flagged(df, "flag_value")
-    df = project_webhook_payload(df, topic, instance_url)
-    return df.select(
-        "record_id",
-        "entity_name",
-        "change_type",
-        "commit_ms",
-        "record_pos",
-        "payload",
         "payload_json",
     )

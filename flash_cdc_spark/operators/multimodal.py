@@ -1030,46 +1030,17 @@ def synth_scene_video_udf(
     return _synth
 
 
-def video_frame_luma(
-    df: DataFrame, binary_col: str = "media", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-frame luminance totals via ``mapInPandas`` over the REAL
-    concatenated-PGM parse: one output row per (video, frame) with the
-    exact integer raster sum and pixel count. Executor-side frame
-    explosion, same shape as :func:`video_frame_hashes` — the blob
-    never moves."""
-    out_schema = f"{id_col} bigint, frame_idx int, luma_sum bigint, n_px int"
-
-    def _luma(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf[id_col], pdf[binary_col]):
-                for f, frame in enumerate(parse_pgm_stream(bytes(blob))):
-                    w, h, _maxval, raster = parse_pgm(frame)
-                    total = int(
-                        np.frombuffer(raster, dtype=np.uint8)
-                        .astype(np.int64)
-                        .sum()
-                    )
-                    rows.append((int(did), f, total, w * h))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "frame_idx", "luma_sum", "n_px"]
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(_luma, schema=out_schema)
-
-
 def video_luma_profile(
     df: DataFrame, binary_col: str = "media", id_col: str = "doc_id"
 ) -> DataFrame:
     """Per-VIDEO luminance profile: one output row per video carrying
     the frame-ordered array of exact integer raster sums (plus the
     fixed per-frame pixel count — the synth emits constant-dimension
-    clips). The pivoted form of :func:`video_frame_luma` (r11): frame
-    order is preserved by the parse, so consumers compute frame-to-
-    frame deltas and cut statistics ROW-LOCALLY — no per-video window
-    shuffle, no re-aggregation; the decode output never crosses an
-    exchange."""
+    clips), parsed executor-side from the REAL concatenated-PGM stream
+    like :func:`video_frame_hashes` (r11). Frame order is preserved by
+    the parse, so consumers compute frame-to-frame deltas and cut
+    statistics ROW-LOCALLY — no per-video window shuffle, no
+    re-aggregation; the decode output never crosses an exchange."""
     out_schema = f"{id_col} bigint, n_px int, luma array<bigint>"
 
     def _luma(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

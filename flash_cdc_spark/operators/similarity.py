@@ -33,7 +33,6 @@ __all__ = [
     "as_double_vec",
     "l2_norm",
     "dot",
-    "cosine",
     "lsh_bucket",
     "brute_force_topk",
     "lsh_topk",
@@ -142,10 +141,6 @@ def l2_norm(v: Column | str, cast: bool = False) -> Column:
     if isinstance(v, str):
         return F.expr(norm_sql(v, cast=cast))
     return F.sqrt(dot(v, v))
-
-
-def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    return dot(a, b) / (norm_a * norm_b)
 
 
 def lsh_bucket(v: Column | str, cast: bool = False) -> Column:

@@ -21,7 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flash_cdc_spark.operators.changefeed import changefeed_pipeline
+from flash_cdc_spark.operators.changefeed import (
+    changefeed_with_delivery_flag,
+    webhook_payload,
+)
 from flash_cdc_spark.queries import query
 from flash_cdc_spark.schemas import DECODED_CHANGE_EVENT
 from flash_cdc_spark.sources.registry import (
@@ -145,20 +148,24 @@ def synth_decoded_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_changefeed_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full changefeed pipeline in ``since`` mode over the synthesized
-    envelope. Plan: narrow single-stage (filters → generate → project),
-    no shuffle — embarrassingly parallel at any scale."""
+    envelope: the plan every pipeline runs, filtered on ``deliver``,
+    with topic and instance URL read from the payload struct it renders
+    into ``payload_json``. Plan:
+    narrow single-stage (filter → generate → project), no shuffle —
+    embarrassingly parallel at any scale."""
     decoded = synth_decoded_events(spark, sf_dir)
-    out = changefeed_pipeline(
+    out = changefeed_with_delivery_flag(
         decoded, TOPIC, INSTANCE_URL, drop_before_ms=SINCE_CUTOFF_MS
-    )
+    ).filter("deliver")
+    posted = webhook_payload(TOPIC, INSTANCE_URL)["data"][0]
     return out.select(
         "record_id",
         "entity_name",
         "change_type",
         "commit_ms",
         "record_pos",
-        F.col("payload.data")[0]["subscriptionTopic"].alias("topic"),
-        F.col("payload.data")[0]["instanceUrl"].alias("instance_url"),
+        posted["subscriptionTopic"].alias("topic"),
+        posted["instanceUrl"].alias("instance_url"),
     )
 
 

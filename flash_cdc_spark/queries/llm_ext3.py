@@ -309,18 +309,22 @@ _POWER_ITERS = 6
 # Shared covariance CTE prefix (comp → means → centered → cov) — the
 # single source of truth for BOTH PCA oracles (top-eigenvector here,
 # projection in llm_ext4); editing the covariance definition in one
-# place keeps the two snapshots from silently diverging.
-_COV_CTE = """comp AS (
+# place keeps the two snapshots from silently diverging. Every CTE of
+# both oracles is MATERIALIZED: DuckDB 1.0 inlines a plain CTE at each
+# reference, and each ``v{t}`` reads ``u{t}`` twice, so the inlined
+# tree doubled per iteration and planning alone took 46–90 s at
+# sf0.001; materialized, each oracle runs in about 0.04 s.
+_COV_CTE = """comp AS MATERIALIZED (
         SELECT vec_id, CAST(i AS INT) AS d,
                CAST(embedding[CAST(i + 1 AS INT)] AS DOUBLE) AS x
         FROM embeddings, LATERAL (SELECT unnest(range(64)) AS i)
     ),
-    means AS (SELECT d, avg(x) AS mu FROM comp GROUP BY d),
-    centered AS (
+    means AS MATERIALIZED (SELECT d, avg(x) AS mu FROM comp GROUP BY d),
+    centered AS MATERIALIZED (
         SELECT c.vec_id, c.d, c.x - m.mu AS xc
         FROM comp c JOIN means m ON m.d = c.d
     ),
-    upper_cov AS (
+    upper_cov AS MATERIALIZED (
         SELECT a.d AS d1, b.d AS d2,
                round(sum(a.xc * b.xc)
                      / (SELECT count(*) FROM embeddings), 9) AS cov
@@ -328,7 +332,7 @@ _COV_CTE = """comp AS (
           ON a.vec_id = b.vec_id AND a.d <= b.d
         GROUP BY a.d, b.d
     ),
-    cov AS (
+    cov AS MATERIALIZED (
         SELECT d1, d2, cov FROM upper_cov
         UNION ALL
         SELECT d2, d1, cov FROM upper_cov WHERE d1 < d2
@@ -341,20 +345,21 @@ def _duck_power_iteration_cte(iters: int) -> str:
     kmeans_cte/pagerank: matvec results and normalized vectors round to
     9 dp per iteration on both engines."""
     parts = [
-        "v0 AS (SELECT CAST(unnest(range(64)) AS INT) AS d, "
+        "v0 AS MATERIALIZED (SELECT CAST(unnest(range(64)) AS INT) AS d, "
         "round(1.0 / 8.0, 9) AS v)",  # 1/sqrt(64)
     ]
     for t in range(1, iters + 1):
         parts.append(
-            f"u{t} AS (SELECT m.d1 AS d, round(sum(m.cov * v.v), 9) AS u "
+            f"u{t} AS MATERIALIZED (SELECT m.d1 AS d, "
+            f"round(sum(m.cov * v.v), 9) AS u "
             f"FROM cov m JOIN v{t - 1} v ON v.d = m.d2 GROUP BY m.d1)"
         )
         parts.append(
-            f"n{t} AS (SELECT sqrt(sum(u * u)) AS nrm FROM u{t})"
+            f"n{t} AS MATERIALIZED (SELECT sqrt(sum(u * u)) AS nrm FROM u{t})"
         )
         parts.append(
-            f"v{t} AS (SELECT d, round(u / (SELECT nrm FROM n{t}), 9) AS v "
-            f"FROM u{t})"
+            f"v{t} AS MATERIALIZED (SELECT d, "
+            f"round(u / (SELECT nrm FROM n{t}), 9) AS v FROM u{t})"
         )
     return ",\n    ".join(parts)
 

@@ -24,7 +24,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark", "ensure_min_parallelism"]
+__all__ = ["get_spark", "ensure_min_parallelism"]
 
 
 def ensure_min_parallelism(df, min_partitions: int | None = None):
@@ -191,9 +191,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -7,7 +7,7 @@ The SMTP client mirrors the reference's settings surface (host, port
 an injectable transport so tests never open sockets. Wire
 ``EmailAlerter.alert`` (or any callable) into
 :class:`~flash_cdc_spark.streaming.pipelines.PipelineManager`'s
-``alert=`` hook and/or a ``StreamingQueryListener``.
+``alert=`` hook.
 """
 
 from __future__ import annotations
@@ -18,11 +18,9 @@ import ssl
 from dataclasses import dataclass, field
 from email.message import EmailMessage
 
-from pyspark.sql.streaming import StreamingQueryListener
-
 LOG = logging.getLogger(__name__)
 
-__all__ = ["SmtpSettings", "EmailAlerter", "AlertingQueryListener"]
+__all__ = ["SmtpSettings", "EmailAlerter"]
 
 
 @dataclass(frozen=True)
@@ -81,28 +79,3 @@ class EmailAlerter:
         except Exception as exc:
             LOG.error("alert mail for pipeline %s failed: %s", pipeline_id, exc)
             return False
-
-
-class AlertingQueryListener(StreamingQueryListener):
-    """Session-wide listener: fires the alerter when any streaming query
-    terminates with an exception (C6/K4 integration point; register via
-    ``spark.streams.addListener``)."""
-
-    def __init__(self, alerter: EmailAlerter):
-        self._alerter = alerter
-
-    def onQueryStarted(self, event):  # noqa: N802
-        pass
-
-    def onQueryProgress(self, event):  # noqa: N802
-        pass
-
-    def onQueryIdle(self, event):  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event):  # noqa: N802
-        if event.exception:
-            # manager names queries "pipeline-{id}"
-            name = getattr(event, "name", None) or ""
-            pid = int(name.rsplit("-", 1)[-1]) if name.rsplit("-", 1)[-1].isdigit() else -1
-            self._alerter.alert(pid, event.exception)

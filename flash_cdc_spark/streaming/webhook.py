@@ -2,7 +2,11 @@
 
 K1 — HTTP POST with bounded retry (``app/services/sf_pubsub.py:333-356``):
 15 s timeout, ≤3 attempts, exponential backoff 1 s ×2 capped at 30 s,
-plus 0–0.25 s jitter; success = any 2xx.
+plus 0–0.25 s jitter; success = any 2xx. :func:`post_with_retry` is the
+one attempt loop: it returns the final status and raises
+:class:`WebhookDeliveryError` once the attempts run out. The
+dead-letter writer passes it a ``permanent`` predicate, so a final 3xx
+or a 4xx other than 429 returns at once instead of retrying.
 
 K3 — conditional commit (``sf_pubsub.py:752-780``): the replay cursor
 advances only when every attempted webhook for the batch succeeded.
@@ -51,7 +55,6 @@ from pyspark.sql import DataFrame
 __all__ = [
     "RetryPolicy",
     "post_with_retry",
-    "post_classified",
     "pooled_http_transport",
     "webhook_batch_writer",
     "webhook_batch_writer_with_dlq",
@@ -170,11 +173,14 @@ def pooled_http_transport(timeout_s: float = 15.0) -> Transport:
 
 def _permanent(status: int) -> bool:
     """A final 3xx or a 4xx other than 429: a rejection that retries
-    cannot fix (malformed payload, revoked endpoint, redirect loop)."""
+    cannot fix (malformed payload, revoked endpoint). The transport has
+    already followed up to 3 redirect hops, so a surviving 3xx is a
+    redirect loop that a retry replays verbatim. 5xx, 429 and network
+    errors stay transient."""
     return 300 <= status < 500 and status != 429
 
 
-def _retrying_post(
+def post_with_retry(
     transport: Transport,
     url: str,
     body: str,
@@ -182,12 +188,13 @@ def _retrying_post(
     sleep: Callable[[float], None] = time.sleep,
     permanent: Callable[[int], bool] = lambda status: False,
 ) -> int:
-    """The K1 attempt loop: ≤max_attempts posts with capped exponential
-    backoff + jitter. Returns the status of the first 2xx or
-    ``permanent`` attempt (a transport error counts as status -1);
-    raises :class:`WebhookDeliveryError` once the attempts are
-    exhausted, so the task, the job and the micro-batch fail and the
-    batch replays (K3)."""
+    """K1: ≤max_attempts posts with capped exponential backoff + jitter.
+    Returns the status of the first 2xx attempt, or of the first one
+    ``permanent`` accepts as a rejection retries cannot fix (the
+    dead-letter writer passes :func:`_permanent`); a transport error
+    counts as status -1. Raises :class:`WebhookDeliveryError` once the
+    attempts are exhausted, so the task, the job and the micro-batch
+    fail and the batch replays (K3)."""
     delay = policy.backoff_initial_s
     status = -1
     for attempt in range(1, policy.max_attempts + 1):
@@ -206,41 +213,6 @@ def _retrying_post(
     )
 
 
-def post_with_retry(
-    transport: Transport,
-    url: str,
-    body: str,
-    policy: RetryPolicy = RetryPolicy(),
-    sleep: Callable[[float], None] = time.sleep,
-) -> bool:
-    """K1 as in the reference: every non-2xx retries; True iff some
-    attempt returned 2xx."""
-    try:
-        _retrying_post(transport, url, body, policy, sleep)
-    except WebhookDeliveryError:
-        return False
-    return True
-
-
-def post_classified(
-    transport: Transport,
-    url: str,
-    body: str,
-    policy: RetryPolicy = RetryPolicy(),
-    sleep: Callable[[float], None] = time.sleep,
-) -> int:
-    """K1 variant for the DLQ path: returns the FINAL status code.
-    2xx → delivered. 4xx other than 429 returns immediately — a
-    permanent rejection. A FINAL 3xx is also permanent (ADVICE r5): the
-    transport already followed up to 3 redirect hops, so a surviving
-    3xx is a redirect loop or chain that retrying replays verbatim —
-    exactly the wedge the DLQ exists to avoid. Transient failures
-    (5xx, 429, network errors) retry and raise
-    :class:`WebhookDeliveryError` when exhausted, so the batch replays
-    and at-least-once is preserved for everything transient."""
-    return _retrying_post(transport, url, body, policy, sleep, _permanent)
-
-
 def _make_transport(transport_factory, policy: "RetryPolicy") -> Transport:
     """Build the transport, plumbing ``policy.timeout_s`` into the stock
     factory (it takes a ``timeout_s`` argument; a custom zero-arg
@@ -257,17 +229,20 @@ def _post_batches(
     url: str,
     transport_factory: Callable[[], Transport],
     policy: RetryPolicy,
-    post: Callable[[Transport, str, str, RetryPolicy], object],
+    permanent: Callable[[int], bool],
     bodies: Callable[["pd.DataFrame"], Iterable[str]],
-) -> Iterator[tuple["pd.DataFrame", list]]:
+) -> Iterator[tuple["pd.DataFrame", list[int]]]:
     """Executor side of the ``mapInPandas`` writers: one transport per
-    task; each Arrow batch's ``bodies`` are posted with ``post`` in
-    partition order, yielding ``(batch, [post result per body])``. A
-    ``post`` that raises fails the task before any later record of the
-    partition is posted."""
+    task; each Arrow batch's ``bodies`` are posted with
+    :func:`post_with_retry` in partition order, yielding ``(batch,
+    [final status per body])``. Exhausted retries raise, failing the
+    task before any later record of the partition is posted."""
     transport = _make_transport(transport_factory, policy)
     for pdf in batches:
-        yield pdf, [post(transport, url, body, policy) for body in bodies(pdf)]
+        yield pdf, [
+            post_with_retry(transport, url, body, policy, permanent=permanent)
+            for body in bodies(pdf)
+        ]
 
 
 Mirror = tuple[str, int, str]  # (offsets_path, pipeline_id, topic)
@@ -311,7 +286,7 @@ def webhook_batch_writer(
 
         def deliver(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
             posted = _post_batches(
-                batches, url, transport_factory, policy, _retrying_post,
+                batches, url, transport_factory, policy, lambda status: False,
                 lambda pdf: pdf.loc[pdf["deliver"].fillna(False).astype(bool), "payload_json"],
             )
             for pdf, delivered in posted:
@@ -381,7 +356,7 @@ def webhook_batch_writer_with_dlq(
 
         def deliver(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
             posted = _post_batches(
-                batches, url, transport_factory, policy, post_classified,
+                batches, url, transport_factory, policy, _permanent,
                 lambda pdf: pdf["payload_json"],
             )
             for pdf, statuses in posted:

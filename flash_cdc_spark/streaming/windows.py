@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "tumbling_counts",
-    "sliding_value_sums",
     "session_windows",
     "dedup_within_watermark",
     "running_user_totals",
@@ -43,21 +42,6 @@ def tumbling_counts(
         )
         .select(F.col("w.start").alias("bucket_start"), F.col("w.end").alias("bucket_end"),
                 "event_type", "n_events", "total_value")
-    )
-
-
-def sliding_value_sums(
-    events: DataFrame,
-    window: str = "6 hours",
-    slide: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Sliding event-time windows (each event in window/slide buckets)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
-        .select(F.col("w.start").alias("win_start"), "n_events", "total_value")
     )
 
 

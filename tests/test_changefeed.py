@@ -1,13 +1,15 @@
 """End-to-end tests for the changefeed pipeline over the edge-case rows
 mandated by FIXTURES.md §2 (each case is a branch the reference takes in
-sf_pubsub.py:603-789)."""
+sf_pubsub.py:603-789). They run the plan every pipeline runs, filtered
+on ``deliver``: the rows the webhook receives."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
-from flash_cdc_spark.operators.changefeed import changefeed_pipeline
-from flash_cdc_spark.schemas import DECODED_CHANGE_EVENT
+from flash_cdc_spark.operators.changefeed import changefeed_with_delivery_flag
+from flash_cdc_spark.schemas import DECODED_CHANGE_EVENT, WEBHOOK_PAYLOAD
 
 TOPIC = "/data/OpportunityChangeEvent"
 URL = "https://example.my.salesforce.com"
@@ -29,8 +31,12 @@ def _event(entity="Opportunity", change="UPDATE", ids=(), ts=1_700_000_000_000,
 def run(spark):
     def _run(rows, drop_before_ms=None):
         df = spark.createDataFrame(rows, DECODED_CHANGE_EVENT)
-        out = changefeed_pipeline(df, TOPIC, URL, drop_before_ms=drop_before_ms)
-        return out.collect()
+        out = changefeed_with_delivery_flag(
+            df, TOPIC, URL, drop_before_ms=drop_before_ms
+        ).filter("deliver")
+        # the posted body, parsed back into the payload struct
+        payload = F.from_json("payload_json", WEBHOOK_PAYLOAD).alias("payload")
+        return out.select("*", payload).collect()
 
     return _run
 
@@ -40,6 +46,7 @@ def test_scalar_flag_broadcasts_to_all_record_ids(run):
     assert sorted(r["record_id"] for r in rows) == ["a", "b", "c"]
 
 
+@pytest.mark.smoke
 def test_list_flag_aligns_positionally(run):
     rows = run([_event(ids=["a", "b", "c"], flag_arr=["true", "false", "true"])])
     assert sorted(r["record_id"] for r in rows) == ["a", "c"]
@@ -113,6 +120,25 @@ def test_since_mode_drops_old_but_keeps_new_and_null_ts(run):
         drop_before_ms=cutoff,
     )
     assert sorted(r["record_id"] for r in rows) == ["new"]
+
+
+def test_dropped_events_keep_one_undeliverable_row(spark):
+    """Unfiltered, an event the reference skips without posting keeps
+    exactly one row, with ``deliver`` false: the row that carries its
+    cursor to the offset mirror."""
+    cutoff = 1_700_000_000_000
+    null_ids = ({"entityName": "null-ids", "changeType": "UPDATE", "recordIds": None,
+                 "commitTimestamp": cutoff}, "true", None, None, None)
+    rows = [
+        _event(entity="since-dropped", ids=["old"], flag="true", ts=cutoff - 1),
+        _event(entity="empty-ids", ids=[], flag="true"),
+        null_ids,
+    ]
+    df = spark.createDataFrame(rows, DECODED_CHANGE_EVENT)
+    out = changefeed_with_delivery_flag(df, TOPIC, URL, drop_before_ms=cutoff).collect()
+    assert sorted((r["entity_name"], r["deliver"]) for r in out) == [
+        ("empty-ids", False), ("null-ids", False), ("since-dropped", False)
+    ]
 
 
 def test_webhook_payload_shape(run):

@@ -8,10 +8,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from flash_cdc_spark.operators.changefeed import (
-    changefeed_pipeline,
-    changefeed_with_delivery_flag,
-)
+from flash_cdc_spark.operators.changefeed import changefeed_with_delivery_flag
 from flash_cdc_spark.schemas import DECODED_CHANGE_EVENT
 
 # ---- python oracle (transcribed reference semantics) ----------------------
@@ -129,22 +126,19 @@ def events_strategy(draw):
 )
 @given(events=events_strategy(), use_cutoff=st.booleans())
 def test_pipeline_matches_python_oracle(spark, events, use_cutoff):
-    """Both plans deliver the oracle's records: the filtered
-    ``changefeed_pipeline`` and the flagged plan every pipeline runs,
-    filtered on ``deliver``."""
+    """The plan every pipeline runs, filtered on ``deliver``, delivers
+    the oracle's records."""
     cutoff = 1_700_000_000_000 if use_cutoff else None
     df = spark.createDataFrame(events, DECODED_CHANGE_EVENT)
     expected = python_oracle(events, cutoff)
-    for out in (
-        changefeed_pipeline(df, "/t", "https://u", drop_before_ms=cutoff),
-        changefeed_with_delivery_flag(df, "/t", "https://u", drop_before_ms=cutoff)
-        .filter("deliver"),
-    ):
-        got = sorted(
-            ((r["record_id"], r["record_pos"], r["commit_ms"]) for r in out.collect()),
-            key=_null_first,
-        )
-        assert got == expected
+    out = changefeed_with_delivery_flag(
+        df, "/t", "https://u", drop_before_ms=cutoff
+    ).filter("deliver")
+    got = sorted(
+        ((r["record_id"], r["record_pos"], r["commit_ms"]) for r in out.collect()),
+        key=_null_first,
+    )
+    assert got == expected
 
 
 @given(

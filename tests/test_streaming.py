@@ -20,7 +20,11 @@ from flash_cdc_spark.streaming.pipelines import (
     classify_error,
     FatalConfigError,
 )
-from flash_cdc_spark.streaming.webhook import RetryPolicy, post_with_retry
+from flash_cdc_spark.streaming.webhook import (
+    RetryPolicy,
+    WebhookDeliveryError,
+    post_with_retry,
+)
 
 FAST_POLICY = RetryPolicy(
     timeout_s=2.0, max_attempts=2, backoff_initial_s=0.01, backoff_cap_s=0.02,
@@ -232,11 +236,11 @@ def test_post_with_retry_backoff_and_success():
         return 500 if len(calls) < 3 else 200
 
     sleeps = []
-    ok = post_with_retry(flaky, "http://u", "{}",
-                         RetryPolicy(max_attempts=3, backoff_initial_s=1.0,
-                                     jitter_max_s=0.0),
-                         sleep=sleeps.append)
-    assert ok and len(calls) == 3
+    status = post_with_retry(flaky, "http://u", "{}",
+                             RetryPolicy(max_attempts=3, backoff_initial_s=1.0,
+                                         jitter_max_s=0.0),
+                             sleep=sleeps.append)
+    assert status == 200 and len(calls) == 3
     assert sleeps == [1.0, 2.0]  # 1s then x2
 
 
@@ -293,13 +297,12 @@ def test_pooled_transport_reuses_connection_and_survives_close():
 
     # endpoint fully down: the transport error must reach the retry
     # policy as a failed attempt, not hang or succeed
-    from flash_cdc_spark.streaming.webhook import RetryPolicy, post_with_retry
-
-    assert not post_with_retry(
-        t, url2, "{}",
-        RetryPolicy(max_attempts=2, backoff_initial_s=0.0, jitter_max_s=0.0),
-        sleep=lambda s: None,
-    )
+    with pytest.raises(WebhookDeliveryError):
+        post_with_retry(
+            t, url2, "{}",
+            RetryPolicy(max_attempts=2, backoff_initial_s=0.0, jitter_max_s=0.0),
+            sleep=lambda s: None,
+        )
 
 
 def test_make_transport_plumbs_policy_timeout():
@@ -513,6 +516,55 @@ def test_offset_mirror_folds_a_multi_partition_batch(spark, tmp_path, webhook_se
     assert [(r["batch_id"], r["last_replay_seq"], r["n_events"], r["n_delivered"])
             for r in mirror] == [(7, 29, 30, 10)]
     assert _delivered_ids(webhook_server) == sorted(f"r{seq}" for seq in range(0, 30, 3))
+
+
+def _file_transport(log):
+    """Transport factory whose posts append each body to ``log`` and
+    return 200. The posts run in the Python workers, so the test reads
+    them back from the file."""
+    def factory():
+        def post(url, body):
+            with open(log, "a") as f:
+                f.write(body + "\n")
+            return 200
+
+        return post
+
+    return factory
+
+
+@pytest.mark.parametrize("mirrored", [False, True])
+def test_writer_arrow_path_edge_batches(spark, tmp_path, mirrored):
+    """The writer's Arrow path on edge-shaped batches: an empty batch
+    posts nothing and writes no mirror row; a single-row batch posts its
+    row; a row whose ``deliver`` is null is not posted but still counts
+    in ``n_events``."""
+    from flash_cdc_spark.streaming.webhook import webhook_batch_writer
+
+    log = tmp_path / "posts.log"
+    offsets = str(tmp_path / "offsets")
+    batch_fn = webhook_batch_writer(
+        "http://127.0.0.1:9/hook", _file_transport(str(log)), FAST_POLICY,
+        mirror=(offsets, 41, "/data/OpportunityChangeEvent") if mirrored else None,
+    )
+
+    def posted():
+        if not log.exists():
+            return []
+        return sorted(json.loads(line)["data"][0]["Id"] for line in log.read_text().splitlines())
+
+    batch_fn(spark.createDataFrame([], MIRROR_INPUT), 0)
+    assert posted() == []
+    batch_fn(spark.createDataFrame(_mirror_rows([4]), MIRROR_INPUT), 1)
+    assert posted() == ["r4"]
+    null_deliver = (None, json.dumps({"data": [{"Id": "r5"}]}), 5)
+    batch_fn(spark.createDataFrame([null_deliver, *_mirror_rows([6])], MIRROR_INPUT), 2)
+    assert posted() == ["r4", "r6"]
+    if mirrored:
+        assert not os.path.exists(os.path.join(offsets, "batch_id=0"))
+        mirror = _read_mirror(spark, offsets)
+        assert [(r["batch_id"], r["last_replay_seq"], r["n_events"], r["n_delivered"])
+                for r in mirror] == [(1, 4, 1, 1), (2, 6, 2, 1)]
 
 
 def test_sink_overwrite_is_dynamic_without_touching_session_conf(
@@ -954,14 +1006,11 @@ def test_filecontext_checkpoint_resumes_under_filesystem_manager(
     assert sorted(n for n in os.listdir(commits) if n.isdigit()) == ["0", "1", "2"]
 
 
-def test_post_classified_permanent_vs_transient():
-    """DLQ classification (r5): non-retryable 4xx returns immediately
-    (no retries burned), 429/5xx retry then raise, 2xx returns."""
-    from flash_cdc_spark.streaming.webhook import (
-        RetryPolicy,
-        WebhookDeliveryError,
-        post_classified,
-    )
+def test_post_with_retry_permanent_vs_transient():
+    """DLQ classification (r5): with the dead-letter writer's
+    ``permanent`` predicate, non-retryable 4xx returns immediately (no
+    retries burned), 429/5xx retry then raise, 2xx returns."""
+    from flash_cdc_spark.streaming.webhook import _permanent
 
     policy = RetryPolicy(max_attempts=3, backoff_initial_s=0.0, jitter_max_s=0.0)
     calls = []
@@ -975,25 +1024,29 @@ def test_post_classified_permanent_vs_transient():
 
         return t
 
+    def post(statuses):
+        return post_with_retry(transport_of(statuses), "u", "b", policy,
+                               sleep=lambda s: None, permanent=_permanent)
+
     # permanent 400: one attempt, status returned
     calls.clear()
-    assert post_classified(transport_of([400]), "u", "b", policy, sleep=lambda s: None) == 400
+    assert post([400]) == 400
     assert len(calls) == 1
     # 429 is transient: retries, then succeeds
     calls.clear()
-    assert post_classified(transport_of([429, 200]), "u", "b", policy, sleep=lambda s: None) == 200
+    assert post([429, 200]) == 200
     assert len(calls) == 2
     # persistent 500: exhausts retries and raises (batch must replay)
     calls.clear()
     with pytest.raises(WebhookDeliveryError):
-        post_classified(transport_of([500, 500, 500]), "u", "b", policy, sleep=lambda s: None)
+        post([500, 500, 500])
     assert len(calls) == 3
     # final 3xx is PERMANENT (ADVICE r5): the transport already
     # exhausted its redirect hops, so a surviving 3xx is a redirect
     # loop — retrying replays it forever, which is the wedge the DLQ
     # exists to avoid. One attempt, status returned, caller dead-letters.
     calls.clear()
-    assert post_classified(transport_of([301]), "u", "b", policy, sleep=lambda s: None) == 301
+    assert post([301]) == 301
     assert len(calls) == 1
 
 

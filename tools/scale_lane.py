@@ -25,7 +25,9 @@ Usage:
     python tools/scale_lane.py merge          # -> SCALE_LANE.json
 
 ``run`` writes ``scale_lane_c<cpus>.json`` next to SCALE_LANE.json;
-``merge`` combines the highest and lowest core-count run files present.
+``merge`` combines the highest and lowest core-count run files present
+and prints one line: core ratio, median ratio and the worst-scaling
+query.
 The fixture is built once under ``--fixture-dir`` (default
 ``/tmp/flash_scale_fixture``) and reused by both runs — it is INPUT
 data (every measured execution scans it from parquet); delete the
@@ -322,6 +324,11 @@ def cmd_merge() -> int:
         json.dump(merged, f, indent=1, sort_keys=True)
         f.write("\n")
     print(f"wrote {path}")
+    scored = [(v["ratio_low_over_high"], n) for n, v in per_query.items()
+              if v["ratio_low_over_high"] is not None]
+    worst = f"{min(scored)[1]} {min(scored)[0]}x" if scored else "none"
+    print(f"c{low_c}→c{high_c}: core ratio {merged['core_ratio']}x, "
+          f"median ratio {merged['median_ratio']}x, worst {worst}")
     return 0
 
 
