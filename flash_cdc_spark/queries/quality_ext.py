@@ -859,8 +859,13 @@ def _knn_label_prop_arrow(vecs: DataFrame) -> DataFrame:
                 continue
             true_lab = batch.column("label").to_pylist()
             va = batch.column("v")
+            # a null vector scores NaN against every seed: NaN sorts
+            # last, so its top-k is the first seeds by id, as the
+            # reference's all-null cosines tie-break to seed_id
+            V = np.full((n, S.shape[1]), np.nan)
+            valid = va.is_valid().to_numpy(zero_copy_only=False)
             flat = va.flatten().to_numpy(zero_copy_only=False)
-            V = flat.reshape(n, -1)
+            V[valid] = flat.reshape(-1, S.shape[1])
             vnrm = np.sqrt(np.add.accumulate(V * V, axis=1)[:, -1])
             C = np.empty((n, S.shape[0]), dtype=np.float64)
             for j in range(S.shape[0]):
@@ -971,7 +976,7 @@ def _knn_label_prop_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpreted-HOF form of ``q_quality_knn_label_prop``: the
     reference the Arrow pass (:func:`_knn_label_prop_arrow`) is pinned
     to, hash-identical on every confusion cell
-    (``tests/test_r11_ops.py::test_knn_arrow_ab_identical``)."""
+    (``tests/test_ann.py::test_knn_arrow_ab_identical``)."""
     from flash_cdc_spark.operators import similarity as SIM
 
     vecs = _knn_vecs(spark, sf_dir)

@@ -89,11 +89,18 @@ def _canon_rows(col_names, rows, strict: bool = False):
     return sorted(col_names), out
 
 
-def compare(name: str, spark, sf_dir: str, con, strict: bool = False) -> dict:
-    qfn = QUERIES[name]
-    sdf = qfn(spark, sf_dir)
-    s_cols = [c.lower() for c in sdf.columns]
-    s_rows = [tuple(r) for r in sdf.collect()]
+def spark_result(name: str, spark, sf_dir: str) -> tuple[list[str], list]:
+    """Build ``QUERIES[name]`` over ``sf_dir`` and collect it: the
+    columns and rows :func:`compare` takes."""
+    sdf = QUERIES[name](spark, sf_dir)
+    return sdf.columns, sdf.collect()
+
+
+def compare(name: str, columns, rows, con, strict: bool = False) -> dict:
+    """Compare a Spark result (``columns``, ``rows``) of ``name`` with
+    its oracle run on ``con``."""
+    s_cols = [c.lower() for c in columns]
+    s_rows = [tuple(r) for r in rows]
     if name not in ORACLE:
         return {"query": name, "mode": "rows_only", "rows": len(s_rows), "ok": True}
     res = con.execute(ORACLE[name])
@@ -149,7 +156,7 @@ def main() -> int:
     failures = 0
     for name in names:
         try:
-            r = compare(name, spark, sf_dir, con, strict=strict)
+            r = compare(name, *spark_result(name, spark, sf_dir), con, strict=strict)
         except Exception as exc:  # surface per-query, keep going
             r = {"query": name, "ok": False, "detail": f"EXCEPTION {type(exc).__name__}: {exc}"}
         status = "OK " if r.get("ok") else "FAIL"

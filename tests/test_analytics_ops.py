@@ -1,8 +1,9 @@
-"""Semantic units for the r6 analytics extensions — checks the oracle
+"""Semantic units for the analytics queries — checks the oracle
 mimic can't express: closed-form expectations on constructed inputs
 (Theil-Sen on an exact line, CUSUM against a brute-force prefix scan,
-Benford digit extraction at float boundaries) and invariants on the
-fixture (Pareto classes partition, RFM scores span 1..5)."""
+Benford digit extraction at float boundaries, market-basket support)
+and invariants on the fixture (Pareto classes partition, RFM scores
+span 1..5, new-vs-returning revenue conserves, rule probabilities)."""
 
 from __future__ import annotations
 
@@ -10,14 +11,8 @@ import math
 
 from pyspark.sql import functions as F
 
-from flash_cdc_spark.queries.analytics_ext import (
-    q_customer_rfm_segments,
-    q_events_benford_audit,
-    q_events_cusum_changepoint,
-    q_events_theilsen_trend,
-    q_retrieval_chunk_maxp,
-    q_sales_pareto_abc,
-)
+from flash_cdc_spark.queries.analytics_ext import q_events_theilsen_trend
+from flash_cdc_spark.tables import load_table
 
 
 def test_benford_digit_extraction_boundaries(spark):
@@ -34,19 +29,17 @@ def test_benford_digit_extraction_boundaries(spark):
     assert got == {1: 1, 2: 9, 3: 1, 4: 1, 5: 9, 6: 1}
 
 
-def test_benford_chi2_nonnegative_and_complete(spark, sf_dir):
-    out = q_events_benford_audit(spark, sf_dir).collect()
+def test_benford_chi2_nonnegative_and_complete(query_run):
+    out = query_run("q_events_benford_audit").rows
     assert out, "benford audit returned no rows"
     for r in out:
         assert r["chi2"] >= 0.0
         assert r["n"] > 0
 
 
-def test_cusum_matches_bruteforce(spark, sf_dir):
+def test_cusum_matches_bruteforce(spark, sf_dir, query_run):
     """The window-based CUSUM peak equals a driver-side brute-force
     prefix scan of the same (mu/sigma-standardized) series."""
-    from flash_cdc_spark.tables import load_table
-
     e = load_table(spark, sf_dir, "events")
     rows = [
         (r["event_type"], r["ts"], r["event_id"], r["value"])
@@ -77,7 +70,7 @@ def test_cusum_matches_bruteforce(spark, sf_dir):
         expected[et] = best[0]
     got = {
         r["event_type"]: r["cp_event_id"]
-        for r in q_events_cusum_changepoint(spark, sf_dir).collect()
+        for r in query_run("q_events_cusum_changepoint").rows
     }
     assert got == expected
 
@@ -109,10 +102,8 @@ def test_theilsen_exact_on_linear_series(spark, tmp_path):
     assert out[0]["theil_sen_slope"] == 2.5
 
 
-def test_pareto_classes_partition_parts(spark, sf_dir):
-    from flash_cdc_spark.tables import load_table
-
-    out = {r["abc_class"]: r for r in q_sales_pareto_abc(spark, sf_dir).collect()}
+def test_pareto_classes_partition_parts(spark, sf_dir, query_run):
+    out = {r["abc_class"]: r for r in query_run("q_sales_pareto_abc").rows}
     assert set(out) == {"A", "B", "C"}
     n_parts = (
         load_table(spark, sf_dir, "lineitem").select("l_partkey").distinct().count()
@@ -125,12 +116,11 @@ def test_pareto_classes_partition_parts(spark, sf_dir):
     assert (out["A"]["class_revenue"] + out["B"]["class_revenue"]) / total <= 1.0
 
 
-def test_rfm_scores_span_quintiles(spark, sf_dir):
-    out = q_customer_rfm_segments(spark, sf_dir).collect()
+def test_rfm_scores_span_quintiles(spark, sf_dir, query_run):
+    out = query_run("q_customer_rfm_segments").rows
     for axis in ("r_score", "f_score", "m_score"):
         seen = {r[axis] for r in out}
         assert seen == {1, 2, 3, 4, 5}, f"{axis} buckets incomplete: {seen}"
-    from flash_cdc_spark.tables import load_table
 
     n_cust = (
         load_table(spark, sf_dir, "orders").select("o_custkey").distinct().count()
@@ -138,8 +128,8 @@ def test_rfm_scores_span_quintiles(spark, sf_dir):
     assert sum(r["n_customers"] for r in out) == n_cust
 
 
-def test_chunk_maxp_scores_bounded_and_ranked(spark, sf_dir):
-    out = q_retrieval_chunk_maxp(spark, sf_dir).collect()
+def test_chunk_maxp_scores_bounded_and_ranked(query_run):
+    out = query_run("q_retrieval_chunk_maxp").rows
     assert 0 < len(out) <= 10
     assert [r["rk"] for r in out] == list(range(1, len(out) + 1))
     scores = [r["doc_score"] for r in out]
@@ -150,14 +140,11 @@ def test_chunk_maxp_scores_bounded_and_ranked(spark, sf_dir):
 # ------------------------- batch 2 (CDC + stats) -------------------------
 
 
-def test_weighted_sample_favors_heavy_docs(spark, sf_dir):
+def test_weighted_sample_favors_heavy_docs(spark, sf_dir, query_run):
     """Efraimidis-Spirakis with w = ln(1+n_chars) must oversample long
     documents: the sample's average length exceeds the corpus average
     (the r6 sign bug this pins: ranking by k ASC inverts the weights)."""
-    from flash_cdc_spark.queries.analytics_ext2 import q_train_weighted_sample
-    from flash_cdc_spark.tables import load_table
-
-    out = q_train_weighted_sample(spark, sf_dir).collect()
+    out = query_run("q_train_weighted_sample").rows
     n = sum(r["n_sampled"] for r in out)
     assert n == 200
     sample_avg = sum(r["avg_len"] * r["n_sampled"] for r in out) / n
@@ -167,12 +154,9 @@ def test_weighted_sample_favors_heavy_docs(spark, sf_dir):
     assert sample_avg > corpus_avg
 
 
-def test_equidepth_buckets_are_equal_depth_and_ordered(spark, sf_dir):
-    from flash_cdc_spark.queries.analytics_ext2 import q_stats_equidepth_histogram
-    from flash_cdc_spark.tables import load_table
-
+def test_equidepth_buckets_are_equal_depth_and_ordered(spark, sf_dir, query_run):
     out = sorted(
-        q_stats_equidepth_histogram(spark, sf_dir).collect(),
+        query_run("q_stats_equidepth_histogram").rows,
         key=lambda r: r["bucket"],
     )
     assert [r["bucket"] for r in out] == list(range(1, 11))
@@ -184,10 +168,8 @@ def test_equidepth_buckets_are_equal_depth_and_ordered(spark, sf_dir):
         assert prev["hi"] <= cur["lo"]
 
 
-def test_gini_bounded_and_positive(spark, sf_dir):
-    from flash_cdc_spark.queries.analytics_ext2 import q_sales_gini_concentration
-
-    out = q_sales_gini_concentration(spark, sf_dir).collect()
+def test_gini_bounded_and_positive(query_run):
+    out = query_run("q_sales_gini_concentration").rows
     assert out
     for r in out:
         assert 0.0 <= r["gini"] < 1.0
@@ -218,13 +200,10 @@ def test_ols_exact_on_linear_series(spark, tmp_path):
     assert out[0]["r2"] == 1.0
 
 
-def test_net_effect_partitions_window_keys(spark, sf_dir):
+def test_net_effect_partitions_window_keys(spark, sf_dir, query_run):
     """I-keys + U-keys = distinct keys with >=1 change in the window,
     and every I-key's first-ever change is inside the window."""
-    from flash_cdc_spark.queries.analytics_ext2 import q_changefeed_net_effect
-    from flash_cdc_spark.tables import load_table
-
-    out = q_changefeed_net_effect(spark, sf_dir).collect()
+    out = query_run("q_changefeed_net_effect").rows
     got_keys = sum(r["n_keys"] for r in out)
     e = load_table(spark, sf_dir, "events")
     expected = (
@@ -237,16 +216,13 @@ def test_net_effect_partitions_window_keys(spark, sf_dir):
     assert all(r["n_changes"] >= r["n_keys"] for r in out)
 
 
-def test_skew_report_orderkey_bounded(spark, sf_dir):
+def test_skew_report_orderkey_bounded(spark, sf_dir, query_run):
     """TPC-H lineitem has at most 7 lines per order — the skew report
     must agree, and partkey/suppkey must show more rows per key than
     p50=1-ish orderkey fanout."""
-    from flash_cdc_spark.queries.analytics_ext2 import q_maintenance_skew_report
-
-    out = {r["key_col"]: r for r in q_maintenance_skew_report(spark, sf_dir).collect()}
+    out = {r["key_col"]: r for r in query_run("q_maintenance_skew_report").rows}
     assert set(out) == {"l_orderkey", "l_partkey", "l_suppkey"}
     li = None
-    from flash_cdc_spark.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
     expected_max = (
@@ -256,3 +232,76 @@ def test_skew_report_orderkey_bounded(spark, sf_dir):
     assert out["l_suppkey"]["n_keys"] < out["l_orderkey"]["n_keys"]
     for r in out.values():
         assert r["skew_ratio"] >= 1.0
+
+
+def test_new_vs_returning_conservation(spark, sf_dir, query_run):
+    """Every month's new+returning revenue must equal that month's
+    total order revenue, every customer is new in exactly one month,
+    and the share is new/(new+returning)."""
+    out = query_run("q_sales_new_vs_returning").rows
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderdate", "o_totalprice"
+    ).collect()
+    from collections import defaultdict
+    from decimal import Decimal
+
+    month = lambda d: (d.year, d.month)  # noqa: E731
+    first = {}
+    for r in o:
+        k = r["o_custkey"]
+        if k not in first or r["o_orderdate"] < first[k]:
+            first[k] = r["o_orderdate"]
+    tot = defaultdict(Decimal)
+    new = defaultdict(Decimal)
+    new_cust = defaultdict(set)
+    for r in o:
+        m = month(r["o_orderdate"])
+        p = Decimal(str(r["o_totalprice"])).quantize(Decimal("0.01"))
+        tot[m] += p
+        if month(first[r["o_custkey"]]) == m:
+            new[m] += p
+            new_cust[m].add(r["o_custkey"])
+    assert len(out) == len(tot)
+    for r in out:
+        m = (r["month"].year, r["month"].month)
+        assert float(new[m]) == r["revenue_new"]
+        assert float(tot[m] - new[m]) == r["revenue_returning"]
+        assert r["n_new"] == len(new_cust[m])
+        assert r["new_share"] == float(new[m]) / float(tot[m])
+    # every customer is new exactly once
+    assert sum(r["n_new"] for r in out) == len(first)
+
+
+def test_basket_rules_probability_invariants(query_run):
+    rows = query_run("q_market_basket_rules").rows
+    assert rows, "fixture should produce rules at min support 5"
+    for r in rows:
+        assert r["supp_ab"] <= min(r["supp_a"], r["supp_b"])
+        assert 0.0 < r["confidence"] <= 1.0
+        assert r["lift"] > 0.0
+    lifts = [r["lift"] for r in rows]
+    assert lifts == sorted(lifts, reverse=True)
+
+
+# --- market basket --------------------------------------------------
+
+
+def test_market_basket_closed_form(spark, tmp_path):
+    from flash_cdc_spark.queries.batch_ext import q_market_basket_pairs
+
+    # orders: 1:{A,B,C} 2:{A,B} 3:{A,B} 4:{C} -> AB support 3, AC 1, BC 1
+    part = [(1, "A"), (2, "B"), (3, "C")]
+    li = [(1, 1), (1, 2), (1, 3), (2, 1), (2, 2), (3, 1), (3, 2), (3, 2), (4, 3)]
+    spark.createDataFrame(part, "p_partkey long, p_brand string").write.mode(
+        "overwrite"
+    ).parquet(f"{tmp_path}/part.parquet")
+    spark.createDataFrame(li, "l_orderkey long, l_partkey long").write.mode(
+        "overwrite"
+    ).parquet(f"{tmp_path}/lineitem.parquet")
+    rows = sorted(
+        q_market_basket_pairs(spark, str(tmp_path)).collect(), key=lambda r: r["rk"]
+    )
+    assert (rows[0]["brand_a"], rows[0]["brand_b"], rows[0]["support"]) == ("A", "B", 3)
+    by_pair = {(r["brand_a"], r["brand_b"]): r["support"] for r in rows}
+    # the duplicated (3, B) lineitem must NOT inflate support (distinct)
+    assert by_pair[("A", "C")] == 1 and by_pair[("B", "C")] == 1

@@ -6,9 +6,7 @@ one plan whether or not it trained."""
 
 from __future__ import annotations
 
-import contextlib
 import glob
-import io
 import os
 import re
 import shutil
@@ -23,7 +21,8 @@ from flash_cdc_spark.artifacts import stored, trained
 from flash_cdc_spark.operators import tokenize as TOK
 from flash_cdc_spark.queries import QUERIES
 from flash_cdc_spark.queries.tokenize_ext import _BPE_K
-from flash_cdc_spark.tables import load_table
+from flash_cdc_spark.tables import TABLE_NAMES, load_table
+from tests.conftest import formatted_plan
 
 
 @pytest.mark.smoke
@@ -197,22 +196,54 @@ def test_rewrite_evicts_superseded_identity(spark, tmp_path, monkeypatch):
 
 def _plan_shape(df) -> str:
     """Formatted physical plan with the per-construction ids (expression
-    ids, exchange plan ids, RDD ids) masked."""
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return re.sub(r"#\d+L?|plan_id=\d+|RDD\[\d+\]", "#", buf.getvalue())
+    ids, lambda variable numbers, exchange plan ids, RDD ids and call
+    sites) masked."""
+    plan = re.sub(r"(lambda \w+?)_\d+#", r"\1#", formatted_plan(df))
+    return re.sub(r"#\d+L?|plan_id=\d+|RDD\[\d+\]|(?<=RDD) at \S+:\d+", "#", plan)
 
 
-@pytest.mark.parametrize("name", ["q_quality_logreg_score", "q_embedding_pca_project"])
-def test_trained_consumers_plan_is_stable(spark, sf_dir, tmp_path, name):
-    """The call that trains and every later call build ONE plan from
-    the trained value. A fresh copy of the corpus is a fresh identity,
-    so the first call here is a guaranteed miss."""
-    for table in ("documents", "embeddings"):
+# One consumer per artifact kind: (query, the kinds its build stores or
+# trains on a fresh corpus).
+_CONSUMERS = [
+    ("q_quality_logreg_score", {"logreg_weights"}),
+    ("q_embedding_pca_project", {"pca_state"}),
+    ("q_train_dsir_weights", {"dsir_lambda"}),
+    ("q_text_langid_profile", {"langid_profile"}),
+    ("q_quality_nb_classifier", {"nb_model"}),
+    ("q_text_bpe_tokenize", {"bpe_first_merges"}),
+    ("q_text_bpe_train_rounds", {"bpe_rounds"}),
+    ("q_sim_ann_ivf_topk", {"ivf_centers", "ivf_layout"}),
+    ("q_sim_ann_ivf_incremental", {"ivf_centers_base"}),
+    ("q_sim_ann_pq_adc_topk", {"pq_books", "pq_codes_wide"}),
+    ("q_sim_ann_ivfadc_topk", {"ivf_centers", "pq_books", "pq_codes_wide+cells"}),
+    ("q_dedup_simhash_pairs", {"simhash32"}),
+    ("q_dedup_simhash64_pairs", {"simhash64"}),
+    ("q_dedup_prefix_jaccard_join", {"shingles3", "shingles3_prefrank"}),
+    ("q_text_ngram_novelty", {"shingles5_src"}),
+    (
+        "q_text_bigram_perplexity",
+        {"bigram_c1_train", "bigram_c2_train", "bigram_vocab_train"},
+    ),
+    ("q_train_contamination_bloom", {"bloommask1048576k3_train90_grams8"}),
+    ("q_retrieval_prf_expansion", {"tok_tf", "tok_dl"}),
+    ("q_multimodal_dhash_neardup", {"dhash"}),
+    ("q_multimodal_audiohash_neardup", {"audiohash"}),
+    ("q_multimodal_video_neardup", {"videohash"}),
+]
+
+
+@pytest.mark.parametrize("name,kinds", _CONSUMERS, ids=[n for n, _ in _CONSUMERS])
+def test_trained_consumers_plan_is_stable(spark, sf_dir, tmp_path, name, kinds):
+    """The call that trains or stores and every later call (a memo hit)
+    build ONE plan from the artifact. A fresh copy of the corpus is a
+    fresh identity, so the first call here is a guaranteed miss."""
+    for table in TABLE_NAMES:
         shutil.copyfile(
             os.path.join(sf_dir, f"{table}.parquet"),
             os.path.join(str(tmp_path), f"{table}.parquet"),
         )
     first = _plan_shape(QUERIES[name](spark, str(tmp_path)))
+    memo = {**artifacts._STORED, **artifacts._TRAINED}
+    built = {kind for kind, corpus, _ in memo if corpus == str(tmp_path)}
+    assert kinds <= built, built
     assert first == _plan_shape(QUERIES[name](spark, str(tmp_path)))

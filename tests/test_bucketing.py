@@ -7,13 +7,11 @@ the join plan contains no Exchange on either side."""
 
 from __future__ import annotations
 
-import io
-import contextlib
-
 import pytest
 from pyspark.sql import functions as F
 
 from flash_cdc_spark.tables import load_table
+from tests.conftest import formatted_plan
 
 
 @pytest.fixture(scope="module")
@@ -35,13 +33,6 @@ def bucketed_warehouse(spark, sf_dir, tmp_path_factory):
     spark.sql("DROP DATABASE IF EXISTS bucketed_db")
 
 
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 def test_bucketed_join_has_no_shuffle(spark, sf_dir, bucketed_warehouse):
     o = spark.table("bucketed_db.orders_b")
     li = spark.table("bucketed_db.lineitem_b")
@@ -51,7 +42,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, bucketed_warehouse):
         joined = li.join(o, li.l_orderkey == o.o_orderkey).groupBy("o_orderstatus").agg(
             F.sum("l_extendedprice").alias("rev")
         )
-        plan = _plan(joined)
+        plan = formatted_plan(joined)
         assert "SortMergeJoin" in plan
         # bucketed layout → the ONLY Exchange is the groupBy shuffle;
         # an unbucketed SMJ would add one per join input (3 total)

@@ -1,7 +1,9 @@
 """End-to-end tests for the changefeed pipeline over the edge-case rows
 mandated by FIXTURES.md §2 (each case is a branch the reference takes in
 sf_pubsub.py:603-789). They run the plan every pipeline runs, filtered
-on ``deliver``: the rows the webhook receives."""
+on ``deliver``: the rows the webhook receives. The change-feed
+analytics over the events table (offset gaps, tombstone audit) and the
+snapshot diff follow, each against a brute-force recount."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ from pyspark.sql import functions as F
 
 from flash_cdc_spark.operators.changefeed import changefeed_with_delivery_flag
 from flash_cdc_spark.schemas import DECODED_CHANGE_EVENT, WEBHOOK_PAYLOAD
+from flash_cdc_spark.tables import load_table
 
 TOPIC = "/data/OpportunityChangeEvent"
 URL = "https://example.my.salesforce.com"
@@ -157,3 +160,103 @@ def test_record_pos_preserved(run):
     rows = run([_event(ids=["a", "b", "c"], flag_arr=["true", "true", "true"])])
     got = {r["record_id"]: r["record_pos"] for r in rows}
     assert got == {"a": 0, "b": 1, "c": 2}
+
+
+def test_offset_gaps_match_bruteforce(spark, sf_dir, query_run):
+    out = {
+        r["event_type"]: r
+        for r in query_run("q_changefeed_offset_gaps").rows
+    }
+    rows = (
+        load_table(spark, sf_dir, "events")
+        .select("event_type", "event_id")
+        .collect()
+    )
+    import collections
+
+    by_type = collections.defaultdict(list)
+    for r in rows:
+        by_type[r["event_type"]].append(r["event_id"])
+    for t, ids in by_type.items():
+        ids.sort()
+        gaps = [b - a - 1 for a, b in zip(ids, ids[1:])]
+        assert out[t]["n_deliveries"] == len(gaps)
+        assert out[t]["n_gaps"] == sum(1 for g in gaps if g > 0)
+        assert out[t]["max_gap"] == max(gaps)
+        assert out[t]["skipped_offsets"] == sum(gaps)
+
+
+def test_tombstone_audit_matches_bruteforce(spark, sf_dir, query_run):
+    row = query_run("q_changefeed_tombstone_audit").rows[0]
+    e = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "event_type"
+    ).collect()
+    from collections import defaultdict
+
+    seqs = defaultdict(list)
+    ref = max(r["ts"] for r in e)
+    for r in e:
+        seqs[r["user_id"]].append(
+            (r["ts"], r["event_id"], 1 if r["event_type"] == "error" else 0)
+        )
+    tomb = first_del = resurr = gc = 0
+    for u, ops in seqs.items():
+        ops.sort()
+        flags = [d for _, _, d in ops]
+        tomb += flags[-1]
+        first_del += flags[0]
+        resurr += sum(
+            1 for p, c in zip(flags, flags[1:]) if p == 1 and c == 0
+        )
+        if flags[-1] and (ref - ops[-1][0]).total_seconds() > 48 * 3600:
+            gc += 1
+    assert row["n_keys"] == len(seqs)
+    assert row["n_tombstoned"] == tomb
+    assert row["n_delete_first"] == first_del
+    assert row["n_resurrections"] == resurr
+    assert row["n_gc_eligible"] == gc
+    assert tomb > 0  # the audit is non-vacuous on the fixture
+
+
+# --- snapshot diff --------------------------------------------------
+
+
+def _diff(spark, old_rows, new_rows):
+    from flash_cdc_spark.operators.snapshot import snapshot_diff
+
+    schema = "k long, status string, price double"
+    old = spark.createDataFrame(old_rows, schema)
+    new = spark.createDataFrame(new_rows, schema)
+    out = snapshot_diff(old, new, key_cols=["k"], compare_cols=["status", "price"])
+    return {r["k"]: r.asDict() for r in out.collect()}
+
+
+def test_snapshot_diff_classification(spark):
+    got = _diff(
+        spark,
+        [(1, "O", 10.0), (2, "O", 20.0), (3, "F", 30.0)],
+        [(1, "O", 10.0), (2, "F", 20.0), (4, "O", 40.0)],
+    )
+    assert got[1]["change_type"] == "unchanged"
+    assert got[2]["change_type"] == "changed"
+    assert (got[2]["chg_status"], got[2]["chg_price"]) == (1, 0)
+    assert got[3]["change_type"] == "deleted"
+    assert got[4]["change_type"] == "added"
+    # added/deleted rows never set column flags
+    assert got[3]["chg_status"] == got[4]["chg_status"] == 0
+
+
+def test_snapshot_diff_null_safe(spark):
+    got = _diff(
+        spark,
+        [(1, None, 1.0), (2, None, 2.0)],
+        [(1, None, 1.0), (2, "X", 2.0)],
+    )
+    assert got[1]["change_type"] == "unchanged"  # null == null
+    assert got[2]["change_type"] == "changed" and got[2]["chg_status"] == 1
+
+
+def test_snapshot_diff_multi_column_change(spark):
+    got = _diff(spark, [(1, "A", 1.0)], [(1, "B", 2.0)])
+    assert got[1]["change_type"] == "changed"
+    assert (got[1]["chg_status"], got[1]["chg_price"]) == (1, 1)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import signal
 import subprocess
 import sys
@@ -27,9 +28,15 @@ def test_cli_list_filters_and_marks_oracle(capsys):
     assert "rows-only" in capsys.readouterr().out
 
 
-def test_cli_query_json_rows(spark, sf_dir, capsys):
+def test_cli_query_json_rows(spark, sf_dir, tmp_path, capsys):
+    # the CLI builds its own DataFrame, so it runs on a copy of the
+    # tables the query reads: the session's one build stays query_run's
+    for table in ("customer", "supplier"):
+        shutil.copyfile(
+            os.path.join(sf_dir, f"{table}.parquet"), tmp_path / f"{table}.parquet"
+        )
     rc = main(
-        ["query", "q_set_ops_nations", "--sf-dir", sf_dir, "--json", "--limit", "3"]
+        ["query", "q_set_ops_nations", "--sf-dir", str(tmp_path), "--json", "--limit", "3"]
     )
     assert rc == 0
     lines = [l for l in capsys.readouterr().out.splitlines() if l.strip()]

@@ -5,20 +5,12 @@ time key lets year-scoped queries skip whole partitions — visible as
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 
 from pyspark.sql import functions as F
 
 from flash_cdc_spark.tables import load_table
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tests.conftest import formatted_plan
 
 
 def test_partitioned_write_and_pruning(spark, sf_dir, tmp_path):
@@ -35,7 +27,7 @@ def test_partitioned_write_and_pruning(spark, sf_dir, tmp_path):
     assert len(years) >= 5
 
     pruned = spark.read.parquet(out).filter(F.col("order_year") == 1997)
-    plan = _plan(pruned)
+    plan = formatted_plan(pruned)
     assert "PartitionFilters" in plan
     assert "order_year" in plan.split("PartitionFilters", 1)[1].splitlines()[0]
 

@@ -241,23 +241,19 @@ def test_connected_components_assume_distinct_matches_generic(spark):
     assert generic == fast
 
 
-def test_multiprobe_recall_beats_single_probe(spark):
+def test_multiprobe_recall_beats_single_probe(spark, sf_dir, query_run):
     """Multi-probe (Hamming-1 buckets) must recover at least as many
     brute-force top-1 neighbors as single-probe LSH."""
-    from flash_cdc_spark.queries.neardup import q_sim_ann_lsh_multiprobe
-    from flash_cdc_spark.queries.neardup import q_sim_ann_lsh_topk
-
-    sf = "/root/testdata/sf0.001"
     from flash_cdc_spark.tables import load_table
 
-    e = load_table(spark, sf, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     brute = SIM.brute_force_topk(e, e.filter(F.col("vec_id") < 10), k=1).collect()
     true_top1 = {(r["query_id"], r["neighbor_id"]) for r in brute}
 
     single = {(r["query_id"], r["neighbor_id"])
-              for r in q_sim_ann_lsh_topk(spark, sf).collect() if r["rk"] == 1}
+              for r in query_run("q_sim_ann_lsh_topk").rows if r["rk"] == 1}
     multi = {(r["query_id"], r["neighbor_id"])
-             for r in q_sim_ann_lsh_multiprobe(spark, sf).collect() if r["rk"] == 1}
+             for r in query_run("q_sim_ann_lsh_multiprobe").rows if r["rk"] == 1}
     assert len(multi & true_top1) >= len(single & true_top1)
 
 
@@ -505,45 +501,35 @@ def test_ivf_cell_partitioned_layout_prunes_probe_scan(spark, sf_dir, tmp_path):
     assert pruned.count() == expected > 0
 
 
-def test_ivf_pruned_topk_query_plan_carries_partition_filter(spark, sf_dir):
+def test_ivf_pruned_topk_query_plan_carries_partition_filter(query_run):
     """The REGISTERED materialized-layout query (q_sim_ann_ivf_pruned_topk)
     must read the cell-partitioned layout with a non-empty
     PartitionFilter on cell — the end-to-end form of what the isolated
     layout test above proves. The returned plan reads ONLY the layout
     (the original embeddings scan happens eagerly during the index
     build, not in the returned lazy plan)."""
-    import contextlib
-    import io
-
-    from flash_cdc_spark.queries.llm_ext import q_sim_ann_ivf_pruned_topk
-
-    df = q_sim_ann_ivf_pruned_topk(spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    run = query_run("q_sim_ann_ivf_pruned_topk")
+    plan = run.formatted_plan
     occurrences = plan.split("PartitionFilters")[1:]
     assert occurrences, plan
     for occ in occurrences:
         head = occ.splitlines()[0]
         assert "cell" in head and "[]" not in head.replace(" ", ""), head
-    rows = df.collect()
+    rows = run.rows
     assert rows and all(1 <= r["rk"] <= 3 for r in rows)
     assert {r["query_id"] for r in rows} <= set(range(10, 20))
 
 
-def test_ivf_multiprobe_top1_at_least_single_probe(spark, sf_dir):
+def test_ivf_multiprobe_top1_at_least_single_probe(query_run):
     """nprobe=2 searches a candidate superset of nprobe=1, so per query
     its best cosine can only match or improve."""
-    from flash_cdc_spark.queries.neardup import q_sim_ann_ivf_topk, q_sim_ann_ivf_multiprobe
-
     single = {
         r["query_id"]: r["cosine"]
-        for r in q_sim_ann_ivf_topk(spark, sf_dir).filter(F.col("rk") == 1).collect()
+        for r in query_run("q_sim_ann_ivf_topk").rows if r["rk"] == 1
     }
     multi = {
         r["query_id"]: r["cosine"]
-        for r in q_sim_ann_ivf_multiprobe(spark, sf_dir).filter(F.col("rk") == 1).collect()
+        for r in query_run("q_sim_ann_ivf_multiprobe").rows if r["rk"] == 1
     }
     assert set(multi) >= set(single)
     for q, c in single.items():
@@ -586,11 +572,8 @@ def test_canonical_docs_keep_longest_tie_smallest(spark, tmp_path):
     assert got == {3: (3, 6), 4: (2, 2)}
 
 
-def test_canonical_docs_nonvacuous_on_fixture(spark, sf_dir):
+def test_canonical_docs_nonvacuous_on_fixture(query_run):
     """The word-set cluster key must produce rows on the shipped
     fixture at every tested scale — the r4 exact-fingerprint key was
     vacuously green (0 rows matched 0 rows)."""
-    from flash_cdc_spark.queries.llm_ext2 import q_dedup_canonical_docs
-
-    out = q_dedup_canonical_docs(spark, sf_dir)
-    assert out.count() > 0
+    assert len(query_run("q_dedup_canonical_docs").rows) > 0

@@ -5,7 +5,8 @@ Fragment the events table into hundreds of tiny files (a CDC ingest
 tail), compact, and check: file count collapses to the sizing plan,
 content is byte-identical, hive partitioning + pruning survive, and
 with ``cluster_by`` the per-file key ranges are pairwise disjoint — the
-property that makes footer min/max stats a file-skipping index."""
+property that makes footer min/max stats a file-skipping index. Also
+the incremental aggregate's merge, exact against a full recompute."""
 
 from __future__ import annotations
 
@@ -125,3 +126,13 @@ def test_compaction_aborts_on_concurrent_append(spark, sf_dir, tmp_path, monkeyp
     # no orphaned temp/old siblings left behind
     leftovers = [p for p in tmp_path.iterdir() if p.name.startswith("events_race.")]
     assert leftovers == [], leftovers
+
+
+def test_incremental_agg_merge_is_exact(spark, sf_dir, query_run):
+    out = query_run("q_maintenance_incremental_agg").rows
+    assert sum(r["mismatch"] for r in out) == 0
+    total = sum(r["n_orders"] for r in out)
+    assert total == load_table(spark, sf_dir, "orders").count()
+    for r in out:
+        whole, frac = r["revenue"].split(".")
+        assert len(frac) == 2  # decimal, not float repr

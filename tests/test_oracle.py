@@ -1,7 +1,9 @@
 """Driver-gate mimic: every registered query must match its DuckDB
 oracle at sf0.001 (row count + column names + canonicalized values).
 The standalone harness (``python -m tests.oracle_harness``) is the
-iteration tool; this keeps the gate inside the pytest suite."""
+iteration tool; this keeps the gate inside the pytest suite. The
+smoke lane's one-per-family representatives (``SMOKE_QUERIES``) carry
+the ``smoke`` mark."""
 
 from __future__ import annotations
 
@@ -9,6 +11,9 @@ import pytest
 
 from flash_cdc_spark.queries import QUERIES
 from tests.oracle_harness import compare, duck_connection
+from tests.test_smoke import SMOKE_QUERIES
+
+_SMOKE = {n for _, n in SMOKE_QUERIES}
 
 
 @pytest.fixture(scope="module")
@@ -18,9 +23,16 @@ def duck(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(spark, sf_dir, duck, name):
-    result = compare(name, spark, sf_dir, duck)
+@pytest.mark.parametrize(
+    "name",
+    [
+        pytest.param(n, marks=pytest.mark.smoke) if n in _SMOKE else n
+        for n in sorted(QUERIES)
+    ],
+)
+def test_query_matches_oracle(query_run, duck, name):
+    run = query_run(name)
+    result = compare(name, run.columns, run.rows, duck)
     assert result["ok"], result
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 import duckdb
 from pyspark.sql import functions as F
 
-from tests.oracle_harness import compare
+from tests.oracle_harness import compare, spark_result
 
 
 def test_tfidf_null_text_doc_matches_oracle(spark, tmp_path):
@@ -29,7 +29,8 @@ def test_tfidf_null_text_doc_matches_oracle(spark, tmp_path):
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{tmp_path}/documents.parquet/*.parquet'"
     )
-    r = compare("q_text_tfidf_top_terms", spark, str(tmp_path), con)
+    name = "q_text_tfidf_top_terms"
+    r = compare(name, *spark_result(name, spark, str(tmp_path)), con)
     assert r["ok"], r
 
 
@@ -44,7 +45,6 @@ def test_simhash_cap_drops_boilerplate_megabucket(spark, tmp_path):
         simhash_candidate_pairs,
         simhash_signatures,
     )
-    from flash_cdc_spark.queries import QUERIES
 
     boiler = [(i, "web", "all rights reserved template page footer text") for i in range(1050)]
     niche = [
@@ -58,7 +58,7 @@ def test_simhash_cap_drops_boilerplate_megabucket(spark, tmp_path):
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{tmp_path}/documents.parquet/*.parquet'"
     )
-    pairs = QUERIES["q_dedup_simhash_pairs"](spark, str(tmp_path)).collect()
+    cols, pairs = spark_result("q_dedup_simhash_pairs", spark, str(tmp_path))
     got = {(r["doc_a"], r["doc_b"]) for r in pairs}
     assert got == {(2001, 2002)}, f"cap not active: {len(got)} pairs"
     # uncapped, the mega-bucket joins quadratically — prove the cap is
@@ -67,21 +67,20 @@ def test_simhash_cap_drops_boilerplate_megabucket(spark, tmp_path):
     uncapped = simhash_candidate_pairs(sigs, max_hamming=3, max_bucket_width=None)
     assert uncapped.count() > 500_000
     # and the oracle agrees bit-for-bit on the capped output
-    r = compare("q_dedup_simhash_pairs", spark, str(tmp_path), con)
+    r = compare("q_dedup_simhash_pairs", cols, pairs, con)
     assert r["ok"], r
 
 
-def test_simhash_cap_inert_on_normal_corpus(spark, sf_dir):
+def test_simhash_cap_inert_on_normal_corpus(spark, sf_dir, query_run):
     """On the standard corpus no bucket reaches the cap — the wired cap
     must not change q_dedup_simhash_pairs output at correctness SFs."""
     from flash_cdc_spark.operators.dedup import (
         simhash_candidate_pairs,
         simhash_signatures,
     )
-    from flash_cdc_spark.queries import QUERIES
     from flash_cdc_spark.tables import load_table
 
-    capped = QUERIES["q_dedup_simhash_pairs"](spark, sf_dir).collect()
+    capped = query_run("q_dedup_simhash_pairs").rows
     sigs = simhash_signatures(load_table(spark, sf_dir, "documents"))
     uncapped = simhash_candidate_pairs(sigs, max_hamming=3, max_bucket_width=None).collect()
     key = lambda r: (r["doc_a"], r["doc_b"], r["hamming"])  # noqa: E731
@@ -99,7 +98,6 @@ def test_simhash64_boilerplate_and_near_dup(spark, tmp_path):
         simhash64_candidate_pairs,
         simhash64_signatures,
     )
-    from flash_cdc_spark.queries import QUERIES
 
     boiler = [(i, "web", "all rights reserved template page footer text") for i in range(1050)]
     niche = [
@@ -114,7 +112,7 @@ def test_simhash64_boilerplate_and_near_dup(spark, tmp_path):
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{tmp_path}/documents.parquet/*.parquet'"
     )
-    pairs = QUERIES["q_dedup_simhash64_pairs"](spark, str(tmp_path)).collect()
+    cols, pairs = spark_result("q_dedup_simhash64_pairs", spark, str(tmp_path))
     got = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in pairs}
     assert set(got) == {(2001, 2002)}, f"cap not active: {len(got)} pairs"
     assert got[(2001, 2002)] == 0  # identical text → identical 64-bit sig
@@ -126,7 +124,7 @@ def test_simhash64_boilerplate_and_near_dup(spark, tmp_path):
     # two-half signatures stay below 2^32 (no overflow on either engine)
     mx = sigs.selectExpr("max(sim_hi) h", "max(sim_lo) l").first()
     assert 0 <= mx["h"] < 2**32 and 0 <= mx["l"] < 2**32
-    r = compare("q_dedup_simhash64_pairs", spark, str(tmp_path), con)
+    r = compare("q_dedup_simhash64_pairs", cols, pairs, con)
     assert r["ok"], r
 
 
@@ -169,14 +167,13 @@ def test_unigram_surprisal_null_and_empty_text(spark, tmp_path):
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{tmp_path}/documents.parquet/*.parquet'"
     )
-    r = compare("q_text_unigram_surprisal", spark, str(tmp_path), con)
+    cols, rows = spark_result("q_text_unigram_surprisal", spark, str(tmp_path))
+    r = compare("q_text_unigram_surprisal", cols, rows, con)
     assert r["ok"], r
-
-    from flash_cdc_spark.queries import QUERIES
 
     got = {
         row["doc_id"]: (row["n_tokens"], row["mean_surprisal_bits"])
-        for row in QUERIES["q_text_unigram_surprisal"](spark, str(tmp_path)).collect()
+        for row in rows
     }
     # vocab: a×3, b×1, c×1, N=5
     s_a, s_b = -math.log2(3 / 5), -math.log2(1 / 5)
@@ -203,15 +200,11 @@ def test_global_ids_null_source_matches_oracle(spark, tmp_path):
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{tmp_path}/documents.parquet/*.parquet'"
     )
-    r = compare("q_train_global_ids", spark, str(tmp_path), con)
+    cols, rows = spark_result("q_train_global_ids", spark, str(tmp_path))
+    r = compare("q_train_global_ids", cols, rows, con)
     assert r["ok"], r
 
-    from flash_cdc_spark.queries import QUERIES
-
-    got = {
-        row["doc_id"]: row["global_id"]
-        for row in QUERIES["q_train_global_ids"](spark, str(tmp_path)).collect()
-    }
+    got = {row["doc_id"]: row["global_id"] for row in rows}
     # books(2)=0, web(3)=1, nulls last by doc_id: 1->2, 4->3
     assert got == {2: 0, 3: 1, 1: 2, 4: 3}, got
 
@@ -241,11 +234,9 @@ def test_zscore_constant_valued_type_matches_oracle(spark, tmp_path):
         "CREATE VIEW events AS SELECT * FROM "
         f"'{tmp_path}/events.parquet/*.parquet'"
     )
-    r = compare("q_events_anomaly_zscore", spark, str(tmp_path), con)
+    cols, got = spark_result("q_events_anomaly_zscore", spark, str(tmp_path))
+    r = compare("q_events_anomaly_zscore", cols, got, con)
     assert r["ok"], r
 
-    from flash_cdc_spark.queries import QUERIES
-
-    got = QUERIES["q_events_anomaly_zscore"](spark, str(tmp_path)).collect()
     # the 'flat' type contributes nothing; the 500 outlier is flagged
     assert {r["event_type"] for r in got} == {"vary"}, got

@@ -42,20 +42,11 @@ on a ``Coalesce 1`` reached before any Exchange/limit node.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 import pytest
 
 from flash_cdc_spark.queries import QUERIES
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 _AUDITED = sorted(
@@ -64,8 +55,8 @@ _AUDITED = sorted(
 
 
 @pytest.mark.parametrize("name", _AUDITED)
-def test_no_cartesian_and_no_row_python(spark, sf_dir, name):
-    plan = _plan(QUERIES[name](spark, sf_dir))
+def test_no_cartesian_and_no_row_python(query_run, name):
+    plan = query_run(name).formatted_plan
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     # exact node "BatchEvalPython (n)" is the row-wise scalar Python
     # UDF — banned everywhere. "BatchEvalPythonUDTF" is distinct: the
@@ -160,9 +151,8 @@ def _exchange_less_windows_coalesce_fed(plan: str) -> list[str]:
 
 
 @pytest.mark.parametrize("name", _AUDITED)
-def test_no_unbounded_single_partition_window(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def test_no_unbounded_single_partition_window(query_run, name):
+    plan = query_run(name).executed_plan
     hits = _single_partition_windows(plan)
     if hits:
         assert name in _BOUNDED_WINDOW_OK, (

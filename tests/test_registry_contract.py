@@ -122,7 +122,7 @@ _TYPE_AUDITED = sorted(
 
 
 @pytest.mark.parametrize("name", _TYPE_AUDITED)
-def test_oracle_numeric_classes_match_spark(name, spark, sf_dir, duck_result_types):
+def test_oracle_numeric_classes_match_spark(name, query_run, duck_result_types):
     """Strict numeric-class agreement between each Spark result schema
     (analyzed, not executed) and its oracle's DuckDB binder types:
     int↔int, float↔float, decimal↔decimal, bool↔bool. The driver's
@@ -132,7 +132,7 @@ def test_oracle_numeric_classes_match_spark(name, spark, sf_dir, duck_result_typ
     so no tolerance is needed. Streaming-executed queries are covered
     by the HUGEINT ban above (building their DataFrame runs a real
     streaming job; their Spark-side typing is pinned by snapshots)."""
-    schema = QUERIES[name](spark, sf_dir).schema
+    schema = query_run(name).schema
     duck_cols = duck_result_types[name]
     for f in schema.fields:
         col = f.name.lower()
@@ -196,3 +196,28 @@ def test_source_has_no_shadowed_registrations():
             names[m.group(1)] += 1
     dups = {n: c for n, c in names.items() if c > 1}
     assert not dups, f"shadowed @query registrations in source: {dups}"
+
+
+def test_tests_build_registered_queries_only_through_query_run():
+    """Each registered query is built once per test session, by the
+    ``query_run`` fixture of ``tests/conftest.py``; every per-query
+    check reads that one record. A test that calls a registered query
+    itself on the ``sf_dir`` fixture, through ``QUERIES`` or the
+    imported function, builds it again. Builds over a ``tmp_path``
+    corpus, and ``__spark_entry__.entry(spark)``, are other
+    corpora or other entry points and stay allowed."""
+    import os
+    import re
+
+    tests_dir = os.path.dirname(__file__)
+    call = re.compile(r"\b(QUERIES\[[^\]]+\]|q\w+)\(\s*spark\s*,\s*sf_dir\s*\)")
+    offenders = []
+    for fname in sorted(os.listdir(tests_dir)):
+        if not (fname.startswith("test_") and fname.endswith(".py")):
+            continue
+        with open(os.path.join(tests_dir, fname)) as fh:
+            src = fh.read()
+        for m in call.finditer(src):
+            line = src.count("\n", 0, m.start()) + 1
+            offenders.append(f"{fname}:{line}: {m.group(0)}")
+    assert not offenders, offenders

@@ -5,12 +5,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flash_cdc_spark.queries.events import q_events_sketches
 from flash_cdc_spark.tables import load_table
 
 
-def test_sketch_accuracy(spark, sf_dir):
-    approx = {r["event_type"]: r for r in q_events_sketches(spark, sf_dir).collect()}
+def test_sketch_accuracy(spark, sf_dir, query_run):
+    approx = {r["event_type"]: r for r in query_run("q_events_sketches").rows}
     e = load_table(spark, sf_dir, "events")
     exact = {
         r["event_type"]: r

@@ -616,6 +616,35 @@ def test_watchdog_idle_detection():
     assert PM.is_idle(stale, now_ms, idle_reset_s=300)
 
 
+def test_watchdog_tick_restarts_only_the_active_stale_pipeline(monkeypatch):
+    """S4 through ``watchdog_tick``: of an active fresh, an active stale,
+    a stopped stale and a never-started pipeline, only the active stale
+    one is restarted, and its id is the one returned."""
+    from datetime import datetime, timedelta, timezone
+    from types import SimpleNamespace
+
+    from flash_cdc_spark.streaming.pipelines import PipelineManager
+
+    now = datetime.now(timezone.utc)
+
+    def entry(active: bool, age_s: float) -> SimpleNamespace:
+        ts = (now - timedelta(seconds=age_s)).strftime("%Y-%m-%dT%H:%M:%S.000Z")
+        query = SimpleNamespace(isActive=active, lastProgress={"timestamp": ts})
+        return SimpleNamespace(query=query)
+
+    mgr = PipelineManager(None)
+    mgr._pipelines = {
+        1: entry(True, 10),
+        2: entry(True, 3600),
+        3: entry(False, 3600),
+        4: SimpleNamespace(query=None),
+    }
+    restarted = []
+    monkeypatch.setattr(mgr, "restart", restarted.append)
+    assert mgr.watchdog_tick(idle_reset_s=300) == [2]
+    assert restarted == [2]
+
+
 def test_email_alerter_with_fake_transport(spark, tmp_path, webhook_server):
     """K4: fatal pipeline error fires the mail hook (transport faked)."""
     from flash_cdc_spark.streaming.alerts import EmailAlerter, SmtpSettings

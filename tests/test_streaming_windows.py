@@ -49,13 +49,11 @@ def test_tumbling_counts_matches_batch(spark, events_stream):
     assert got_map == exp_map
 
 
-def test_session_windows_matches_batch_sessionize(spark, events_stream, sf_dir):
-    from flash_cdc_spark.queries.events import q_events_sessionize
-
+def test_session_windows_matches_batch_sessionize(spark, events_stream, query_run):
     stream, _ = events_stream
     got = _run_to_memory(spark, W.session_windows(stream), "t_sessions",
                          output_mode="complete").collect()
-    batch_sessions = q_events_sessionize(spark, sf_dir).collect()
+    batch_sessions = query_run("q_events_sessionize").rows
     # session_window(gap=30m) must produce the same (user, start, n) sets
     got_set = {(r["user_id"], r["session_start"], r["n_events"]) for r in got}
     exp_set = {(r["user_id"], r["session_start"], r["n_events"]) for r in batch_sessions}
