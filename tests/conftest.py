@@ -10,6 +10,7 @@ from pyspark.sql.types import StructType
 
 from flash_cdc_spark.queries import QUERIES
 from flash_cdc_spark.session import get_spark
+from tests.oracle_harness import duck_connection
 
 
 @pytest.fixture(scope="session")
@@ -22,6 +23,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    """A DuckDB connection with the ``sf_dir`` tables, one per module."""
+    con = duck_connection(sf_dir)
+    yield con
+    con.close()
 
 
 def formatted_plan(df: DataFrame) -> str:

@@ -1,35 +1,17 @@
 """Driver-gate mimic: every registered query must match its DuckDB
 oracle at sf0.001 (row count + column names + canonicalized values).
 The standalone harness (``python -m tests.oracle_harness``) is the
-iteration tool; this keeps the gate inside the pytest suite. The
-smoke lane's one-per-family representatives (``SMOKE_QUERIES``) carry
-the ``smoke`` mark."""
+iteration tool; this keeps the gate inside the pytest suite."""
 
 from __future__ import annotations
 
 import pytest
 
 from flash_cdc_spark.queries import QUERIES
-from tests.oracle_harness import compare, duck_connection
-from tests.test_smoke import SMOKE_QUERIES
-
-_SMOKE = {n for _, n in SMOKE_QUERIES}
+from tests.oracle_harness import compare
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duck_connection(sf_dir)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        pytest.param(n, marks=pytest.mark.smoke) if n in _SMOKE else n
-        for n in sorted(QUERIES)
-    ],
-)
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(query_run, duck, name):
     run = query_run(name)
     result = compare(name, run.columns, run.rows, duck)

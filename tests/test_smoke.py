@@ -7,11 +7,10 @@ with zero failures in r10. This module is a <5-minute subset a driver
 without the full sweep:
 
 - registry + entry-module contract (no Spark),
-- one ORACLE-COMPARED query per operator family at sf0.001: the
-  ``SMOKE_QUERIES`` below, marked ``smoke`` inside
-  ``tests/test_oracle.py``'s parametrization, so the lane runs the same
-  comparison as the full gate, including a streaming-executed entry
-  (a real micro-batch job end-to-end).
+- one ORACLE-COMPARED query per operator family at sf0.001 through the
+  same `compare()` the driver-gate mimic uses (real SparkSession, real
+  DuckDB), read from the session's one build of each query, including
+  a streaming-executed entry (a real micro-batch job end-to-end).
 
 Selection rule: one query per family, preferring the family member
 with the most distinctive physical shape (trained-state memo, HOF
@@ -22,6 +21,8 @@ fails here, not only in the full suite.
 from __future__ import annotations
 
 import pytest
+
+from tests.oracle_harness import compare
 
 pytestmark = pytest.mark.smoke
 
@@ -58,3 +59,11 @@ def test_registry_and_entry_contract():
     smoke_names = {n for _, n in SMOKE_QUERIES}
     assert smoke_names <= set(QUERIES), smoke_names - set(QUERIES)
 
+
+@pytest.mark.parametrize(
+    "name", [n for _, n in SMOKE_QUERIES], ids=[f for f, _ in SMOKE_QUERIES]
+)
+def test_family_representative_matches_oracle(query_run, duck, name):
+    run = query_run(name)
+    result = compare(name, run.columns, run.rows, duck)
+    assert result["ok"], result
